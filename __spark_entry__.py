@@ -6658,8 +6658,9 @@ FROM v LEFT JOIN dropped d ON v.vec_id = d.vec_id
 
 def _semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous-ingestion SemDeDup: the new batch (vec_id % 5 == 0)
-    is assigned to the at-rest cluster model
-    (similarity.centroid_table / nearest_centroid_assign) and pruned
+    is assigned to the at-rest cluster model (per-cluster mean
+    centroids aggregated inline from the pinned corpus⨝assignment
+    relation, then similarity.nearest_centroid_assign) and pruned
     against the at-rest kept representatives AND lower-id batch
     members (operators/dedup.py semantic_dedup_incremental) — the
     embedding-space complement of minhash_incremental. The corpus is

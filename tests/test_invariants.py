@@ -942,6 +942,27 @@ def test_scd2_apply_batch_equals_full_recompute(spark):
     assert {tuple(r) for r in folded_c.collect()} == {tuple(r) for r in full_c.collect()}
 
 
+def test_scd2_apply_batch_history_with_internal_flag_name(spark):
+    """scd2_apply_batch tags touched keys with an internal flag column;
+    a caller history that already carries a column of that name
+    (``__t``) must fold exactly like one without it, not fail on an
+    ambiguous column."""
+    from datetime import datetime as DT
+
+    from z316_sales_data_pipeline_spark.operators import windows as W
+
+    schema = "uid long, status string, ts timestamp, eid long"
+    args = dict(key="uid", attr="status", ts="ts", tiebreak="eid")
+    base = spark.createDataFrame(
+        [(1, "new", DT(2024, 1, 1), 10), (2, "new", DT(2024, 1, 2), 11)], schema
+    )
+    batch = spark.createDataFrame([(1, "paid", DT(2024, 1, 5), 20)], schema)
+    hist = W.scd2_history(base, carry_last=True, **args).withColumn("__t", F.lit(7))
+    folded = W.scd2_apply_batch(hist, batch, **args)
+    full = W.scd2_history(base.unionByName(batch), carry_last=True, **args)
+    assert {tuple(r) for r in folded.collect()} == {tuple(r) for r in full.collect()}
+
+
 def test_scd2_fold_same_timestamp_epoch_straddle(spark):
     """r7 ADVICE regression pin: a batch event at the SAME timestamp
     as the open row but a SMALLER tiebreak must fold in full-recompute
@@ -967,7 +988,8 @@ def test_scd2_fold_same_timestamp_epoch_straddle(spark):
         }, f"diverged for base_eid={base_eid}, batch_eid={batch_eid}"
 
 
-def test_scd2_fold_or_repair_late_events(spark):
+@pytest.mark.parametrize("derive_watermarks", [False, True])
+def test_scd2_fold_or_repair_late_events(spark, derive_watermarks):
     """Late-event matrix (VERDICT r7 item 4): keys whose batch events
     sort BELOW their folded watermark — including behind a COMPRESSED
     repeat, where the O(batch) fold is provably insufficient — are
@@ -1003,7 +1025,7 @@ def test_scd2_fold_or_repair_late_events(spark):
     prior = spark.createDataFrame(prior_rows, schema)
     batch = spark.createDataFrame(batch_rows, schema)
     hist = W.scd2_history(prior, carry_last=True, **args)
-    merged = W.scd2_fold_or_repair(hist, batch, prior, **args)
+    merged = W.scd2_fold_or_repair(hist, batch, prior, derive_watermarks=derive_watermarks, **args)
     full = W.scd2_history(prior.unionByName(batch), carry_last=True, **args)
     assert {tuple(r) for r in merged.collect()} == {tuple(r) for r in full.collect()}
     # sanity: the hard key really has the A,B,A shape the fold can't produce

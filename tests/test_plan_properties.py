@@ -653,3 +653,49 @@ def test_fact_grain_frames_never_localcheckpoint(spark, monkeypatch):
     assert len(lc_calls) == 1, "only the set-grain reduction may localCheckpoint"
     assert len(pf_calls) == 1, "the doc-grain members must persist_fact"
     assert any(r["jaccard"] == 1.0 for r in rows)  # the identical pair 1-4
+
+
+def test_versioned_table_format_lives_only_in_sinks():
+    """Source guard: the versioned-table protocol (the ``_LATEST``
+    pointer, ``v=N`` version dirs, atomic ``os.replace``) is read and
+    written only by ``sinks.py``; every other package module goes
+    through its helpers, so the on-disk format cannot be re-implemented
+    elsewhere. Scans code, not docstrings or comments: any string
+    literal naming ``_LATEST`` or a ``v=``/``v=N`` path piece
+    (including f-string pieces such as ``/v=``), and any ``os.replace``
+    call."""
+    import ast
+    import pathlib
+    import re
+
+    import z316_sales_data_pipeline_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        if path.name == "sinks.py" and path.parent == root:
+            continue
+        tree = ast.parse(path.read_text())
+        docstrings = {
+            id(node.value)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Expr) and isinstance(node.value, ast.Constant)
+        }
+        for node in ast.walk(tree):
+            where = f"{path.relative_to(root)}:{getattr(node, 'lineno', '?')}"
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and id(node) not in docstrings
+                and ("_LATEST" in node.value or re.search(r"(?:^|/)v=\d*$", node.value))
+            ):
+                offenders.append(f"{where} literal {node.value!r}")
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "replace"
+                and isinstance(node.func.value, ast.Name)
+                and node.func.value.id == "os"
+            ):
+                offenders.append(f"{where} os.replace call")
+    assert not offenders, "versioned-table format outside sinks.py:\n" + "\n".join(offenders)

@@ -187,6 +187,7 @@ def test_prefix_jaccard_join_lossless_property(spark, token_lists, threshold):
     assert got == want
 
 
+@pytest.mark.parametrize("derive_watermarks", [False, True])
 @given(
     st.lists(
         st.tuples(
@@ -200,7 +201,7 @@ def test_prefix_jaccard_join_lossless_property(spark, token_lists, threshold):
     st.integers(min_value=0, max_value=6),             # late-window split
 )
 @settings(**_HEAVY_SETTINGS)
-def test_scd2_fold_or_repair_equals_recompute_property(spark, events, split):
+def test_scd2_fold_or_repair_equals_recompute_property(spark, derive_watermarks, events, split):
     """SCD2 maintenance LAW over random event streams: for ANY
     partition of the stream into (prior, batch) — including batches
     that are entirely late, interleaved, or tie folded timestamps —
@@ -224,7 +225,9 @@ def test_scd2_fold_or_repair_equals_recompute_property(spark, events, split):
     if prior.isEmpty() or batch.isEmpty():
         return  # degenerate partitions: nothing to fold
     hist = W.scd2_history(prior, carry_last=True, **args)
-    merged = W.scd2_fold_or_repair(hist, batch, prior, **args)
+    merged = W.scd2_fold_or_repair(
+        hist, batch, prior, derive_watermarks=derive_watermarks, **args
+    )
     full = W.scd2_history(df, carry_last=True, **args)
     assert {tuple(r) for r in merged.collect()} == {tuple(r) for r in full.collect()}
 

@@ -573,11 +573,16 @@ def test_cluster_labels_torn_build_self_repairs(spark, sf_dir, tmp_path, monkeyp
 
 
 def test_materialized_repairs_torn_cache_dir(spark, sf_dir, tmp_path, monkeypatch):
-    """ADVICE r4 (low): a stale cache dir WITHOUT _SUCCESS (left by a
-    crashed pre-rename-era writer) used to make the post-build rename
+    """A stale cache dir that is not complete (left by a crashed
+    pre-rename-era writer) used to make the post-build rename
     fail and be misread as a lost race — the torn dir was then read
-    as-is. The fix verifies _SUCCESS after a failed rename and repairs
-    by replacing the torn dir with the fresh complete build."""
+    as-is. The install now re-checks completeness after a failed rename
+    and repairs by replacing the torn dir with the fresh complete
+    build; a genuinely lost race keeps the rival's complete dir and
+    discards ours. Both paths are exercised for a ``_materialized``
+    cache (complete = ``_SUCCESS``) and a maintained two-segment cache
+    (complete = ``_LATEST >= 2``)."""
+    import glob
     import os
     import shutil
 
@@ -588,16 +593,57 @@ def test_materialized_repairs_torn_cache_dir(spark, sf_dir, tmp_path, monkeypatc
     sf2.mkdir()
     shutil.copy(f"{sf_dir}/documents.parquet", sf2 / "documents.parquet")
 
-    want = pair_graph.full_shingle_table(spark, str(sf2), shingle_k=1, portable=True).count()
-    (d,) = [x for x in os.listdir(tmp_path / "wh") if x.startswith("mh_ex_full")]
-    out = str(tmp_path / "wh" / d)
+    def latest(out):
+        with open(os.path.join(out, "_LATEST")) as f:
+            return int(f.read().strip())
 
-    # forge the torn state: parquet files present but no _SUCCESS
-    os.remove(os.path.join(out, "_SUCCESS"))
+    def tear_segments(out):  # crashed between the v=1 and v=2 commits
+        shutil.rmtree(os.path.join(out, "v=2"))
+        with open(os.path.join(out, "_LATEST"), "w") as f:
+            f.write("1")
 
-    got = pair_graph.full_shingle_table(spark, str(sf2), shingle_k=1, portable=True)
-    assert got.count() == want
-    assert os.path.exists(os.path.join(out, "_SUCCESS"))  # repaired in place
+    cases = [  # (cache name, load, forge torn state, is complete)
+        (
+            "mh_ex_full",
+            lambda: pair_graph.full_shingle_table(spark, str(sf2), shingle_k=1, portable=True),
+            lambda out: os.remove(os.path.join(out, "_SUCCESS")),
+            lambda out: os.path.exists(os.path.join(out, "_SUCCESS")),
+        ),
+        (
+            "sh_sigs",
+            lambda: pair_graph.simhash_corpus_sigs(spark, str(sf2)),
+            tear_segments,
+            lambda out: latest(out) >= 2,
+        ),
+    ]
+    real_fresh_tmp = pair_graph._fresh_tmp
+    for name, load, tear, complete in cases:
+        want = load().count()
+        (d,) = [x for x in os.listdir(tmp_path / "wh") if x.startswith(name)]
+        out = str(tmp_path / "wh" / d)
+
+        tear(out)
+        assert load().count() == want
+        assert complete(out), name  # repaired in place
+
+        # lost race: a rival installs its complete build while ours is
+        # still being written — the rename fails, theirs is kept
+        rival = str(tmp_path / f"rival_{name}")
+        shutil.copytree(out, rival)
+        open(os.path.join(rival, "_RIVAL"), "w").close()
+        tear(out)
+
+        def rival_wins(o, rival=rival):
+            tmp = real_fresh_tmp(o)
+            shutil.rmtree(o)
+            shutil.copytree(rival, o)
+            return tmp
+
+        monkeypatch.setattr(pair_graph, "_fresh_tmp", rival_wins)
+        assert load().count() == want
+        monkeypatch.setattr(pair_graph, "_fresh_tmp", real_fresh_tmp)
+        assert complete(out) and os.path.exists(os.path.join(out, "_RIVAL")), name
+        assert not glob.glob(f"{out}.tmp-*"), name  # our build discarded
 
 
 def test_two_phase_global_ordering_equals_global_window(spark):

@@ -504,12 +504,16 @@ def scd2_apply_batch(
     out_cols = [key, attr, "valid_from", "valid_to", "is_current"]
     if carry:
         out_cols += ["last_ts", "last_tb"]
-    touched = batch.select(key).distinct().withColumn("__t", F.lit(1))
+    # internal flag column, named clear of every caller history column
+    flag = "__t"
+    while flag in history.columns:
+        flag += "_"
+    touched = batch.select(key).distinct().withColumn(flag, F.lit(1))
     flagged = history.join(F.broadcast(touched), key, "left")
     passthrough = flagged.filter(
-        F.col("__t").isNull() | F.col("valid_to").isNotNull()
+        F.col(flag).isNull() | F.col("valid_to").isNotNull()
     ).select(*out_cols)
-    open_rows = flagged.filter(F.col("__t").isNotNull() & F.col("valid_to").isNull())
+    open_rows = flagged.filter(F.col(flag).isNotNull() & F.col("valid_to").isNull())
     if carry:
         seed = open_rows.select(
             F.col(key),

@@ -19,12 +19,14 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 from pathlib import Path
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import sinks
 from ..operators import dedup
 from ..sources.tables import load_table
 
@@ -40,8 +42,6 @@ def _fresh_tmp(out_dir: str) -> str:
     reused dir would stack the new base ON TOP of the stale v=1 —
     installing a table with duplicated base rows (r5 ADVICE). The
     rmtree closes that; single-writer-per-pid, like the sinks."""
-    import shutil
-
     tmp = f"{out_dir}.tmp-{os.getpid()}"
     shutil.rmtree(tmp, ignore_errors=True)
     return tmp
@@ -63,7 +63,6 @@ def _sweep_stale_tmp(out_dir: str, min_age_sec: float = 3600.0) -> None:
     top-level mtime stale — any file the live writer touched inside
     the tree resets the clock."""
     import glob
-    import shutil
     import time
 
     now = time.time()
@@ -80,6 +79,49 @@ def _sweep_stale_tmp(out_dir: str, min_age_sec: float = 3600.0) -> None:
         shutil.rmtree(d, ignore_errors=True)
 
 
+def _cache_dir(sf_dir: str, src_table: str, name: str, params_sig: str) -> str:
+    """``_CACHE_ROOT/<name>_<digest>``: the cache dir of one derived
+    relation, keyed by the ``src_table`` file identity (path, mtime,
+    size) and ``params_sig``. Raises OSError if the source is missing."""
+    src = os.path.join(os.path.realpath(sf_dir), f"{src_table}.parquet")
+    st = os.stat(src)
+    sig = f"{src}|{st.st_mtime_ns}|{st.st_size}|{params_sig}"
+    return str(_CACHE_ROOT / f"{name}_{hashlib.md5(sig.encode()).hexdigest()[:16]}")
+
+
+def _install(
+    out_dir: str, complete: Callable[[str], bool], build: Callable[[str], None]
+) -> None:
+    """Build-once install of a cache dir: unless ``complete(out_dir)``
+    already holds, ``build(tmp)`` fills a private tmp dir that one
+    atomic rename then installs — a concurrent reader can never
+    observe a half-written cache (the same discipline as the snapshot
+    sink's ``_LATEST`` pointer flip). A failed rename is either a lost
+    race (another builder's complete dir is in place: keep theirs,
+    discard ours) or a torn dir left by a crashed pre-rename-era
+    writer (not complete: remove it and install ours)."""
+    if complete(out_dir):
+        return
+    tmp = _fresh_tmp(out_dir)
+    build(tmp)
+    try:
+        os.rename(tmp, out_dir)
+    except OSError:
+        if complete(out_dir):
+            shutil.rmtree(tmp, ignore_errors=True)  # lost a healthy race
+        else:
+            shutil.rmtree(out_dir, ignore_errors=True)  # torn dir: repair
+            os.rename(tmp, out_dir)
+    _sweep_stale_tmp(out_dir)
+
+
+def _two_versions(table_dir: str) -> bool:
+    """A maintained table is complete only once its v=2 is committed:
+    ``_LATEST`` alone is not a completion marker, because it is
+    flipped right after v=1 too."""
+    return sinks._committed_version(table_dir) >= 2
+
+
 def _materialized(
     spark: SparkSession,
     sf_dir: str,
@@ -94,40 +136,16 @@ def _materialized(
     in-memory frame if the warehouse is unwritable. ``partition_by``
     writes a partitioned layout so consumers' filters on that column
     become partition pruning."""
-    src = os.path.join(os.path.realpath(sf_dir), f"{src_table}.parquet")
-    try:
-        st = os.stat(src)
-        sig = f"{src}|{st.st_mtime_ns}|{st.st_size}|{params_sig}"
-        digest = hashlib.md5(sig.encode()).hexdigest()[:16]
-        out = str(_CACHE_ROOT / f"{name}_{digest}")
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            # build into a private tmp dir, then one atomic rename —
-            # a concurrent reader can never observe a half-written
-            # cache (same discipline as the snapshot sink's _LATEST
-            # pointer flip); if another builder won the race, keep
-            # theirs and discard ours
-            tmp = _fresh_tmp(out)
-            w = build().write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(partition_by)
-            w.parquet(tmp)
-            try:
-                os.rename(tmp, out)
-            except OSError:
-                import shutil
 
-                if os.path.exists(os.path.join(out, "_SUCCESS")):
-                    # lost a healthy race: another builder's complete
-                    # cache is in place — keep theirs, discard ours
-                    shutil.rmtree(tmp, ignore_errors=True)
-                else:
-                    # the rename failed for another reason (a stale
-                    # torn `out` left by a pre-rename-era writer, or a
-                    # non-empty target): repair by removing the torn
-                    # dir and installing our complete build
-                    shutil.rmtree(out, ignore_errors=True)
-                    os.rename(tmp, out)
-            _sweep_stale_tmp(out)
+    def write(tmp: str) -> None:
+        w = build().write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(partition_by)
+        w.parquet(tmp)
+
+    try:
+        out = _cache_dir(sf_dir, src_table, name, params_sig)
+        _install(out, lambda d: os.path.exists(os.path.join(d, "_SUCCESS")), write)
         return spark.read.parquet(out)
     except OSError:
         return build()
@@ -155,65 +173,31 @@ def jaccard_pair_graph(
     in the pair-graph → labels → consumers chain now advances by
     O(batch) per ingest. Columns stay (source, id_a, id_b, jaccard),
     identical to the batch builder."""
-    from .. import sinks
 
-    src = os.path.join(os.path.realpath(sf_dir), "documents.parquet")
+    batch = F.col("doc_id") % batch_mod == 0
+    args = dict(threshold=threshold, shingle_k=shingle_k)
 
-    def direct() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
-        return dedup.ngram_jaccard_pairs(
-            docs, "text", "doc_id", "source", threshold=threshold, shingle_k=shingle_k
+    def docs() -> DataFrame:
+        return load_table(spark, sf_dir, "documents")
+
+    def touching(d: DataFrame) -> DataFrame:
+        return dedup.ngram_jaccard_pairs_incremental(
+            d.filter(batch), d.filter(~batch), "text", "doc_id", "source", **args
         )
 
-    def _latest(d: str) -> int:
-        try:
-            with open(os.path.join(d, "_LATEST")) as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            return 0
-
     try:
-        st = os.stat(src)
-        sig = f"{src}|{st.st_mtime_ns}|{st.st_size}|{threshold}|{shingle_k}|{batch_mod}|v2-seg"
-        digest = hashlib.md5(sig.encode()).hexdigest()[:16]
-        table_dir = str(_CACHE_ROOT / f"pairs_{digest}")
-        if _latest(table_dir) < 2:
-            import shutil
-
-            docs = load_table(spark, sf_dir, "documents")
-            batch = F.col("doc_id") % batch_mod == 0
-            tmp_dir = _fresh_tmp(table_dir)
-            corpus_pairs = dedup.ngram_jaccard_pairs(
-                docs.filter(~batch),
-                "text",
-                "doc_id",
-                "source",
-                threshold=threshold,
-                shingle_k=shingle_k,
-            )
-            sinks.append_snapshot(corpus_pairs, tmp_dir)
-            touching = dedup.ngram_jaccard_pairs_incremental(
-                docs.filter(batch),
-                docs.filter(~batch),
-                "text",
-                "doc_id",
-                "source",
-                threshold=threshold,
-                shingle_k=shingle_k,
-            )
-            sinks.append_snapshot(touching, tmp_dir)
-            try:
-                os.rename(tmp_dir, table_dir)
-            except OSError:
-                if _latest(table_dir) >= 2:
-                    shutil.rmtree(tmp_dir, ignore_errors=True)  # lost a healthy race
-                else:
-                    shutil.rmtree(table_dir, ignore_errors=True)  # torn table: repair
-                    os.rename(tmp_dir, table_dir)
-            _sweep_stale_tmp(table_dir)
-        return sinks.read_appended(spark, table_dir)
+        return _maintained_two_segments(
+            spark,
+            sf_dir,
+            "pairs",
+            f"{threshold}|{shingle_k}|{batch_mod}|v2-seg",
+            lambda: dedup.ngram_jaccard_pairs(
+                docs().filter(~batch), "text", "doc_id", "source", **args
+            ),
+            lambda v1: touching(docs()),
+        )
     except OSError:
-        return direct()
+        return dedup.ngram_jaccard_pairs(docs(), "text", "doc_id", "source", **args)
 
 
 def cluster_labels(
@@ -240,74 +224,43 @@ def cluster_labels(
 
     Falls back to direct CC if the warehouse is unwritable.
     """
-    from .. import sinks
 
-    src = os.path.join(os.path.realpath(sf_dir), "documents.parquet")
+    def docs() -> DataFrame:
+        return load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def direct() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id")
-        pairs = jaccard_pair_graph(spark, sf_dir, threshold=threshold, shingle_k=shingle_k)
-        return dedup.connected_components(docs, pairs, id_col="doc_id")
+    def pairs() -> DataFrame:
+        return jaccard_pair_graph(spark, sf_dir, threshold=threshold, shingle_k=shingle_k)
+
+    def build(tmp_dir: str) -> None:
+        # both versions land in the private tmp dir and install with
+        # ONE atomic rename: a crash between the v=1 and v=2 writes
+        # must not be mistaken for a finished build (it would silently
+        # serve pre-batch labels to every consumer)
+        d, p = docs(), pairs()
+        batch = F.col("doc_id") % batch_mod == 0
+        at_rest = dedup.connected_components(
+            d.filter(~batch),
+            p.filter((F.col("id_a") % batch_mod != 0) & (F.col("id_b") % batch_mod != 0)),
+            id_col="doc_id",
+        )
+        sinks.write_snapshot(at_rest, tmp_dir)  # v=1: before the batch
+        maintained = dedup.connected_components_incremental(
+            sinks.read_snapshot(spark, tmp_dir),
+            d.filter(batch),
+            p.filter((F.col("id_a") % batch_mod == 0) | (F.col("id_b") % batch_mod == 0))
+            .select("id_a", "id_b"),
+            id_col="doc_id",
+        )
+        sinks.write_snapshot(maintained, tmp_dir)  # v=2: after maintenance
 
     try:
-        st = os.stat(src)
-        sig = f"{src}|{st.st_mtime_ns}|{st.st_size}|{threshold}|{shingle_k}|{batch_mod}|v1"
-        digest = hashlib.md5(sig.encode()).hexdigest()[:16]
-        table_dir = str(_CACHE_ROOT / f"cc_labels_{digest}")
-
-        def _latest_version(d: str) -> int:
-            try:
-                with open(os.path.join(d, "_LATEST")) as f:
-                    return int(f.read().strip())
-            except (OSError, ValueError):
-                return 0
-
-        # The build is COMPLETE only once the v=2 (post-maintenance)
-        # snapshot exists: _LATEST alone is not a completion marker,
-        # because write_snapshot flips it right after v=1 too — a crash
-        # between the v=1 and v=2 writes must not be mistaken for a
-        # finished build (it would silently serve pre-batch labels to
-        # every consumer, with no self-repair until the source file
-        # changes). Both versions are therefore built into a private
-        # tmp dir and installed with ONE atomic rename, the same
-        # discipline as _materialized; _LATEST >= 2 is the belt to
-        # that suspenders on read.
-        if _latest_version(table_dir) < 2:
-            docs = load_table(spark, sf_dir, "documents").select("doc_id")
-            pairs = jaccard_pair_graph(spark, sf_dir, threshold=threshold, shingle_k=shingle_k)
-            batch = F.col("doc_id") % batch_mod == 0
-            tmp_dir = _fresh_tmp(table_dir)
-            at_rest = dedup.connected_components(
-                docs.filter(~batch),
-                pairs.filter((F.col("id_a") % batch_mod != 0) & (F.col("id_b") % batch_mod != 0)),
-                id_col="doc_id",
-            )
-            sinks.write_snapshot(at_rest, tmp_dir)  # v=1: before the batch
-            maintained = dedup.connected_components_incremental(
-                sinks.read_snapshot(spark, tmp_dir),
-                docs.filter(batch),
-                pairs.filter((F.col("id_a") % batch_mod == 0) | (F.col("id_b") % batch_mod == 0))
-                .select("id_a", "id_b"),
-                id_col="doc_id",
-            )
-            sinks.write_snapshot(maintained, tmp_dir)  # v=2: after maintenance
-            import shutil
-
-            try:
-                os.rename(tmp_dir, table_dir)
-            except OSError:
-                if _latest_version(table_dir) >= 2:
-                    # lost a healthy race: keep the winner's table
-                    shutil.rmtree(tmp_dir, ignore_errors=True)
-                else:
-                    # a torn table from a crashed pre-rename-era build
-                    # blocks the rename: repair and install ours
-                    shutil.rmtree(table_dir, ignore_errors=True)
-                    os.rename(tmp_dir, table_dir)
-            _sweep_stale_tmp(table_dir)
+        table_dir = _cache_dir(
+            sf_dir, "documents", "cc_labels", f"{threshold}|{shingle_k}|{batch_mod}|v1"
+        )
+        _install(table_dir, _two_versions, build)
         return sinks.read_snapshot(spark, table_dir)
     except OSError:
-        return direct()
+        return dedup.connected_components(docs(), pairs(), id_col="doc_id")
 
 
 def full_shingle_table(
@@ -336,44 +289,22 @@ def _maintained_two_segments(
     build_base: Callable[[], DataFrame],
     build_append: Callable[[DataFrame], DataFrame],
     src_table: str = "documents",
+    partition_by: str | None = None,
 ) -> DataFrame:
     """Shared build-or-read for the maintained append-segment tables:
     v=1 = ``build_base()``, v=2 = ``build_append(v1_frame)`` (only the
-    arriving slice's rows), installed with the tmp-dir + atomic-rename
-    + ``_LATEST >= 2`` discipline, served via read_appended. Falls
-    back to no caller — callers keep their own direct() fallback."""
-    from .. import sinks
+    arriving slice's rows), each laid out by ``partition_by``,
+    installed by :func:`_install` (complete once ``_LATEST >= 2``),
+    served via read_appended. Falls back to no caller — callers keep
+    their own direct() fallback."""
 
-    src = os.path.join(os.path.realpath(sf_dir), f"{src_table}.parquet")
-    st = os.stat(src)
-    digest = hashlib.md5(
-        f"{src}|{st.st_mtime_ns}|{st.st_size}|{params_sig}".encode()
-    ).hexdigest()[:16]
-    table_dir = str(_CACHE_ROOT / f"{name}_{digest}")
+    def build(tmp_dir: str) -> None:
+        sinks.append_snapshot(build_base(), tmp_dir, partition_by=partition_by)
+        v1 = sinks.read_snapshot(spark, tmp_dir, version=1)
+        sinks.append_snapshot(build_append(v1), tmp_dir, partition_by=partition_by)
 
-    def _latest(d: str) -> int:
-        try:
-            with open(os.path.join(d, "_LATEST")) as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            return 0
-
-    if _latest(table_dir) < 2:
-        import shutil
-
-        tmp_dir = _fresh_tmp(table_dir)
-        sinks.append_snapshot(build_base(), tmp_dir)
-        v1 = spark.read.parquet(f"{tmp_dir}/v=1")
-        sinks.append_snapshot(build_append(v1), tmp_dir)
-        try:
-            os.rename(tmp_dir, table_dir)
-        except OSError:
-            if _latest(table_dir) >= 2:
-                shutil.rmtree(tmp_dir, ignore_errors=True)  # lost a healthy race
-            else:
-                shutil.rmtree(table_dir, ignore_errors=True)  # torn table: repair
-                os.rename(tmp_dir, table_dir)
-        _sweep_stale_tmp(table_dir)
+    table_dir = _cache_dir(sf_dir, src_table, name, params_sig)
+    _install(table_dir, _two_versions, build)
     return sinks.read_appended(spark, table_dir)
 
 
@@ -391,6 +322,7 @@ def simhash_corpus_sigs(
     v=2 APPENDS only that slice's rows. Exactly equals the one-shot
     build because signatures are per-doc. Incremental probes band-join
     against these signatures instead of re-hashing the corpus."""
+
     sig = f"{exclude_mod}|{n_bits}|{portable}|v2-seg"
 
     def docs_split(pred) -> DataFrame:
@@ -437,6 +369,7 @@ def span_corpus_index(
     distinct-hash set of the whole corpus split (a hash seen by both
     sides is kept once, from v=1). Incremental span probes join
     against the union instead of re-hashing corpus text."""
+
     recent = F.col("doc_id") % 9 == 2
 
     def hashes(pred) -> DataFrame:
@@ -479,60 +412,34 @@ def ivf_embeddings(spark: SparkSession, sf_dir: str, n_cells: int = 16) -> DataF
     basePath scan prunes on BOTH v (time travel) and cell (probe).
     tests/test_plan_properties.py asserts the PartitionFilters appear
     and results equal the inline assignment path."""
-    from .. import sinks
     from ..operators import similarity
 
-    src = os.path.join(os.path.realpath(sf_dir), "embeddings.parquet")
+    # arriving slice floored above the seed ids: the frozen model ==
+    # the model a full rebuild would pick
+    arriving = (F.col("vec_id") % 9 == 2) & (F.col("vec_id") > 8 * n_cells)
 
-    def full() -> DataFrame:
+    def assigned(split=None) -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings").withColumn(
             "embedding", F.col("embedding").cast("array<double>")
         )
         cents = similarity._centroids(emb, "embedding", "vec_id", n_cells)
-        return similarity.ivf_assign(emb, "embedding", cents)
-
-    def _latest(d: str) -> int:
-        try:
-            with open(os.path.join(d, "_LATEST")) as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            return 0
+        return similarity.ivf_assign(
+            emb if split is None else emb.filter(split), "embedding", cents
+        )
 
     try:
-        st = os.stat(src)
-        digest = hashlib.md5(
-            f"{src}|{st.st_mtime_ns}|{st.st_size}|{n_cells}|v2-seg".encode()
-        ).hexdigest()[:16]
-        table_dir = str(_CACHE_ROOT / f"ivf_seg_{digest}")
-        if _latest(table_dir) < 2:
-            import shutil
-
-            emb = load_table(spark, sf_dir, "embeddings").withColumn(
-                "embedding", F.col("embedding").cast("array<double>")
-            )
-            cents = similarity._centroids(emb, "embedding", "vec_id", n_cells)
-            # arriving slice floored above the seed ids: the frozen
-            # model == the model a full rebuild would pick
-            arriving = (F.col("vec_id") % 9 == 2) & (F.col("vec_id") > 8 * n_cells)
-            tmp_dir = _fresh_tmp(table_dir)
-            for split in (~arriving, arriving):  # v=1 base, v=2 appended slice
-                sinks.append_snapshot(
-                    similarity.ivf_assign(emb.filter(split), "embedding", cents),
-                    tmp_dir,
-                    partition_by="cell",
-                )
-            try:
-                os.rename(tmp_dir, table_dir)
-            except OSError:
-                if _latest(table_dir) >= 2:
-                    shutil.rmtree(tmp_dir, ignore_errors=True)  # lost a healthy race
-                else:
-                    shutil.rmtree(table_dir, ignore_errors=True)  # torn table: repair
-                    os.rename(tmp_dir, table_dir)
-            _sweep_stale_tmp(table_dir)
-        return sinks.read_appended(spark, table_dir)
+        return _maintained_two_segments(
+            spark,
+            sf_dir,
+            "ivf_seg",
+            f"{n_cells}|v2-seg",
+            lambda: assigned(~arriving),
+            lambda v1: assigned(arriving),
+            src_table="embeddings",
+            partition_by="cell",
+        )
     except OSError:
-        return full()
+        return assigned()
 
 
 def minhash_corpus_index(
@@ -561,66 +468,35 @@ def minhash_corpus_index(
     tests/test_streaming.py::test_streaming_minhash_index_maintenance_matches_batch.
     The index segments are derived from the shingle segments, not from
     text — the same build lineage a lakehouse would have."""
-    from .. import sinks
 
     sig = f"{exclude_mod}|{n_hashes}|{n_bands}|{shingle_k}|{portable}|v2-seg"
-    src = os.path.join(os.path.realpath(sf_dir), "documents.parquet")
+    recent = F.col("doc_id") % 9 == 2  # the most recent ingested slice
 
     def corpus_docs() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
         return docs.filter(F.col("doc_id") % exclude_mod != 0)
 
-    def direct() -> tuple[DataFrame, DataFrame]:
-        ex = dedup.shingle_table(corpus_docs(), "text", "doc_id", shingle_k, portable)
-        return ex, dedup.minhash_index(ex, "doc_id", n_hashes, n_bands)
+    def shingles(pred) -> DataFrame:
+        return dedup.shingle_table(
+            corpus_docs().filter(pred), "text", "doc_id", shingle_k, portable
+        )
 
-    def _latest(d: str) -> int:
-        try:
-            with open(os.path.join(d, "_LATEST")) as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            return 0
+    def index_of(ex_segment: int) -> DataFrame:
+        ex_segs = sinks.read_snapshot(spark, ex_dir, version=ex_segment)
+        return dedup.minhash_index(ex_segs, "doc_id", n_hashes, n_bands)
 
     try:
-        st = os.stat(src)
-        digest = hashlib.md5(
-            f"{src}|{st.st_mtime_ns}|{st.st_size}|{sig}".encode()
-        ).hexdigest()[:16]
-        ex_dir = str(_CACHE_ROOT / f"mh_seg_ex_{digest}")
-        idx_dir = str(_CACHE_ROOT / f"mh_seg_idx_{digest}")
-        if _latest(ex_dir) < 2 or _latest(idx_dir) < 2:
-            import shutil
-
-            recent = F.col("doc_id") % 9 == 2  # the most recent ingested slice
-            tmp_ex = _fresh_tmp(ex_dir)
-            tmp_idx = _fresh_tmp(idx_dir)
-            for split in (~recent, recent):  # v=1 base, v=2 appended slice
-                seg_ex = dedup.shingle_table(
-                    corpus_docs().filter(split), "text", "doc_id", shingle_k, portable
-                )
-                sinks.append_snapshot(seg_ex, tmp_ex)
-                sinks.append_snapshot(
-                    dedup.minhash_index(
-                        spark.read.parquet(f"{tmp_ex}/v={_latest(tmp_ex)}"),
-                        "doc_id",
-                        n_hashes,
-                        n_bands,
-                    ),
-                    tmp_idx,
-                )
-            for tmp, out in ((tmp_ex, ex_dir), (tmp_idx, idx_dir)):
-                try:
-                    os.rename(tmp, out)
-                except OSError:
-                    if _latest(out) >= 2:
-                        shutil.rmtree(tmp, ignore_errors=True)  # lost a healthy race
-                    else:
-                        shutil.rmtree(out, ignore_errors=True)  # torn table: repair
-                        os.rename(tmp, out)
-                _sweep_stale_tmp(out)
-        return sinks.read_appended(spark, ex_dir), sinks.read_appended(spark, idx_dir)
+        ex_dir = _cache_dir(sf_dir, "documents", "mh_seg_ex", sig)
+        ex = _maintained_two_segments(
+            spark, sf_dir, "mh_seg_ex", sig, lambda: shingles(~recent), lambda v1: shingles(recent)
+        )
+        idx = _maintained_two_segments(
+            spark, sf_dir, "mh_seg_idx", sig, lambda: index_of(1), lambda v1: index_of(2)
+        )
+        return ex, idx
     except OSError:
-        return direct()
+        ex = dedup.shingle_table(corpus_docs(), "text", "doc_id", shingle_k, portable)
+        return ex, dedup.minhash_index(ex, "doc_id", n_hashes, n_bands)
 
 
 def pq_codes_table(

@@ -14,7 +14,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# local worker threads, and the default shuffle-partition floor
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def get_spark(app_name: str = "z316_spark", shuffle_partitions: str | int | None = None) -> SparkSession:
@@ -25,11 +26,10 @@ def get_spark(app_name: str = "z316_spark", shuffle_partitions: str | int | None
     ``spark.sql.shuffle.partitions`` is a floor — AQE coalesces down
     and splits skewed partitions at runtime, so oversizing is cheap.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{CPUS}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or CPUS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

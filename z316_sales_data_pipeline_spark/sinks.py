@@ -9,12 +9,123 @@ lake (Delta would add ACID DELETE/MERGE; vanilla Parquet emulates):
   give data skipping on the cluster keys).
 - B4: truncate-and-reload = ``mode("overwrite")``.
 - B6: targeted DELETE = anti-join rewrite + overwrite.
+
+Versioned-table format
+----------------------
+The snapshot and append-segment sinks share one on-disk layout; this
+module is its only reader and writer (every other module goes through
+the functions below). A table is a directory holding:
+
+- ``v=N/`` — immutable version dirs, plain parquet (optionally
+  hive-partitioned inside by ``partition_by``). For a snapshot table
+  (:func:`write_snapshot`, :func:`merge_into_snapshot`) each one is a
+  full-table image; for an append-segment table
+  (:func:`append_snapshot`, :func:`compact_appended`) each one holds
+  only the rows appended at that version, and the table at version N
+  is the union of segments ``1..N``. Dirs above ``_LATEST`` are crash
+  orphans: written, never committed, invisible to readers, removed by
+  the next append or compaction.
+- ``_LATEST`` — the commit pointer: one decimal version number,
+  replaced atomically (write ``_LATEST.tmp``, then ``os.replace``).
+  Written by :func:`write_snapshot`, :func:`append_snapshot` and
+  :func:`compact_appended`; read by every reader.
+- ``v=N/_TXN`` — the txn key (e.g. a stream epoch) of the append that
+  wrote segment N, written by :func:`append_snapshot` before the
+  pointer flip; it makes a replayed append a no-op.
+- ``_TXNS`` — table-level log (one key per line, atomic replace) of
+  the ``_TXN`` keys whose segments :func:`compact_appended` folded
+  away, so replays of pre-compaction appends stay no-ops.
+- ``v=N/_COMPACTED_THROUGH`` — written by :func:`compact_appended`
+  inside the compacted segment: the highest version it folded.
+  :func:`read_appended` skips segments at or below it.
+- ``_KIND`` — ``append``, written by the first
+  :func:`append_snapshot`; :func:`vacuum_snapshots` refuses such
+  tables (deleting a segment deletes rows, not an old image).
+- other ``v=N/_<NAME>`` files — caller provenance passed as
+  :func:`write_snapshot` ``meta`` and read by :func:`snapshot_meta`.
+
+Underscore-prefixed files are ignored by the parquet scan.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _read_latest(table_dir: str) -> int:
+    """The committed version the ``_LATEST`` pointer names. Raises
+    OSError when the pointer is missing, ValueError when corrupt."""
+    with open(os.path.join(table_dir, "_LATEST")) as f:
+        return int(f.read().strip())
+
+
+def _committed_version(table_dir: str) -> int:
+    """:func:`_read_latest`, reading a missing or corrupt pointer as
+    version 0 (a table with nothing committed)."""
+    try:
+        return _read_latest(table_dir)
+    except (OSError, ValueError):
+        return 0
+
+
+def _versions(table_dir: str) -> dict[int, str]:
+    """Every ``v=N`` dir of the table as ``{N: "v=N"}``, committed or
+    not. Empty if the table dir does not exist."""
+    try:
+        entries = os.listdir(table_dir)
+    except OSError:
+        return {}
+    return {
+        int(d.split("=", 1)[1]): d
+        for d in entries
+        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
+    }
+
+
+def _atomic_write(path: str, content: str) -> None:
+    """Replace the small text file ``path`` atomically: readers see the
+    old content or the new one, never a torn write."""
+    tmp = f"{path}.tmp"
+    with open(tmp, "w") as f:
+        f.write(content)
+    os.replace(tmp, path)
+
+
+def _write_version(
+    df: DataFrame,
+    table_dir: str,
+    version: int,
+    partition_by: str | None = None,
+    meta: dict[str, str] | None = None,
+) -> None:
+    """Write ``df`` as the version dir ``v=<version>`` plus its ``meta``
+    files (name → content). Nothing is committed until the caller
+    flips ``_LATEST`` with :func:`_commit`."""
+    w = df.write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(partition_by)
+    path = os.path.join(table_dir, f"v={version}")
+    w.parquet(path)
+    for name, content in (meta or {}).items():
+        with open(os.path.join(path, name), "w") as f:
+            f.write(content)
+
+
+def _commit(table_dir: str, version: int) -> None:
+    """Flip the ``_LATEST`` pointer to ``version`` (the commit point)."""
+    _atomic_write(os.path.join(table_dir, "_LATEST"), str(version))
+
+
+def _drop_orphans(table_dir: str, latest: int, versions: dict[int, str]) -> None:
+    """Remove the crash orphans among ``versions``: dirs above
+    ``latest`` were written but never committed."""
+    for v, d in versions.items():
+        if v > latest:
+            shutil.rmtree(os.path.join(table_dir, d), ignore_errors=True)
 
 
 def write_partitioned(
@@ -148,26 +259,10 @@ def write_snapshot(
     crash can never publish a snapshot whose marker says otherwise.
     Returns the new version number.
     """
-    import os
-
     os.makedirs(table_dir, exist_ok=True)
-    versions = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(table_dir)
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-    ]
-    new_v = max(versions, default=0) + 1
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(f"{table_dir}/v={new_v}")
-    for name, content in (meta or {}).items():
-        with open(f"{table_dir}/v={new_v}/{name}", "w") as f:
-            f.write(content)
-    tmp = f"{table_dir}/_LATEST.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(new_v))
-    os.replace(tmp, f"{table_dir}/_LATEST")  # atomic pointer flip
+    new_v = max(_versions(table_dir), default=0) + 1
+    _write_version(df, table_dir, new_v, partition_by, meta)
+    _commit(table_dir, new_v)
     return new_v
 
 
@@ -208,21 +303,9 @@ def append_snapshot(
 
     Single-writer-per-table, like every sink here; idempotency is
     against REPLAY of the same logical batch, not concurrent writers."""
-    import os
-    import shutil
-
     os.makedirs(table_dir, exist_ok=True)
-    latest = 0
-    try:
-        with open(os.path.join(table_dir, "_LATEST")) as f:
-            latest = int(f.read().strip())
-    except (OSError, ValueError):
-        pass
-    segs = {
-        int(d.split("=", 1)[1]): d
-        for d in os.listdir(table_dir)
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-    }
+    latest = _committed_version(table_dir)
+    segs = _versions(table_dir)
     if txn_key is not None:
         for v, d in segs.items():
             if v <= latest:
@@ -238,22 +321,12 @@ def append_snapshot(
         # epoch would re-append rows the compacted segment already holds
         if txn_key in _committed_txns(table_dir):
             return latest
-    for v, d in segs.items():
-        if v > latest:  # crash orphan: written but never committed
-            shutil.rmtree(os.path.join(table_dir, d), ignore_errors=True)
+    _drop_orphans(table_dir, latest, segs)
 
     new_v = latest + 1
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(f"{table_dir}/v={new_v}")
-    if txn_key is not None:
-        with open(f"{table_dir}/v={new_v}/_TXN", "w") as f:
-            f.write(txn_key)
-    tmp = f"{table_dir}/_LATEST.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(new_v))
-    os.replace(tmp, f"{table_dir}/_LATEST")  # atomic commit
+    meta = {"_TXN": txn_key} if txn_key is not None else None
+    _write_version(df, table_dir, new_v, partition_by, meta)
+    _commit(table_dir, new_v)
     kind = os.path.join(table_dir, "_KIND")
     if not os.path.exists(kind):
         with open(kind, "w") as f:
@@ -283,25 +356,14 @@ def read_appended(spark, table_dir: str, version: int | None = None) -> DataFram
     not-yet-deleted originals, instead of unioning every row twice.
     The marker scan is O(committed segments) tiny-file reads on the
     driver — the same order as the ``_LATEST`` read itself."""
-    import os
-
     if version is None:
-        with open(f"{table_dir}/_LATEST") as f:
-            version = int(f.read().strip())
+        version = _read_latest(table_dir)
     folded_through = 0
-    try:
-        seg_vs = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(table_dir)
-            if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-        ]
-    except OSError:
-        seg_vs = []
-    for v in seg_vs:
+    for v, d in _versions(table_dir).items():
         if v > version:
             continue  # a newer compaction does not rewrite history below the cut
         try:
-            with open(os.path.join(table_dir, f"v={v}", "_COMPACTED_THROUGH")) as f:
+            with open(os.path.join(table_dir, d, "_COMPACTED_THROUGH")) as f:
                 folded_through = max(folded_through, int(f.read().strip()))
         except (OSError, ValueError):
             pass
@@ -314,8 +376,6 @@ def read_appended(spark, table_dir: str, version: int | None = None) -> DataFram
 def _committed_txns(table_dir: str) -> set[str]:
     """The table-level log of txn keys whose segments were folded away
     by compaction (one key per line in ``_TXNS``). Empty if absent."""
-    import os
-
     try:
         with open(os.path.join(table_dir, "_TXNS")) as f:
             return {line for line in f.read().splitlines() if line}
@@ -326,15 +386,9 @@ def _committed_txns(table_dir: str) -> set[str]:
 def _record_txns(table_dir: str, keys: set[str]) -> None:
     """Merge ``keys`` into the ``_TXNS`` log atomically (read-merge-
     replace — single-writer-per-table, like every sink here)."""
-    import os
-
     merged = _committed_txns(table_dir) | keys
-    if not merged:
-        return
-    tmp = os.path.join(table_dir, "_TXNS.tmp")
-    with open(tmp, "w") as f:
-        f.write("\n".join(sorted(merged)) + "\n")
-    os.replace(tmp, os.path.join(table_dir, "_TXNS"))
+    if merged:
+        _atomic_write(os.path.join(table_dir, "_TXNS"), "\n".join(sorted(merged)) + "\n")
 
 
 def _detect_segment_partitioning(table_dir: str, seg_dirs: list[str]) -> str | None:
@@ -349,8 +403,6 @@ def _detect_segment_partitioning(table_dir: str, seg_dirs: list[str]) -> str | N
     not make a genuinely partitioned table auto-detect as flat —
     compaction would then flatten it and later partitioned appends
     would leave inconsistent leaf depths under the basePath read."""
-    import os
-
     for d in seg_dirs:
         seg = os.path.join(table_dir, d)
         try:
@@ -432,19 +484,9 @@ def compact_appended(
     never filter).
 
     Returns the new version number."""
-    import os
-    import shutil
-
-    with open(f"{table_dir}/_LATEST") as f:
-        latest = int(f.read().strip())
-    segs = {
-        int(d.split("=", 1)[1]): d
-        for d in os.listdir(table_dir)
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-    }
-    for v, d in segs.items():
-        if v > latest:  # crash orphan: written but never committed
-            shutil.rmtree(os.path.join(table_dir, d), ignore_errors=True)
+    latest = _read_latest(table_dir)
+    segs = _versions(table_dir)
+    _drop_orphans(table_dir, latest, segs)
     old = [d for v, d in sorted(segs.items()) if v <= latest]
     if partition_by is None:
         partition_by = _detect_segment_partitioning(table_dir, old)
@@ -462,21 +504,15 @@ def compact_appended(
         merged = transform(merged)
     merged = merged.localCheckpoint(eager=True)
     new_v = latest + 1
-    w = merged.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(f"{table_dir}/v={new_v}")
     # marker + txn log land before the flip: from the instant the new
     # pointer is visible, readers already know to skip the folded dirs
-    with open(f"{table_dir}/v={new_v}/_COMPACTED_THROUGH", "w") as f:
-        f.write(str(latest))
+    _write_version(
+        merged, table_dir, new_v, partition_by, {"_COMPACTED_THROUGH": str(latest)}
+    )
     _record_txns(table_dir, folded_txns)
-    tmp = f"{table_dir}/_LATEST.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(new_v))
-    os.replace(tmp, f"{table_dir}/_LATEST")  # atomic commit
+    _commit(table_dir, new_v)
     for d in old:
-        shutil.rmtree(f"{table_dir}/{d}", ignore_errors=True)
+        shutil.rmtree(os.path.join(table_dir, d), ignore_errors=True)
     return new_v
 
 
@@ -484,18 +520,8 @@ def committed_segment_count(table_dir: str) -> int:
     """Number of committed segments (``v<=_LATEST`` dirs) of an
     append-segment table — the read-amplification factor a
     :func:`read_appended` pays in scheduling + parquet-footer reads."""
-    import os
-
-    try:
-        with open(os.path.join(table_dir, "_LATEST")) as f:
-            latest = int(f.read().strip())
-    except (OSError, ValueError):
-        return 0
-    return sum(
-        1
-        for d in os.listdir(table_dir)
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit() and int(d.split("=", 1)[1]) <= latest
-    )
+    latest = _committed_version(table_dir)
+    return sum(1 for v in _versions(table_dir) if v <= latest)
 
 
 def maybe_compact(
@@ -547,9 +573,8 @@ def read_snapshot(spark, table_dir: str, version: int | None = None) -> DataFram
     """Read a snapshot table at ``version`` (default: the _LATEST
     pointer) — the time-travel read path for :func:`write_snapshot`."""
     if version is None:
-        with open(f"{table_dir}/_LATEST") as f:
-            version = int(f.read().strip())
-    return spark.read.parquet(f"{table_dir}/v={version}")
+        version = _read_latest(table_dir)
+    return spark.read.parquet(os.path.join(table_dir, f"v={version}"))
 
 
 def vacuum_snapshots(table_dir: str, keep_last: int = 2) -> list[int]:
@@ -567,9 +592,6 @@ def vacuum_snapshots(table_dir: str, keep_last: int = 2) -> list[int]:
     mid-vacuum still leaves every kept version readable. Returns the
     deleted version numbers.
     """
-    import os
-    import shutil
-
     if keep_last < 1:
         raise ValueError(f"keep_last must be >= 1, got {keep_last}")
     kind = os.path.join(table_dir, "_KIND")
@@ -581,14 +603,10 @@ def vacuum_snapshots(table_dir: str, keep_last: int = 2) -> list[int]:
                     " DATA (old versions are segments, not superseded images);"
                     " use compact_appended to bound segment count instead"
                 )
-    versions = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(table_dir)
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-    )
+    dirs = _versions(table_dir)
+    versions = sorted(dirs)
     try:
-        with open(f"{table_dir}/_LATEST") as f:
-            latest = int(f.read().strip())
+        latest = _read_latest(table_dir)
     except FileNotFoundError:
         latest = max(versions, default=None)
     keep = set(versions[len(versions) - keep_last :]) if versions else set()
@@ -596,7 +614,7 @@ def vacuum_snapshots(table_dir: str, keep_last: int = 2) -> list[int]:
         keep.add(latest)
     doomed = [v for v in versions if v not in keep]
     for v in doomed:
-        shutil.rmtree(f"{table_dir}/v={v}")
+        shutil.rmtree(os.path.join(table_dir, dirs[v]))
     return doomed
 
 
@@ -739,12 +757,9 @@ def compact_partitions(
 def snapshot_meta(table_dir: str, name: str, version: int | None = None) -> str | None:
     """Read a ``meta`` file written by :func:`write_snapshot` from the
     ``version`` (default: _LATEST) snapshot dir; None if absent."""
-    import os
-
     try:
         if version is None:
-            with open(os.path.join(table_dir, "_LATEST")) as f:
-                version = int(f.read().strip())
+            version = _read_latest(table_dir)
         with open(os.path.join(table_dir, f"v={version}", name)) as f:
             return f.read()
     except (OSError, ValueError):

@@ -41,12 +41,9 @@ def _write_commit(path: str, epoch: int, max_id: int) -> None:
     """Atomically commit a gate epoch: epoch marker and folded-maximum
     id land in one ``os.replace`` so no crash window can separate
     them (the _LATEST pointer discipline)."""
-    import os
+    from .. import sinks
 
-    tmp = f"{path}.tmp"
-    with open(tmp, "w") as f:
-        f.write(f"{int(epoch)}:{int(max_id)}")
-    os.replace(tmp, path)
+    sinks._atomic_write(path, f"{int(epoch)}:{int(max_id)}")
 
 
 def file_stream(spark: SparkSession, path: str, schema, fmt: str = "json") -> DataFrame:
@@ -481,27 +478,12 @@ def scd2_agg_mv_sink(
     no-op on both. Batch-grain twin: ``scd2_agg_mv`` in the registry,
     oracle-checked against one full recompute.
     """
-    import os
-
     from .. import sinks
     from ..operators import ivm
 
     if measures is None:
         measures = {"sum_uid": F.col(key)}
     hist_fold = scd2_history_sink(hist_dir, key=key, attr=attr, ts=ts, tiebreak=tiebreak)
-
-    def versions_desc() -> list[int]:
-        try:
-            return sorted(
-                (
-                    int(d.split("=", 1)[1])
-                    for d in os.listdir(hist_dir)
-                    if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-                ),
-                reverse=True,
-            )
-        except OSError:
-            return []
 
     def open_rows(spark, version: int) -> DataFrame:
         return (
@@ -527,7 +509,7 @@ def scd2_agg_mv_sink(
         # intermediate changes, so a multi-epoch catch-up folds
         # correctly in one delta.
         v_after = v_before = None
-        for v in versions_desc():
+        for v in sorted(sinks._versions(hist_dir), reverse=True):
             marker = sinks.snapshot_meta(hist_dir, "_SCD2_EPOCH", version=v)
             if marker is None:
                 continue
