@@ -233,20 +233,24 @@ def main() -> None:
         "runs_per_query": 3,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
-    # Full per-query detail goes to a repo file: the driver's capture
-    # keeps only the LAST 2000 chars of output, and at 89+ headline
-    # queries the one-line JSON outgrew that tail (BENCH_r08..r10 all
-    # record `parsed: null`). The printed line below is guaranteed to
-    # fit by dropping the FASTEST queries first (least informative for
-    # a wall-time metric); `queries_omitted` says how many, and
-    # BENCH_FULL.json always has every timing.
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"), "w") as f:
+    # Full per-query detail goes to a git-ignored file, because output
+    # captures commonly keep only the last 2000 chars and at 89+
+    # headline queries the one-line JSON outgrew that tail. The printed
+    # line below is guaranteed to fit by dropping the FASTEST queries
+    # first (least informative for a wall-time metric);
+    # `queries_omitted` says how many, and the file always has every
+    # timing. The tracked BENCH_FULL.json is the r15 record and is not
+    # rewritten.
+    full_rel = os.path.join(".bench_out", "BENCH_FULL.json")
+    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), full_rel)
+    os.makedirs(os.path.dirname(full_path), exist_ok=True)
+    with open(full_path, "w") as f:
         json.dump(full, f, indent=1, sort_keys=True)
         f.write("\n")
 
     line_obj = dict(full)
     line_obj["n_queries"] = len(timings)
-    line_obj["full"] = "BENCH_FULL.json"
+    line_obj["full"] = full_rel
     kept = dict(sorted(timings.items(), key=lambda kv: -kv[1]))
     while True:
         line_obj["queries"] = dict(sorted(kept.items()))

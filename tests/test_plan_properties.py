@@ -699,3 +699,116 @@ def test_versioned_table_format_lives_only_in_sinks():
             ):
                 offenders.append(f"{where} os.replace call")
     assert not offenders, "versioned-table format outside sinks.py:\n" + "\n".join(offenders)
+
+
+def _jobs_run(spark, fn) -> int:
+    """Spark jobs ``fn()`` submits, counted in the status store.
+
+    The jobs are tagged with a fresh job group and counted once the
+    listener bus has drained. Counting by group instead of by the
+    store's job-list size keeps the count exact late in a long
+    session, where the store trims old jobs (``spark.ui.retainedJobs``).
+    """
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_table(directory, name: str, columns: dict) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    directory.mkdir(exist_ok=True)
+    pq.write_table(pa.table(columns), str(directory / f"{name}.parquet"))
+
+
+def test_load_table_infers_schema_once_per_file(spark, tmp_path):
+    """A second ``load_table`` of an unchanged file runs no Spark job:
+    the schema inferred by the first load is reused (1 job at the
+    parent, which re-inferred on every load)."""
+    from z316_sales_data_pipeline_spark.sources.tables import load_table
+
+    _write_table(tmp_path, "t", {"a": [1, 2, 3], "b": ["x", "y", "z"]})
+    first = load_table(spark, str(tmp_path), "t")
+    second = []
+    assert _jobs_run(spark, lambda: second.append(load_table(spark, str(tmp_path), "t"))) == 0
+    assert second[0].schema == first.schema
+    assert sorted(second[0].collect()) == sorted(first.collect())
+
+
+def test_load_table_reinfers_rewritten_file(spark, tmp_path):
+    """A file rewritten at the same path with a different schema is
+    re-inferred: the new column is visible and readable."""
+    from z316_sales_data_pipeline_spark.sources.tables import load_table
+
+    _write_table(tmp_path, "t", {"a": [1, 2]})
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    _write_table(tmp_path, "t", {"a": [1, 2, 3], "c": [10.0, 20.0, 30.0]})
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "c"]
+    assert sorted((r["a"], r["c"]) for r in df.collect()) == [(1, 10.0), (2, 20.0), (3, 30.0)]
+
+
+def test_load_table_missing_table_raises(spark, tmp_path):
+    """A missing table takes the plain read and raises as before."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from z316_sales_data_pipeline_spark.sources.tables import load_table
+
+    for _ in range(2):
+        with pytest.raises(AnalysisException):
+            load_table(spark, str(tmp_path), "no_such_table")
+
+
+def test_load_table_events_ts_is_timestamp(spark, sf_dir):
+    """The ``events`` branch yields a ``timestamp`` ``ts`` both when it
+    infers the schema and when it reuses the memoized one, with the
+    same values."""
+    import os
+
+    from z316_sales_data_pipeline_spark.sources import tables
+
+    tables._SCHEMAS.pop(os.path.abspath(f"{sf_dir}/events.parquet"), None)
+    inferred = tables.load_table(spark, sf_dir, "events")
+    reused = tables.load_table(spark, sf_dir, "events")
+    for df in (inferred, reused):
+        assert dict(df.dtypes)["ts"] == "timestamp"
+    head = lambda df: df.orderBy("event_id").select("event_id", "ts").limit(20).collect()
+    assert head(reused) == head(inferred)
+
+
+def test_run_sales_pipeline_counts_match_written_tables(spark, sf_dir, tmp_path):
+    """The counts observed on the write jobs equal the rows on disk."""
+    from z316_sales_data_pipeline_spark.plans import pipeline
+
+    out = str(tmp_path / "lake")
+    counts = pipeline.run_sales_pipeline(spark, sf_dir, out)
+    assert counts == {
+        "pedidos": spark.read.parquet(f"{out}/pedidos").count(),
+        "itens_pedido": spark.read.parquet(f"{out}/itens_pedido").count(),
+    }
+    assert counts["pedidos"] > 0 and counts["itens_pedido"] > 0
+
+
+def test_run_sales_pipeline_job_budget(spark, sf_dir, tmp_path):
+    """Job-budget guard: a second ``run_sales_pipeline`` in a session
+    runs at most 10 Spark jobs on ``sf_dir`` (measured: 10). Before the
+    source schema memo and the write-job row-count observations it ran
+    25: one parquet schema-inference job for each of its 7 source-table
+    loads, and 8 for re-listing and re-counting the two tables it had
+    just written. A change that brings either back fails here."""
+    from z316_sales_data_pipeline_spark.plans import pipeline
+
+    pipeline.run_sales_pipeline(spark, sf_dir, str(tmp_path / "warm"))
+    n = _jobs_run(spark, lambda: pipeline.run_sales_pipeline(spark, sf_dir, str(tmp_path / "lake")))
+    assert n <= 10, f"run_sales_pipeline ran {n} Spark jobs, budget 10"

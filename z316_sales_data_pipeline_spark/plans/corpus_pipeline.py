@@ -93,6 +93,9 @@ def run_corpus_pipeline(
       table (``sinks.stats_manifest``): row counts + (doc_id,
       chunk_idx) min/max per physical file, the planner-facing
       metadata a lakehouse log would carry.
+
+    The four sidecar counts come from ``count(1)`` observations riding
+    their write jobs (``sinks.counted``), not from re-reading them.
     """
     docs = load_table(spark, sf_dir, "documents")
     kept = curated_documents(spark, sf_dir)
@@ -112,22 +115,27 @@ def run_corpus_pipeline(
     packs = corpus.sequence_pack(
         written, "split", "doc_id", "chunk_idx", "n_tokens", budget=pack_budget
     )
-    packs.write.mode("overwrite").parquet(f"{out_dir}_packs")
-    mixture = corpus.source_mixture(survivors, "text", "source")
-    mixture.write.mode("overwrite").parquet(f"{out_dir}_mixture")
-    merges = corpus.bpe_merges(survivors, "text", n_merges=3)
-    merges.write.mode("overwrite").parquet(f"{out_dir}_bpe")
-    manifest = sinks.stats_manifest(spark, out_dir, ["doc_id", "chunk_idx"])
-    manifest.write.mode("overwrite").parquet(f"{out_dir}_manifest")
+
+    def write_counted(df: DataFrame, path: str) -> int:
+        df, obs = sinks.counted(df)
+        df.write.mode("overwrite").parquet(path)
+        return obs.get["rows"]
+
+    n_packs = write_counted(packs, f"{out_dir}_packs")
+    n_sources = write_counted(corpus.source_mixture(survivors, "text", "source"), f"{out_dir}_mixture")
+    n_merges = write_counted(corpus.bpe_merges(survivors, "text", n_merges=3), f"{out_dir}_bpe")
+    n_files = write_counted(
+        sinks.stats_manifest(spark, out_dir, ["doc_id", "chunk_idx"]), f"{out_dir}_manifest"
+    )
     return {
         "docs": docs.count(),
         "kept": kept.count(),
         "survivors": survivors.count(),
         "chunks": written.count(),
-        "packs": spark.read.parquet(f"{out_dir}_packs").count(),
-        "mixture_sources": spark.read.parquet(f"{out_dir}_mixture").count(),
-        "bpe_merges": spark.read.parquet(f"{out_dir}_bpe").count(),
-        "manifest_files": spark.read.parquet(f"{out_dir}_manifest").count(),
+        "packs": n_packs,
+        "mixture_sources": n_sources,
+        "bpe_merges": n_merges,
+        "manifest_files": n_files,
     }
 
 

@@ -42,6 +42,10 @@ def run_sales_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[s
     Partition column = order date day (B3's TimePartitioning DAY);
     cluster sort = the reference's clustering fields
     (sales_to_bq/main.py:360-363 analogue).
+
+    The returned row counts come from ``count(1)`` observations riding
+    each write job (``sinks.counted``), not from re-reading the
+    written tables.
     """
     order_days = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("pedido_id"), F.to_date("o_orderdate").alias("pedido_dia")
@@ -50,21 +54,20 @@ def run_sales_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[s
     pedidos = sales_facts.pedidos_fact(spark, sf_dir).join(order_days, "pedido_id")
     itens = sales_facts.itens_fact(spark, sf_dir).join(order_days, "pedido_id")
 
+    pedidos, pedidos_rows = sinks.counted(with_lineage(pedidos))
+    itens, itens_rows = sinks.counted(with_lineage(itens))
     sinks.write_partitioned(
-        with_lineage(pedidos),
+        pedidos,
         f"{out_dir}/pedidos",
         "pedido_dia",
         cluster_cols=["pedido_id"],
         mode="overwrite",
     )
     sinks.write_partitioned(
-        with_lineage(itens),
+        itens,
         f"{out_dir}/itens_pedido",
         "pedido_dia",
         cluster_cols=["pedido_id", "produto_id"],
         mode="overwrite",
     )
-    return {
-        "pedidos": spark.read.parquet(f"{out_dir}/pedidos").count(),
-        "itens_pedido": spark.read.parquet(f"{out_dir}/itens_pedido").count(),
-    }
+    return {"pedidos": pedidos_rows.get["rows"], "itens_pedido": itens_rows.get["rows"]}

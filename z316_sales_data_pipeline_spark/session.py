@@ -18,6 +18,25 @@ from pyspark.sql import SparkSession
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM, at most 16g.
+
+    The JVM's resident size runs past ``-Xmx`` (metaspace, code cache,
+    thread stacks, netty/Arrow direct buffers) and the Python process
+    and its workers share the same RAM, so a heap sized at or above
+    MemTotal gets the JVM OOM-killed once the heap grows into it. Half
+    leaves the other half for all of that on a host without swap.
+    """
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{min(int(line.split()[1]) // 2048, 16 * 1024)}m"
+    except OSError:
+        pass
+    return "16g"
+
+
 def get_spark(app_name: str = "z316_spark", shuffle_partitions: str | int | None = None) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
@@ -42,7 +61,7 @@ def get_spark(app_name: str = "z316_spark", shuffle_partitions: str | int | None
         # runtime row filtering and dynamic partition pruning are
         # already on by default in Spark 4 (verified)
         .config("spark.sql.parquet.aggregatePushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

@@ -52,7 +52,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -146,6 +146,17 @@ def write_partitioned(
     if cluster_cols:
         out = out.sortWithinPartitions(*cluster_cols)
     out.write.mode(mode).partitionBy(partition_col).parquet(path)
+
+
+def counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a ``count(1)`` observation attached.
+
+    Write the returned frame; after the write, ``obs.get["rows"]`` is
+    the number of rows the write job saw, collected with the job's
+    task metrics instead of by re-listing and re-counting the table.
+    """
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 def write_bucketed(
