@@ -701,6 +701,52 @@ def test_versioned_table_format_lives_only_in_sinks():
     assert not offenders, "versioned-table format outside sinks.py:\n" + "\n".join(offenders)
 
 
+def test_streaming_epoch_protocol_has_one_home():
+    """Source guard: in ``streaming/pipeline.py`` the monotone-id gate
+    protocol and the token-budget fold each have one home, so per-sink
+    copies cannot quietly come back. ``_read_commit`` and
+    ``_write_commit`` are each called from exactly one function
+    (qualified by its enclosing functions), exactly one ``raise``
+    carries the ``late/reordered`` refusal (docstrings do not count),
+    and ``_token_budget_fold_cum`` has one call site."""
+    import ast
+    import pathlib
+
+    from z316_sales_data_pipeline_spark.streaming import pipeline as P
+
+    tree = ast.parse(pathlib.Path(P.__file__).read_text())
+    callers: dict[str, set[str]] = {"_read_commit": set(), "_write_commit": set()}
+    fold_cum_calls = []
+    refusals = []
+
+    def scan(node, where: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            inner = where
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = f"{where}.{child.name}" if where else child.name
+            if isinstance(child, ast.Call):
+                func = child.func
+                name = func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", None)
+                if name in callers:
+                    callers[name].add(where)
+                if name == "_token_budget_fold_cum":
+                    fold_cum_calls.append(f"{where}:{child.lineno}")
+            if isinstance(child, ast.Raise) and any(
+                isinstance(c, ast.Constant)
+                and isinstance(c.value, str)
+                and "late/reordered" in c.value
+                for c in ast.walk(child)
+            ):
+                refusals.append(f"{where}:{child.lineno}")
+            scan(child, inner)
+
+    scan(tree, "")
+    assert len(callers["_read_commit"]) == 1, sorted(callers["_read_commit"])
+    assert len(callers["_write_commit"]) == 1, sorted(callers["_write_commit"])
+    assert len(refusals) == 1, refusals
+    assert len(fold_cum_calls) == 1, fold_cum_calls
+
+
 def _jobs_run(spark, fn) -> int:
     """Spark jobs ``fn()`` submits, counted in the status store.
 

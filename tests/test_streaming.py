@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -1890,8 +1891,46 @@ def test_minhash_gate_sink_crash_between_appends_heals_on_replay(
     assert ex.count() == ex.dropDuplicates(["doc_id", "__h"]).count()
 
 
+_GATES_ON_DOCUMENTS = ("minhash_gate_sink", "suffix_span_sink", "curation_gate_sink")
+
+
+def _gate_on_documents(spark, sf_dir, tmp_path, sink):
+    """``(fold, marker path, [sl0, sl1], eval_docs, state_dir, out dirs)``
+    for one monotone-id gate over ``documents`` (doc_id, text, lang,
+    source); ``out dirs`` is (accepted, quarantined), or (spans,) for
+    the suffix mask. Curation streams only the train docs: the eval
+    source is its frozen eval set."""
+    from z316_sales_data_pipeline_spark.sources.tables import load_table
+    from z316_sales_data_pipeline_spark.streaming import pipeline as P
+
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang", "source"
+    )
+    eval_docs = docs.filter(F.col("source") == "src0")
+    if sink == "curation_gate_sink":
+        docs = docs.filter(F.col("source") != "src0")
+    slices = [
+        docs.filter(F.col("doc_id") < 167),
+        docs.filter((F.col("doc_id") >= 167) & (F.col("doc_id") < 334)),
+    ]
+    st = str(tmp_path / f"{sink}_state")
+    acc = str(tmp_path / f"{sink}_acc")
+    qua = str(tmp_path / f"{sink}_qua")
+    if sink == "minhash_gate_sink":
+        fold = P.minhash_gate_sink(st, acc, qua, "text", "doc_id")
+        return fold, f"{st}/_MHG_COMMIT", slices, eval_docs, st, (acc, qua)
+    if sink == "suffix_span_sink":
+        fold = P.suffix_span_sink(st, acc, "text", "doc_id")
+        return fold, f"{st}/_SSS_COMMIT", slices, eval_docs, st, (acc,)
+    fold = P.curation_gate_sink(
+        st, acc, qua, "text", "doc_id", "lang", "source", eval_docs
+    )
+    return fold, f"{st}/_CGS_COMMIT", slices, eval_docs, st, (acc, qua)
+
+
+@pytest.mark.parametrize("sink", _GATES_ON_DOCUMENTS)
 def test_gate_sink_commit_marker_atomic_crash_at_commit(
-    spark, sf_dir, tmp_path, monkeypatch
+    spark, sf_dir, tmp_path, monkeypatch, sink
 ):
     """ADVICE r13 (medium): the epoch marker and the folded-maximum id
     commit in ONE atomic write. Fault-inject a crash exactly at the
@@ -1901,23 +1940,20 @@ def test_gate_sink_commit_marker_atomic_crash_at_commit(
     maxid had advanced to the crashed epoch's maximum while the epoch
     marker still named the previous epoch), no-op through the
     committed segments, and land the marker with both values advanced
-    together."""
+    together. Run for three gates on ``documents``: each then still
+    equals its batch twin."""
     import pytest as _pytest
 
     from z316_sales_data_pipeline_spark import sinks
     from z316_sales_data_pipeline_spark.operators import dedup as D
-    from z316_sales_data_pipeline_spark.sources.tables import load_table
+    from z316_sales_data_pipeline_spark.plans import corpus_pipeline
     from z316_sales_data_pipeline_spark.streaming import pipeline as P
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    sl0 = docs.filter(F.col("doc_id") < 167)
-    sl1 = docs.filter((F.col("doc_id") >= 167) & (F.col("doc_id") < 334))
-    st = str(tmp_path / "mhga_state")
-    acc = str(tmp_path / "mhga_acc")
-    qua = str(tmp_path / "mhga_qua")
-    fold = P.minhash_gate_sink(st, acc, qua, "text", "doc_id")
+    fold, marker, (sl0, sl1), eval_docs, st, outs = _gate_on_documents(
+        spark, sf_dir, tmp_path, sink
+    )
     fold(sl0, 0)
-    marker0 = P._read_commit(f"{st}/_MHG_COMMIT")
+    marker0 = P._read_commit(marker)
     assert marker0 is not None and marker0[0] == 0
 
     orig = P._write_commit
@@ -1931,21 +1967,79 @@ def test_gate_sink_commit_marker_atomic_crash_at_commit(
     monkeypatch.setattr(P, "_write_commit", orig)
     # the pair is intact: still epoch 0 with epoch 0's own maximum —
     # the late-data cursor cannot have outrun the epoch marker
-    assert P._read_commit(f"{st}/_MHG_COMMIT") == marker0
+    assert P._read_commit(marker) == marker0
 
     fold(sl1, 1)  # replay: must NOT raise the late/reordered refusal
     hi1 = sl1.agg(F.max("doc_id")).first()[0]
-    assert P._read_commit(f"{st}/_MHG_COMMIT") == (1, int(hi1))
+    assert P._read_commit(marker) == (1, int(hi1))
 
     seen = sl0.unionByName(sl1)
-    twin = {
-        r["doc_id"]: r["keep"]
-        for r in D.minhash_dedup_gate(seen, "text", "doc_id").collect()
-    }
-    got_acc = {r["doc_id"] for r in sinks.read_appended(spark, acc).collect()}
-    got_qua = {r["doc_id"] for r in sinks.read_appended(spark, qua).collect()}
-    assert got_acc == {d for d, k in twin.items() if k}
-    assert got_qua == {d for d, k in twin.items() if not k}
+    if sink == "minhash_gate_sink":
+        acc, qua = outs
+        twin = {
+            r["doc_id"]: r["keep"]
+            for r in D.minhash_dedup_gate(seen, "text", "doc_id").collect()
+        }
+        got_acc = {r["doc_id"] for r in sinks.read_appended(spark, acc).collect()}
+        got_qua = {r["doc_id"] for r in sinks.read_appended(spark, qua).collect()}
+        assert got_acc == {d for d, k in twin.items() if k}
+        assert got_qua == {d for d, k in twin.items() if not k}
+    elif sink == "suffix_span_sink":
+        # the as-of-epoch law for the replayed epoch's own ids
+        (spans,) = outs
+        epoch1 = F.col("doc_id") >= 167
+        want = D.suffix_dedup_spans(seen, "text", "doc_id").filter(epoch1)
+        got = sinks.read_appended(spark, spans).filter(epoch1)
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    else:
+        twin_lab = corpus_pipeline.curation_levels(
+            seen.unionByName(eval_docs), "text", "doc_id", "lang", "source"
+        ).filter(F.col("source") != "src0")
+        want = corpus_pipeline._funnel_rows(twin_lab, 262139)
+        got = P.curation_gate_funnel(spark, st)
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+@pytest.mark.parametrize("sink", _GATES_ON_DOCUMENTS)
+def test_gate_sinks_refuse_null_ids(spark, sf_dir, tmp_path, sink):
+    """A null id cannot be ordered against the folded ids, so a
+    monotone-id gate refuses the whole batch before writing anything.
+    (a) An all-null first epoch leaves no committed segment and no
+    marker (unrefused, every table committed a segment and the marker
+    write then failed on the null maximum, so each replay re-raised and
+    the stream was wedged). (b) A null-id exact copy of an earlier doc
+    is refused (unrefused, it landed in accepted, and no later
+    ``id < min(batch)`` read would ever compare against it)."""
+    import os
+
+    from z316_sales_data_pipeline_spark.streaming import pipeline as P
+
+    fold, marker, (sl0, sl1), _, st, outs = _gate_on_documents(
+        spark, sf_dir, tmp_path, sink
+    )
+    null_id = F.lit(None).cast("long")
+
+    def committed():
+        """Each table dir under the gate's roots -> its _LATEST version."""
+        return {
+            d: open(os.path.join(d, "_LATEST")).read()
+            for root in (st, *outs)
+            for d, _, files in os.walk(root)
+            if "_LATEST" in files
+        }
+
+    with pytest.raises(ValueError, match=f"{sink}.*null"):
+        fold(sl0.withColumn("doc_id", null_id), 0)
+    assert committed() == {}
+    assert P._read_commit(marker) is None
+
+    fold(sl0, 0)
+    marker0, versions = P._read_commit(marker), committed()
+    copy = sl0.orderBy("doc_id").limit(1).withColumn("doc_id", null_id)
+    with pytest.raises(ValueError, match=f"{sink}.*null"):
+        fold(sl1.unionByName(copy), 1)
+    assert P._read_commit(marker) == marker0
+    assert committed() == versions
 
 
 def test_gate_sinks_compact_segment_state_and_survive_compaction_crashes(

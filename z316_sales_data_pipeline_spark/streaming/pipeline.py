@@ -9,14 +9,57 @@ query under Trigger.AvailableNow).
 Windowed aggregations over the ``events`` table (tumbling/sliding/
 session + watermark) are the engine's extension beyond the reference
 (which defers all time bucketing to BigQuery day partitions).
+
+Exactly-once under at-least-once ``foreachBatch``. Spark may re-run an
+epoch after a crash; each foreachBatch sink here makes that re-run a
+no-op with one of three mechanisms:
+
+1. ``epoch:maxid`` commit marker — the monotone-id gates
+   (``minhash_gate_sink`` ``_MHG_COMMIT``, ``suffix_span_sink``
+   ``_SSS_COMMIT``, ``ivf_retrain_sink`` ``_IVR_COMMIT``,
+   ``semantic_gate_sink`` ``_SMG_COMMIT``, ``curation_gate_sink``
+   ``_CGS_COMMIT``), all run by ``_monotone_gate``. Per epoch: an
+   empty batch is skipped; an epoch at-or-below the marker's epoch is
+   a replay and a no-op; the batch is deduped on the id; a null id, or
+   a smallest id at-or-below the marker's max id, is refused with
+   ``ValueError`` before anything is written. The monotone-id contract
+   is that ids are assigned at the door, so every epoch's ids lie above
+   every id folded before; under late/reordered ids "has a smaller-id
+   duplicate" would depend on arrival order and the batch-twin laws
+   would silently break. Then the sink's kernel reads its at-rest
+   segments under an ``id < min(batch)`` range filter (so a
+   half-committed earlier attempt of the same epoch is never read
+   back) and appends with ``txn_key="epoch=N"`` (so a crash mid-epoch
+   replays into committed-segment no-ops). The marker is written last,
+   as ONE atomic replace, so the epoch and the late-data cursor always
+   advance together. Compaction (``sinks.maybe_compact`` past
+   ``max_segments``) runs after the marker: a crash inside it never
+   loses the epoch, because readers skip folded originals through
+   ``_COMPACTED_THROUGH`` and replays no-op through the ``_TXNS`` log.
+2. Snapshot epoch meta — full-image state sinks write the folded epoch
+   as a ``meta`` file inside the snapshot version, before the pointer
+   flip, so the marker and the data cannot disagree; an epoch
+   at-or-below it is a replay (``scd2_history_sink`` ``_SCD2_EPOCH``,
+   ``scd2_agg_mv_sink`` ``_MV_EPOCH``, ``growth_accounting_sink``
+   ``_GA_EPOCH``, ``ab_readout_sink`` ``_ABR_EPOCH``,
+   ``token_budget_sink`` ``_TBS_EPOCH``, ``quantile_sketch_sink``
+   ``_QS_EPOCH``, and ``curation_gate_sink``'s selection
+   ``_CGS_SEL_EPOCH``).
+3. ``sinks.append_snapshot(txn_key=...)`` — pure appends: a replayed
+   key finds its committed segment and no-ops (``ivm_join_mv_sink``,
+   ``ivf_append_sink``, ``contamination_gate_sink``, the
+   ``growth_accounting_sink`` MV, and every append of the gates above).
 """
 
 from __future__ import annotations
 
+import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .. import sinks
 
 
 def _read_commit(path: str) -> tuple[int, int] | None:
@@ -41,9 +84,151 @@ def _write_commit(path: str, epoch: int, max_id: int) -> None:
     """Atomically commit a gate epoch: epoch marker and folded-maximum
     id land in one ``os.replace`` so no crash window can separate
     them (the _LATEST pointer discipline)."""
-    from .. import sinks
-
     sinks._atomic_write(path, f"{int(epoch)}:{int(max_id)}")
+
+
+def _monotone_gate(
+    sink: str,
+    state_dir: str,
+    marker: str,
+    id_col: str,
+    step: Callable[[SparkSession, DataFrame, object, str, int], None],
+    compact: dict[str, str | None],
+    max_segments: int,
+) -> Callable[[DataFrame, int], None]:
+    """The ``fold`` of a monotone-id gate: the commit-marker protocol
+    (module docstring, mechanism 1) around the sink's own kernel
+    ``step(spark, batch, lo, txn, epoch_id)``. ``step`` gets the
+    id-deduped batch, its smallest id and the epoch's txn key, and does
+    its appends; after the ``{state_dir}/{marker}`` commit every
+    ``compact`` table is compacted with its ``partition_by``."""
+    marker_path = f"{state_dir}/{marker}"
+
+    def fold(batch_df: DataFrame, epoch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        spark = batch_df.sparkSession
+        os.makedirs(state_dir, exist_ok=True)
+        commit = _read_commit(marker_path)
+        if commit is not None and int(epoch_id) <= commit[0]:
+            return  # replay: every table committed before the marker
+        batch = batch_df.dropDuplicates([id_col])
+        bounds = batch.agg(
+            F.min(id_col).alias("lo"),
+            F.max(id_col).alias("hi"),
+            F.count(F.when(F.col(id_col).isNull(), 1)).alias("nulls"),
+        ).first()
+        if bounds["nulls"]:
+            raise ValueError(
+                f"{sink}: epoch {epoch_id} carries a null {id_col} — a null "
+                "id cannot be ordered against the folded ids; assign ids at "
+                "the door"
+            )
+        if commit is not None and int(bounds["lo"]) <= commit[1]:
+            raise ValueError(
+                f"{sink}: epoch {epoch_id} carries id {bounds['lo']} "
+                f"at-or-below the folded maximum {commit[1]} — late/reordered "
+                "ids break the monotone-id contract; re-key or replay through "
+                "the original epoch instead"
+            )
+        step(spark, batch, bounds["lo"], f"epoch={int(epoch_id)}", int(epoch_id))
+        _write_commit(marker_path, int(epoch_id), int(bounds["hi"]))  # commit point
+        for table_dir, partition_by in compact.items():
+            sinks.maybe_compact(
+                spark, table_dir, max_segments=max_segments, partition_by=partition_by
+            )
+
+    return fold
+
+
+def _prior_segments(
+    spark: SparkSession, table_dir: str, id_col: str, lo, empty_schema: str | None = None
+) -> DataFrame | None:
+    """The committed rows of append table ``table_dir`` with ids below
+    ``lo``, the epoch's smallest id. A table with no segment yet reads
+    as an empty frame of ``empty_schema``, or as None without one."""
+    try:
+        return sinks.read_appended(spark, table_dir).filter(F.col(id_col) < lo)
+    except OSError:
+        return None if empty_schema is None else spark.createDataFrame([], empty_schema)
+
+
+def _split_by_drop(
+    batch: DataFrame,
+    dropped: DataFrame,
+    id_col: str,
+    accepted_dir: str,
+    quarantined_dir: str,
+    txn: str,
+) -> None:
+    """Append the batch rows whose id is in ``dropped`` to
+    ``quarantined_dir`` and the others to ``accepted_dir``."""
+    labeled = (
+        batch.join(dropped.distinct().withColumn("__drop", F.lit(1)), id_col, "left")
+        .withColumn("__keep", F.col("__drop").isNull())
+        .drop("__drop")
+        .localCheckpoint(eager=True)  # batch grain; pins the split
+    )
+    sinks.append_snapshot(
+        labeled.filter(F.col("__keep")).drop("__keep"), accepted_dir, txn_key=txn
+    )
+    sinks.append_snapshot(
+        labeled.filter(~F.col("__keep")).drop("__keep"), quarantined_dir, txn_key=txn
+    )
+
+
+def _budget_fold(
+    spark: SparkSession,
+    sel_dir: str,
+    cutoff_dir: str,
+    meta_key: str,
+    epoch_id: int,
+    new_docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    source_col: str,
+    budget_tokens: int,
+) -> None:
+    """Fold ``new_docs`` into a token-budget snapshot pair: the
+    selection at ``sel_dir`` (epoch meta ``meta_key``) and the
+    per-source cutoff at ``cutoff_dir``. An epoch at-or-below the meta
+    is a replay and a no-op. The cutoff commits before the selection;
+    :func:`token_budget_sink` says why the pair always converges."""
+    from ..operators import corpus as corpus_ops
+
+    marker = sinks.snapshot_meta(sel_dir, meta_key)
+    if marker is not None and int(epoch_id) <= int(marker):
+        return  # replay: this batch is already in the selection
+    try:
+        prior = sinks.read_snapshot(spark, sel_dir)
+    except OSError:
+        prior = spark.createDataFrame(
+            [], f"source string, {id_col} long, quality_x3 int, n_tokens long"
+        )
+    try:
+        prior_cut = sinks.read_snapshot(spark, cutoff_dir)
+    except OSError:
+        id_type = new_docs.schema[id_col].dataType.simpleString()
+        prior_cut = spark.createDataFrame(
+            [], f"source string, cut_quality_x3 int, cut_id {id_type}"
+        )
+    cum = corpus_ops._token_budget_fold_cum(
+        prior, prior_cut, new_docs, text_col, id_col, source_col
+    ).localCheckpoint(eager=True)  # fold grain: budget + batch bounded
+    sel = cum.filter(F.col("cum_tokens") <= budget_tokens).select(
+        "source", F.col(id_col), "quality_x3", "n_tokens", "cum_tokens"
+    )
+    fold_cut = corpus_ops._first_rejected_cutoff(cum, id_col, budget_tokens)
+    sinks.write_snapshot(corpus_ops._cutoff_rank_min(prior_cut, fold_cut), cutoff_dir)
+    sinks.write_snapshot(sel, sel_dir, meta={meta_key: str(int(epoch_id))})
+
+
+def _ivf_model(spark: SparkSession, state_dir: str) -> list:
+    """The at-rest quantizer of an :func:`ivf_retrain_sink` state as
+    ``[(cell, centroid), ...]`` in cell order. Raises OSError before
+    the first model commit."""
+    rows = sinks.read_snapshot(spark, f"{state_dir}/model").orderBy("cell").collect()
+    return [(int(r["cell"]), [float(x) for x in r["c"]]) for r in rows]
 
 
 def file_stream(spark: SparkSession, path: str, schema, fmt: str = "json") -> DataFrame:
@@ -353,7 +538,6 @@ def scd2_history_sink(
     written BEFORE the fold's epoch marker commits, so a crash between
     the two replays the epoch into the same partition (idempotent).
     """
-    from .. import sinks
     from ..operators import windows as W
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
@@ -387,12 +571,11 @@ def scd2_history_sink(
                 # the missing epochs — refuse instead; warn when the
                 # first-epoch provenance marker is absent (table
                 # created before this guard existed).
-                import os as _os
                 import warnings as _warnings
 
                 log_epochs = [
                     int(d.split("=", 1)[1])
-                    for d in _os.listdir(events_dir)
+                    for d in os.listdir(events_dir)
                     if d.startswith("epoch=") and d.split("=", 1)[1].isdigit()
                 ]
                 log_min = min(log_epochs) if log_epochs else int(epoch_id)
@@ -478,7 +661,6 @@ def scd2_agg_mv_sink(
     no-op on both. Batch-grain twin: ``scd2_agg_mv`` in the registry,
     oracle-checked against one full recompute.
     """
-    from .. import sinks
     from ..operators import ivm
 
     if measures is None:
@@ -604,8 +786,6 @@ def growth_accounting_sink(
     """
     import datetime as _dt
     import warnings as _warnings
-
-    from .. import sinks
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
@@ -739,7 +919,6 @@ def ivm_join_mv_sink(
     same contract delta_join_maintain documents); dimension updates
     or fact deletes route through a key-scoped rebuild instead.
     """
-    from .. import sinks
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
@@ -885,7 +1064,6 @@ def ab_readout_sink(
     decimal moments; every float in the MV is one shared expression
     over those moments (the experiment.ab_readout discipline).
     """
-    from .. import sinks
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
@@ -983,43 +1161,20 @@ def token_budget_sink(
     must be disjoint (the minhash_incremental contract — re-sends of
     the same doc under a new epoch are new documents to this sink).
     """
-    from .. import sinks
-    from ..operators import corpus as corpus_ops
-
-    cutoff_dir = f"{state_dir}_cutoff"
-
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
-        epoch_marker = sinks.snapshot_meta(state_dir, "_TBS_EPOCH")
-        if epoch_marker is not None and int(epoch_id) <= int(epoch_marker):
-            return  # replay: this batch is already in the selection
-        batch = batch_df.dropDuplicates([source_col, id_col])
-        try:
-            prior = sinks.read_snapshot(spark, state_dir)
-        except OSError:
-            prior = spark.createDataFrame(
-                [], f"source string, {id_col} long, quality_x3 int, n_tokens long"
-            )
-        id_type = batch_df.schema[id_col].dataType.simpleString()
-        try:
-            prior_cut = sinks.read_snapshot(spark, cutoff_dir)
-        except OSError:
-            prior_cut = spark.createDataFrame(
-                [], f"source string, cut_quality_x3 int, cut_id {id_type}"
-            )
-        cum = corpus_ops._token_budget_fold_cum(
-            prior, prior_cut, batch, text_col, id_col, source_col
-        ).localCheckpoint(eager=True)  # fold grain: budget + batch bounded
-        sel = cum.filter(F.col("cum_tokens") <= budget_tokens).select(
-            "source", F.col(id_col), "quality_x3", "n_tokens", "cum_tokens"
-        )
-        fold_cut = corpus_ops._first_rejected_cutoff(cum, id_col, budget_tokens)
-        new_cut = corpus_ops._cutoff_rank_min(prior_cut, fold_cut)
-        sinks.write_snapshot(new_cut, cutoff_dir)  # cutoff first — see docstring
-        sinks.write_snapshot(
-            sel, state_dir, meta={"_TBS_EPOCH": str(int(epoch_id))}
+        _budget_fold(
+            batch_df.sparkSession,
+            state_dir,
+            f"{state_dir}_cutoff",
+            "_TBS_EPOCH",
+            epoch_id,
+            batch_df.dropDuplicates([source_col, id_col]),
+            text_col,
+            id_col,
+            source_col,
+            budget_tokens,
         )
 
     return fold
@@ -1053,23 +1208,10 @@ def minhash_gate_sink(
     is still caught; that is what makes the labels equal the batch
     twin over all docs ever folded (the pinned pytest law).
 
-    MONOTONE-ID CONTRACT: batch ids must be strictly above every id
-    previously folded (ids are assigned at the door in an ingest
-    pipeline). A new epoch violating it is LATE/REORDERED DATA and the
-    sink refuses (ValueError) — the growth_accounting day-cursor
-    discipline — because under out-of-order ids "has a smaller-id
-    near-dup" would depend on arrival order and the batch-twin law
-    would silently break.
-
-    Exactly-once: a ``_MHG_COMMIT`` marker (written LAST, carrying
-    ``epoch:maxid`` in ONE atomic replace — the late-data cursor can
-    never advance without the epoch, ADVICE r13) makes a replayed
-    epoch a strict no-op; each of the four appends also
-    carries ``txn_key=epoch`` so a crash mid-epoch replays into
-    committed-segment no-ops, and the prior relations are read with an
-    ``id < min(batch)`` range filter (partition-prunable) so a
-    half-committed previous attempt of the SAME epoch can never pair
-    the batch against its own crashed copy.
+    Monotone-id contract and exactly-once (``_MHG_COMMIT``): the
+    commit-marker protocol in the module docstring. Under
+    out-of-order ids "has a smaller-id near-dup" would depend on
+    arrival order, so late/reordered ids refuse (ValueError).
 
     Scale: per-epoch cost is O(batch shingles + band-join against the
     index) — the corpus is touched through the (bucketable) band index
@@ -1078,55 +1220,21 @@ def minhash_gate_sink(
     each table once its committed segment count exceeds
     ``max_segments`` (r13 verdict item 2: over a production day of
     micro-batches the O(epochs) segment listing/footer overhead is the
-    bound that six-epoch receipts cannot see). Compaction runs AFTER
-    the epoch's commit marker (pure maintenance — a crash inside it
-    never loses the epoch: readers skip folded originals through
-    ``_COMPACTED_THROUGH``, and replayed epochs no-op through the
-    table-level ``_TXNS`` log that survives the fold).
+    bound that six-epoch receipts cannot see).
     """
-    import os
-
-    from .. import sinks
     from ..operators import dedup as dedup_ops
 
     ex_dir = f"{state_dir}/ex"
     idx_dir = f"{state_dir}/idx"
-    commit_marker_path = f"{state_dir}/_MHG_COMMIT"
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        os.makedirs(state_dir, exist_ok=True)
-        commit = _read_commit(commit_marker_path)
-        if commit is not None and int(epoch_id) <= commit[0]:
-            return  # replay: every table committed before the marker
-        batch = batch_df.dropDuplicates([id_col])
-        bounds = batch.agg(
-            F.min(F.col(id_col)).alias("lo"), F.max(F.col(id_col)).alias("hi")
-        ).first()
-        max_seen = commit[1] if commit is not None else None
-        if max_seen is not None and int(bounds["lo"]) <= max_seen:
-            raise ValueError(
-                f"minhash_gate_sink: epoch {epoch_id} carries id "
-                f"{bounds['lo']} at-or-below the folded maximum {max_seen} "
-                "— late/reordered ids break the keep-first-by-id law; "
-                "re-key or replay through the original epoch instead"
-            )
-        try:
-            prior_ex = sinks.read_appended(spark, ex_dir).filter(
-                F.col(id_col) < bounds["lo"]
-            )
-            prior_idx = sinks.read_appended(spark, idx_dir).filter(
-                F.col(id_col) < bounds["lo"]
-            )
-        except OSError:
-            prior_ex = spark.createDataFrame(
-                [], f"{id_col} long, __h long, __hp long"
-            )
-            prior_idx = spark.createDataFrame(
-                [], f"{id_col} long, __nsh long, band_id int, band_hash long"
-            )
+    def step(spark, batch: DataFrame, lo, txn: str, epoch_id: int) -> None:
+        prior_ex = _prior_segments(
+            spark, ex_dir, id_col, lo, f"{id_col} long, __h long, __hp long"
+        )
+        prior_idx = _prior_segments(
+            spark, idx_dir, id_col, lo,
+            f"{id_col} long, __nsh long, band_id int, band_hash long",
+        )
         # batch-grain, materialized once: shared by the pair kernel AND
         # the segment appends (the kernel's own persist/unpersist cycle
         # would otherwise recompute the shingling for the appends)
@@ -1149,33 +1257,17 @@ def minhash_gate_sink(
             ex_new=ex_new,
             idx_new=idx_new,
         )
-        dropped = (
-            pairs.select(F.col("id_b").alias(id_col))
-            .distinct()
-            .withColumn("__drop", F.lit(1))
-        )
-        labeled = (
-            batch.join(dropped, id_col, "left")
-            .withColumn("__keep", F.col("__drop").isNull())
-            .drop("__drop")
-            .localCheckpoint(eager=True)  # batch grain; pins the split
-        )
-        txn = f"epoch={int(epoch_id)}"
         sinks.append_snapshot(ex_new, ex_dir, txn_key=txn)
         sinks.append_snapshot(idx_new, idx_dir, txn_key=txn)
-        sinks.append_snapshot(
-            labeled.filter(F.col("__keep")).drop("__keep"), accepted_dir, txn_key=txn
+        _split_by_drop(
+            batch, pairs.select(F.col("id_b").alias(id_col)), id_col,
+            accepted_dir, quarantined_dir, txn,
         )
-        sinks.append_snapshot(
-            labeled.filter(~F.col("__keep")).drop("__keep"),
-            quarantined_dir,
-            txn_key=txn,
-        )
-        _write_commit(commit_marker_path, int(epoch_id), int(bounds["hi"]))  # commit point
-        for d in (ex_dir, idx_dir, accepted_dir, quarantined_dir):
-            sinks.maybe_compact(spark, d, max_segments=max_segments)
 
-    return fold
+    return _monotone_gate(
+        "minhash_gate_sink", state_dir, "_MHG_COMMIT", id_col, step,
+        dict.fromkeys((ex_dir, idx_dir, accepted_dir, quarantined_dir)), max_segments,
+    )
 
 
 def suffix_span_sink(
@@ -1210,65 +1302,28 @@ def suffix_span_sink(
     which is the contract the pinned law states (appended spans ==
     the full union recompute restricted to each epoch's ids).
 
-    MONOTONE-ID CONTRACT + exactly-once: identical to
-    minhash_gate_sink — late/reordered ids refuse (ValueError);
-    ``_SSS_COMMIT`` (``epoch:maxid``, one atomic replace — ADVICE r13)
-    written last makes replays strict no-ops; per-table
-    ``txn_key`` heals crashes mid-epoch; prior segments are read under
-    an ``id < min(batch)`` range filter so a half-committed attempt
-    never probes the batch against its own crashed copy.
+    Monotone-id contract and exactly-once (``_SSS_COMMIT``): the
+    commit-marker protocol in the module docstring; late/reordered ids
+    would break the as-of-epoch mask law, so they refuse (ValueError).
 
     Scale: per-epoch cost is O(batch tokens + hash probe of the window
     segments + positional re-slice of hash-matched docs); corpus text
     is read only for docs holding a candidate window. All three
     tables compact through ``sinks.maybe_compact`` past
-    ``max_segments`` committed segments, after the commit marker
-    (replays survive the fold through the ``_TXNS`` log; crash inside
-    a fold serves correctly through ``_COMPACTED_THROUGH``).
+    ``max_segments`` committed segments.
     """
-    import os
-
-    from .. import sinks
     from ..operators import dedup as dedup_ops
 
     win_dir = f"{state_dir}/win"
     docs_dir = f"{state_dir}/docs"
-    commit_marker_path = f"{state_dir}/_SSS_COMMIT"
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        os.makedirs(state_dir, exist_ok=True)
-        commit = _read_commit(commit_marker_path)
-        if commit is not None and int(epoch_id) <= commit[0]:
-            return  # replay: every table committed before the marker
-        batch = batch_df.dropDuplicates([id_col])
-        bounds = batch.agg(
-            F.min(F.col(id_col)).alias("lo"), F.max(F.col(id_col)).alias("hi")
-        ).first()
-        max_seen = commit[1] if commit is not None else None
-        if max_seen is not None and int(bounds["lo"]) <= max_seen:
-            raise ValueError(
-                f"suffix_span_sink: epoch {epoch_id} carries id "
-                f"{bounds['lo']} at-or-below the folded maximum {max_seen} "
-                "— late/reordered ids break the as-of-epoch mask law; "
-                "re-key or replay through the original epoch instead"
-            )
-        try:
-            prior_win = sinks.read_appended(spark, win_dir).filter(
-                F.col(id_col) < bounds["lo"]
-            )
-            prior_docs = sinks.read_appended(spark, docs_dir).filter(
-                F.col(id_col) < bounds["lo"]
-            )
-        except OSError:
-            prior_win = spark.createDataFrame(
-                [], f"{id_col} long, pos int, __h long"
-            )
-            prior_docs = spark.createDataFrame(
-                [], f"{id_col} long, {text_col} string"
-            )
+    def step(spark, batch: DataFrame, lo, txn: str, epoch_id: int) -> None:
+        prior_win = _prior_segments(
+            spark, win_dir, id_col, lo, f"{id_col} long, pos int, __h long"
+        )
+        prior_docs = _prior_segments(
+            spark, docs_dir, id_col, lo, f"{id_col} long, {text_col} string"
+        )
         win_new = dedup_ops.suffix_window_table(
             batch, text_col, id_col, min_tokens, max_tokens
         ).localCheckpoint(eager=True)  # batch-window grain: probe + append
@@ -1282,15 +1337,14 @@ def suffix_span_sink(
             win_new=win_new,
             corpus_docs=prior_docs,
         )
-        txn = f"epoch={int(epoch_id)}"
         sinks.append_snapshot(win_new, win_dir, txn_key=txn)
         sinks.append_snapshot(batch.select(id_col, text_col), docs_dir, txn_key=txn)
         sinks.append_snapshot(spans, spans_dir, txn_key=txn)
-        _write_commit(commit_marker_path, int(epoch_id), int(bounds["hi"]))  # commit point
-        for d in (win_dir, docs_dir, spans_dir):
-            sinks.maybe_compact(spark, d, max_segments=max_segments)
 
-    return fold
+    return _monotone_gate(
+        "suffix_span_sink", state_dir, "_SSS_COMMIT", id_col, step,
+        dict.fromkeys((win_dir, docs_dir, spans_dir)), max_segments,
+    )
 
 
 def ivf_append_sink(
@@ -1316,7 +1370,6 @@ def ivf_append_sink(
     never derived from the stream (a shifting quantizer would scatter
     one logical cell across segments and break pruning).
     """
-    from .. import sinks
     from ..operators import similarity as sim_ops
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
@@ -1371,12 +1424,12 @@ def ivf_retrain_sink(
     through the ``_TXNS`` log). The serve path
     (:func:`ivf_serve_top_k`) then prunes by the NEW model's cells.
 
-    Exactly-once: ``_IVR_COMMIT`` (``epoch:maxid``, one atomic
-    replace) + per-table txn keys; monotone-id contract as in every
-    gate sink. A crash between the model-snapshot advance and the
-    index rebuild leaves a version-skewed pair; the uncommitted epoch
-    replays from the top and converges (single-writer, the MV-sink
-    staleness window — ``scd2_agg_mv_sink``'s discipline).
+    Monotone-id contract and exactly-once (``_IVR_COMMIT``): the
+    commit-marker protocol in the module docstring. A crash between
+    the model-snapshot advance and the index rebuild leaves a
+    version-skewed pair; the uncommitted epoch replays from the top
+    and converges (single-writer, the MV-sink staleness window —
+    ``scd2_agg_mv_sink``'s discipline).
 
     Scale: the per-epoch append is O(batch); the decision is model-
     grain scalars plus the CAPPED query-batch audits (the documented
@@ -1385,22 +1438,11 @@ def ivf_retrain_sink(
     paid only when the decision trips, which is the entire point of
     deciding instead of retraining on a timer.
     """
-    import os
-
-    from .. import sinks
     from ..operators import similarity as sim_ops
 
     model_dir = f"{state_dir}/model"
     idx_dir = f"{state_dir}/idx"
     audit_dir = f"{state_dir}/audit"
-    commit_marker_path = f"{state_dir}/_IVR_COMMIT"
-
-    def _model_cents(spark) -> list | None:
-        try:
-            rows = sinks.read_snapshot(spark, model_dir).orderBy("cell").collect()
-        except OSError:
-            return None
-        return [(int(r["cell"]), [float(x) for x in r["c"]]) for r in rows]
 
     def _write_model(spark, cents: list, epoch_id: int) -> int:
         rows = spark.createDataFrame(
@@ -1411,39 +1453,19 @@ def ivf_retrain_sink(
             rows, model_dir, meta={"_IVF_MODEL_EPOCH": str(int(epoch_id))}
         )
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        os.makedirs(state_dir, exist_ok=True)
-        commit = _read_commit(commit_marker_path)
-        if commit is not None and int(epoch_id) <= commit[0]:
-            return  # replay: every table committed before the marker
-        batch = batch_df.dropDuplicates([id_col]).select(
+    def step(spark, batch: DataFrame, lo, txn: str, epoch_id: int) -> None:
+        batch = batch.select(
             F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
         )
-        bounds = batch.agg(
-            F.min(F.col(id_col)).alias("lo"), F.max(F.col(id_col)).alias("hi")
-        ).first()
-        max_seen = commit[1] if commit is not None else None
-        if max_seen is not None and int(bounds["lo"]) <= max_seen:
-            raise ValueError(
-                f"ivf_retrain_sink: epoch {epoch_id} carries id "
-                f"{bounds['lo']} at-or-below the folded maximum {max_seen} "
-                "— late/reordered ids break the at-rest model lineage; "
-                "re-key or replay through the original epoch instead"
-            )
-        txn = f"epoch={int(epoch_id)}"
-        cents = _model_cents(spark)
-        if cents is None:
+        try:
+            cents = _ivf_model(spark, state_dir)
+        except OSError:
             cents = sim_ops._centroids(batch, vec_col, id_col, n_cells)
             _write_model(spark, cents, epoch_id)  # bootstrap model v1
         assigned = sim_ops.ivf_append(batch, vec_col, id_col, cents)
         sinks.append_snapshot(assigned, idx_dir, partition_by="cell", txn_key=txn)
-        prior = (
-            sinks.read_appended(spark, idx_dir)
-            .filter(F.col(id_col) < bounds["lo"])
-            .select(F.col(id_col), F.col(vec_col))
+        prior = _prior_segments(spark, idx_dir, id_col, lo).select(
+            F.col(id_col), F.col(vec_col)
         )
         n_prior = prior.count()
         if n_prior > 0 and int(epoch_id) % max(int(decide_every), 1) == 0:
@@ -1476,11 +1498,11 @@ def ivf_retrain_sink(
                         df.drop("cell"), vec_col, id_col, fresh
                     ),
                 )
-        _write_commit(commit_marker_path, int(epoch_id), int(bounds["hi"]))  # commit point
-        sinks.maybe_compact(spark, idx_dir, max_segments=max_segments, partition_by="cell")
-        sinks.maybe_compact(spark, audit_dir, max_segments=max_segments)
 
-    return fold
+    return _monotone_gate(
+        "ivf_retrain_sink", state_dir, "_IVR_COMMIT", id_col, step,
+        {idx_dir: "cell", audit_dir: None}, max_segments,
+    )
 
 
 def ivf_serve_top_k(
@@ -1500,12 +1522,11 @@ def ivf_serve_top_k(
     ``similarity.ivf_top_k`` over all folded vectors whenever the
     at-rest model equals the batch convention's frozen centroids —
     which the retrain arm maintains by construction."""
-    from .. import sinks
     from ..operators import similarity as sim_ops
 
-    rows = sinks.read_snapshot(spark, f"{state_dir}/model").orderBy("cell").collect()
-    cents = [(int(r["cell"]), [float(x) for x in r["c"]]) for r in rows]
-    probe = sim_ops.probe_cells(cents, [float(x) for x in query_vec], n_probe)
+    probe = sim_ops.probe_cells(
+        _ivf_model(spark, state_dir), [float(x) for x in query_vec], n_probe
+    )
     idx = sinks.read_appended(spark, f"{state_dir}/idx").filter(F.col("cell").isin(probe))
     return sim_ops.brute_force_top_k(idx, vec_col, id_col, [float(x) for x in query_vec], k)
 
@@ -1546,7 +1567,6 @@ def contamination_gate_sink(
     Documents with no shingles (shorter than k tokens) have nothing
     to match and are accepted with zero stats.
     """
-    from .. import sinks
     from ..functions.text import shingles
     from ..operators.bloom import bloom_prune, build_bloom
 
@@ -1647,13 +1667,9 @@ def semantic_gate_sink(
     Cosines are rounded to 6 decimals exactly as the batch twin does,
     so the pinned-equal pytest law is bit-for-bit.
 
-    MONOTONE-ID CONTRACT + exactly-once: identical to
-    minhash_gate_sink — late/reordered ids refuse (ValueError); a
-    ``_SMG_COMMIT`` marker (``epoch:maxid``, ONE atomic replace) makes
-    replays strict no-ops; per-table ``txn_key`` heals crashes
-    mid-epoch; the prior assignment is read under an
-    ``id < min(batch)`` range filter. All three tables compact through
-    ``sinks.maybe_compact`` past ``max_segments``.
+    Monotone-id contract and exactly-once (``_SMG_COMMIT``): the
+    commit-marker protocol in the module docstring. All three tables
+    compact through ``sinks.maybe_compact`` past ``max_segments``.
 
     Scale: per-epoch cost is |batch| × (cluster-local at-rest + batch)
     dot products confined to the cluster join key — never corpus²; the
@@ -1661,36 +1677,13 @@ def semantic_gate_sink(
     (cluster-key join, partition-prunable when the segments are laid
     out by cluster).
     """
-    import os
-
-    from .. import sinks
     from ..functions.vector import dot, norm
     from ..operators import similarity as sim_ops
 
     asg_dir = f"{state_dir}/asg"
-    commit_marker_path = f"{state_dir}/_SMG_COMMIT"
     cents = centroids.localCheckpoint(eager=True)  # frozen k·dim model
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        os.makedirs(state_dir, exist_ok=True)
-        commit = _read_commit(commit_marker_path)
-        if commit is not None and int(epoch_id) <= commit[0]:
-            return  # replay: every table committed before the marker
-        batch = batch_df.dropDuplicates([id_col])
-        bounds = batch.agg(
-            F.min(F.col(id_col)).alias("lo"), F.max(F.col(id_col)).alias("hi")
-        ).first()
-        max_seen = commit[1] if commit is not None else None
-        if max_seen is not None and int(bounds["lo"]) <= max_seen:
-            raise ValueError(
-                f"semantic_gate_sink: epoch {epoch_id} carries id "
-                f"{bounds['lo']} at-or-below the folded maximum {max_seen} "
-                "— late/reordered ids break the keep-first-by-id law; "
-                "re-key or replay through the original epoch instead"
-            )
+    def step(spark, batch: DataFrame, lo, txn: str, epoch_id: int) -> None:
         assigned = sim_ops.nearest_centroid_assign(batch, vec_col, id_col, cents)
         base = (
             batch.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col))
@@ -1698,12 +1691,7 @@ def semantic_gate_sink(
             .withColumn("__nrm", norm(vec_col))
             .localCheckpoint(eager=True)  # batch grain: both prune arms + append
         )
-        try:
-            prior = sinks.read_appended(spark, asg_dir).filter(
-                F.col(id_col) < bounds["lo"]
-            )
-        except OSError:
-            prior = None
+        prior = _prior_segments(spark, asg_dir, id_col, lo)
         a = base.select(
             F.col("cluster"),
             F.col(id_col).alias("__ida"),
@@ -1743,28 +1731,13 @@ def semantic_gate_sink(
                 .select(F.col("__ida").alias(id_col))
             )
             dropped = dropped.unionByName(drop_prior)
-        dropped = dropped.distinct().withColumn("__drop", F.lit(1))
-        labeled = (
-            batch.join(dropped, id_col, "left")
-            .withColumn("__keep", F.col("__drop").isNull())
-            .drop("__drop")
-            .localCheckpoint(eager=True)  # batch grain; pins the split
-        )
-        txn = f"epoch={int(epoch_id)}"
         sinks.append_snapshot(base, asg_dir, txn_key=txn)
-        sinks.append_snapshot(
-            labeled.filter(F.col("__keep")).drop("__keep"), accepted_dir, txn_key=txn
-        )
-        sinks.append_snapshot(
-            labeled.filter(~F.col("__keep")).drop("__keep"),
-            quarantined_dir,
-            txn_key=txn,
-        )
-        _write_commit(commit_marker_path, int(epoch_id), int(bounds["hi"]))  # commit point
-        for d in (asg_dir, accepted_dir, quarantined_dir):
-            sinks.maybe_compact(spark, d, max_segments=max_segments)
+        _split_by_drop(batch, dropped, id_col, accepted_dir, quarantined_dir, txn)
 
-    return fold
+    return _monotone_gate(
+        "semantic_gate_sink", state_dir, "_SMG_COMMIT", id_col, step,
+        dict.fromkeys((asg_dir, accepted_dir, quarantined_dir)), max_segments,
+    )
 
 
 def quantile_sketch_sink(
@@ -1801,7 +1774,6 @@ def quantile_sketch_sink(
     forever on replay (r12 advice). Unlike the day-cursor growth sink
     there is NO late-data refusal: bucket counters fold in any order.
     """
-    from .. import sinks
     from ..operators import sketch as sketch_ops
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
@@ -1981,25 +1953,19 @@ def curation_gate_sink(
       a lower-id eval doc win a fingerprint, so the gate must too —
       ids are one space across eval ∪ stream.
 
-    Exactly-once: ``_CGS_COMMIT`` (``epoch:maxid``, ONE atomic
-    replace) + per-table txn keys + the ``id < min(batch)`` range
-    filter on at-rest reads; append tables compact past
-    ``max_segments``. Pinned law: after EVERY epoch
+    Monotone-id contract and exactly-once (``_CGS_COMMIT``): the
+    commit-marker protocol in the module docstring; append tables
+    compact past ``max_segments``. Pinned law: after EVERY epoch
     ``curation_gate_funnel`` ≡ ``curation_funnel`` over all docs ever
     folded plus the frozen eval set, bit-for-bit.
     """
-    import os
-
-    from .. import sinks
     from ..functions import text as text_fns
     from ..operators import bloom as bloom_ops
-    from ..operators import corpus as corpus_ops
 
     fp_dir = f"{state_dir}/fp"
     levels_dir = f"{state_dir}/levels"
     sel_dir = f"{state_dir}/sel"
     cutoff_dir = f"{state_dir}/sel_cutoff"
-    commit_marker_path = f"{state_dir}/_CGS_COMMIT"
 
     eval_sh = (
         eval_docs.select(
@@ -2029,26 +1995,7 @@ def curation_gate_sink(
         .localCheckpoint(eager=True)
     )
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        os.makedirs(state_dir, exist_ok=True)
-        commit = _read_commit(commit_marker_path)
-        if commit is not None and int(epoch_id) <= commit[0]:
-            return  # replay: every table committed before the marker
-        batch_raw = batch_df.dropDuplicates([id_col])
-        bounds = batch_raw.agg(
-            F.min(F.col(id_col)).alias("lo"), F.max(F.col(id_col)).alias("hi")
-        ).first()
-        max_seen = commit[1] if commit is not None else None
-        if max_seen is not None and int(bounds["lo"]) <= max_seen:
-            raise ValueError(
-                f"curation_gate_sink: epoch {epoch_id} carries id "
-                f"{bounds['lo']} at-or-below the folded maximum {max_seen} "
-                "— late/reordered ids break the keep-first-by-id dedup law; "
-                "re-key or replay through the original epoch instead"
-            )
+    def step(spark, batch_raw: DataFrame, lo, txn: str, epoch_id: int) -> None:
         no_eval = F.assert_true(
             ~F.col(source_col).eqNullSafe(F.lit(eval_source)),
             F.lit(
@@ -2071,12 +2018,7 @@ def curation_gate_sink(
             (F.col("__q3") >= min_quality_x3)
             & F.col("__lang").eqNullSafe(F.lit(keep_lang))
         )
-        try:
-            rest_fp = sinks.read_appended(spark, fp_dir).filter(
-                F.col(id_col) < bounds["lo"]
-            )
-        except OSError:
-            rest_fp = None
+        rest_fp = _prior_segments(spark, fp_dir, id_col, lo)
         if rest_fp is not None:
             bbloom = bloom_ops.build_bloom(b_s2, "__fp")
             cand = bloom_ops.bloom_prune(
@@ -2147,7 +2089,6 @@ def curation_gate_sink(
             .localCheckpoint(eager=True)  # pins the split for all writes
         )
 
-        txn = f"epoch={int(epoch_id)}"
         sinks.append_snapshot(
             lab.filter(F.col("lvl4") >= 3).select("fp", F.col(id_col)),
             fp_dir,
@@ -2170,49 +2111,23 @@ def curation_gate_sink(
             quarantined_dir,
             txn_key=txn,
         )
+        _budget_fold(
+            spark,
+            sel_dir,
+            cutoff_dir,
+            "_CGS_SEL_EPOCH",
+            epoch_id,
+            batch_raw.join(admitted.select(id_col), id_col, "semi"),
+            text_col,
+            id_col,
+            source_col,
+            budget_tokens,
+        )
 
-        sel_epoch = sinks.snapshot_meta(sel_dir, "_CGS_SEL_EPOCH")
-        if sel_epoch is None or int(sel_epoch) < int(epoch_id):
-            batch_new_docs = batch_raw.join(
-                lab.filter(F.col("lvl4") == 4).select(id_col), id_col, "semi"
-            )
-            try:
-                prior_sel = sinks.read_snapshot(spark, sel_dir)
-            except OSError:
-                prior_sel = spark.createDataFrame(
-                    [], f"source string, {id_col} long, quality_x3 int, n_tokens long"
-                )
-            id_type = batch_df.schema[id_col].dataType.simpleString()
-            try:
-                prior_cut = sinks.read_snapshot(spark, cutoff_dir)
-            except OSError:
-                prior_cut = spark.createDataFrame(
-                    [], f"source string, cut_quality_x3 int, cut_id {id_type}"
-                )
-            cum = corpus_ops._token_budget_fold_cum(
-                prior_sel.select(
-                    "source", F.col(id_col), "quality_x3", "n_tokens"
-                ),
-                prior_cut,
-                batch_new_docs,
-                text_col,
-                id_col,
-                source_col,
-            ).localCheckpoint(eager=True)  # fold grain: budget + batch bounded
-            sel = cum.filter(F.col("cum_tokens") <= budget_tokens).select(
-                "source", F.col(id_col), "quality_x3", "n_tokens", "cum_tokens"
-            )
-            fold_cut = corpus_ops._first_rejected_cutoff(cum, id_col, budget_tokens)
-            new_cut = corpus_ops._cutoff_rank_min(prior_cut, fold_cut)
-            sinks.write_snapshot(new_cut, cutoff_dir)  # cutoff first — converges
-            sinks.write_snapshot(
-                sel, sel_dir, meta={"_CGS_SEL_EPOCH": str(int(epoch_id))}
-            )
-        _write_commit(commit_marker_path, int(epoch_id), int(bounds["hi"]))  # commit
-        for d in (fp_dir, levels_dir, accepted_dir, quarantined_dir):
-            sinks.maybe_compact(spark, d, max_segments=max_segments)
-
-    return fold
+    return _monotone_gate(
+        "curation_gate_sink", state_dir, "_CGS_COMMIT", id_col, step,
+        dict.fromkeys((fp_dir, levels_dir, accepted_dir, quarantined_dir)), max_segments,
+    )
 
 
 def curation_gate_funnel(
@@ -2225,7 +2140,6 @@ def curation_gate_funnel(
     ever folded plus the frozen eval set's raw rows EXCLUDED — the
     gate never sees eval docs, so its funnel is the train-side funnel
     (the pinned pytest law constructs the twin accordingly)."""
-    from .. import sinks
     from ..plans.corpus_pipeline import _funnel_rows
 
     levels = sinks.read_appended(spark, f"{state_dir}/levels")
