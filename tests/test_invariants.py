@@ -606,7 +606,9 @@ def test_histogram_table_excludes_nulls(spark):
 def test_ivf_probe_sweep_recall_monotone_and_bounded(spark, sf_dir):
     """Tuning-table sanity: recall@k is non-decreasing in n_probe
     (probing more cells can only add candidates), every recall is in
-    [0, 1], and hit sums are consistent with the reported mean."""
+    [0, 1], and hit sums are consistent with the reported mean. Each
+    sweep row is the batch total of ann_recall_eval at that n_probe:
+    same hit sum, same query count."""
     from z316_sales_data_pipeline_spark.operators import similarity
     from z316_sales_data_pipeline_spark.sources.tables import load_table
 
@@ -625,6 +627,11 @@ def test_ivf_probe_sweep_recall_monotone_and_bounded(spark, sf_dir):
         assert r["mean_recall_at_k"] >= last
         last = r["mean_recall_at_k"]
         assert r["mean_recall_at_k"] == round(r["sum_hits"] / (r["n_queries"] * 10), 6)
+        per_query = similarity.ann_recall_eval(
+            emb, "embedding", "vec_id", query_mod=100, k=10, n_cells=16, n_probe=p
+        ).collect()
+        assert r["sum_hits"] == sum(q["n_hits"] for q in per_query), p
+        assert r["n_queries"] == len(per_query), p
     assert rows[8]["sum_hits"] > 0
 
 
@@ -1607,7 +1614,10 @@ def test_rrf_fuse_ranks_and_fold(spark):
 
 def test_ndcg_eval_bounds_and_perfect_query(spark, sf_dir):
     """nDCG is in [0, 1]; a query whose probe returns the exact top-10
-    in order scores exactly 1; dcg_micro is a nonnegative integer."""
+    in order scores exactly 1; dcg_micro is a nonnegative integer.
+    Against ann_recall_eval on the same configuration, per query: DCG
+    is 0 exactly when no hit is retrieved, and nDCG 1 means all 10
+    exact neighbours were retrieved."""
     from z316_sales_data_pipeline_spark.operators import similarity
     from z316_sales_data_pipeline_spark.sources.tables import load_table
 
@@ -1616,6 +1626,14 @@ def test_ndcg_eval_bounds_and_perfect_query(spark, sf_dir):
     assert rows
     for r in rows:
         assert 0.0 <= r["ndcg"] <= 1.0 and r["dcg_micro"] >= 0
+    hits = {
+        r["query_id"]: r["n_hits"]
+        for r in similarity.ann_recall_eval(emb, "embedding", "vec_id", query_mod=100).collect()
+    }
+    assert sorted(hits) == sorted(r["query_id"] for r in rows)
+    for r in rows:
+        assert (r["dcg_micro"] == 0) == (hits[r["query_id"]] == 0), r
+        assert r["ndcg"] != 1.0 or hits[r["query_id"]] == 10, r
 
 
 def test_pearson_exact_known_values(spark):

@@ -747,6 +747,84 @@ def test_streaming_epoch_protocol_has_one_home():
     assert len(fold_cum_calls) == 1, fold_cum_calls
 
 
+def test_ann_audit_kernel_has_one_home():
+    """Source guard: in ``operators/similarity.py`` the ANN audit
+    pipeline (module docstring) has one home, so per-audit copies
+    cannot quietly come back. Counted by enclosing function (qualified
+    by its enclosing functions): ``_query_sample_pred`` is called from
+    one function, ``Window.partitionBy("query_id")`` appears in one
+    function, and so does ``F.array_position``."""
+    import ast
+    import pathlib
+
+    from z316_sales_data_pipeline_spark.operators import similarity as S
+
+    tree = ast.parse(pathlib.Path(S.__file__).read_text())
+    homes: dict[str, set[str]] = {
+        "_query_sample_pred call": set(),
+        'Window.partitionBy("query_id")': set(),
+        "F.array_position": set(),
+    }
+
+    def scan(node, where: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            inner = where
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = f"{where}.{child.name}" if where else child.name
+            if isinstance(child, ast.Call):
+                func = child.func
+                if isinstance(func, ast.Name) and func.id == "_query_sample_pred":
+                    homes["_query_sample_pred call"].add(where)
+                if (
+                    isinstance(func, ast.Attribute)
+                    and func.attr == "partitionBy"
+                    and isinstance(func.value, ast.Name)
+                    and func.value.id == "Window"
+                    and any(
+                        isinstance(a, ast.Constant) and a.value == "query_id" for a in child.args
+                    )
+                ):
+                    homes['Window.partitionBy("query_id")'].add(where)
+            if (
+                isinstance(child, ast.Attribute)
+                and child.attr == "array_position"
+                and isinstance(child.value, ast.Name)
+                and child.value.id == "F"
+            ):
+                homes["F.array_position"].add(where)
+            scan(child, inner)
+
+    scan(tree, "")
+    spread = {what: sorted(fns) for what, fns in homes.items() if len(fns) != 1}
+    assert not spread, spread
+
+
+def test_ivf_retrain_plan_releases_its_pins(spark, sf_dir):
+    """``ivf_retrain_plan`` returns a driver-built row, so it releases
+    every frame it pinned once its scalars are collected: a streaming
+    caller runs it on every decision epoch, and a leaked corpus-grain
+    pin per call would pile up for the life of the stream. Two calls
+    on distinct splits (the second forced through the retrain arm)
+    add no persistent RDD to the SparkContext. Compared by RDD id, not
+    by count: late in a long session the ContextCleaner reclaims
+    unrelated persisted RDDs, so the count alone can drop meanwhile."""
+    from z316_sales_data_pipeline_spark.operators import similarity as S
+    from z316_sales_data_pipeline_spark.sources.tables import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    for cut, recall_thresh_micro in ((300, 900_000), (400, 1_000_001)):
+        corpus = emb.filter(F.col("vec_id") < cut)
+        batch = emb.filter((F.col("vec_id") >= cut) & (F.col("vec_id") < cut + 50))
+        row = S.ivf_retrain_plan(
+            corpus, batch, "embedding", "vec_id", recall_thresh_micro=recall_thresh_micro
+        ).first()
+        assert row["n_queries"] > 0
+    assert row["retrain"] and row["fresh_recall_micro"] is not None
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+
+
 def _jobs_run(spark, fn) -> int:
     """Spark jobs ``fn()`` submits, counted in the status store.
 
