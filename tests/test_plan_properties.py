@@ -936,3 +936,288 @@ def test_run_sales_pipeline_job_budget(spark, sf_dir, tmp_path):
     pipeline.run_sales_pipeline(spark, sf_dir, str(tmp_path / "warm"))
     n = _jobs_run(spark, lambda: pipeline.run_sales_pipeline(spark, sf_dir, str(tmp_path / "lake")))
     assert n <= 10, f"run_sales_pipeline ran {n} Spark jobs, budget 10"
+
+
+def _webhook_epoch(spark, root, produto, doc: dict):
+    """One live webhook epoch: a landing file holding ``doc`` drained by
+    ``run_multi_sink`` through parse → enrich → exactly-once append.
+    Returns the finished query."""
+    import json
+    import os
+
+    from pyspark.sql import types as T
+
+    from z316_sales_data_pipeline_spark import sinks
+    from z316_sales_data_pipeline_spark.operators import joins
+    from z316_sales_data_pipeline_spark.sources import json_ingest
+    from z316_sales_data_pipeline_spark.streaming import pipeline
+
+    landing = os.path.join(root, "landing")
+    os.makedirs(landing)
+    with open(os.path.join(landing, "doc.json"), "w") as f:
+        f.write(json.dumps(doc) + "\n")
+
+    def write(batch):
+        rows = joins.lookup_join(json_ingest.parse_and_explode(batch), produto, "produto_id")
+        sinks.append_snapshot(rows, os.path.join(root, "segments"), txn_key="epoch-0")
+
+    schema = T.StructType([T.StructField("value", T.StringType())])
+    stream = pipeline.file_stream(spark, landing, schema, fmt="text").withColumnRenamed("value", "payload")
+    q = pipeline.run_multi_sink(stream, {"segments": write}, os.path.join(root, "checkpoint"))
+    q.awaitTermination(120)
+    return q
+
+
+def _produto(spark, sf_dir):
+    from z316_sales_data_pipeline_spark.plans import sales_facts
+    from z316_sales_data_pipeline_spark.sources.tables import load_table
+
+    return sales_facts.with_categoria(load_table(spark, sf_dir, "part")).select(
+        F.col("p_partkey").alias("produto_id"), "categoria"
+    )
+
+
+def _one_item_doc(produto_id) -> dict:
+    return {
+        "numero": 1,
+        "situacao": "F",
+        "itens": [{"linha": 1, "idProduto": produto_id, "valor": 2.5, "quantidade": 2.0}],
+    }
+
+
+def test_live_epoch_job_budget(spark, sf_dir, tmp_path):
+    """Job-budget guard: a one-doc live epoch (``run_multi_sink`` →
+    ``parse_and_explode`` → ``lookup_join`` → ``append_snapshot``) runs
+    at most 2 Spark jobs: the ``part`` broadcast and the segment write
+    (measured: 2). Caching the batch for its single sink added a third
+    job that built the cache. The stream tags every job of the query,
+    foreachBatch included, with its run id as job group."""
+    produto = _produto(spark, sf_dir)
+    q = _webhook_epoch(spark, str(tmp_path), produto, _one_item_doc(produto.first()["produto_id"]))
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n = len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+    assert spark.read.parquet(str(tmp_path / "segments")).count() == 1
+    assert n <= 2, f"a one-doc live epoch ran {n} Spark jobs, budget 2"
+
+
+def test_ansi_errors_keep_their_class_without_origin_capture(spark):
+    """The session turns PySpark's per-call DataFrame-origin capture off
+    (py4j round trips on every Column call); an ANSI error still raises
+    with its error class, only the Python call-site text is gone."""
+    import pytest
+    from pyspark.errors import ArithmeticException
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    with pytest.raises(ArithmeticException) as err:
+        spark.range(1).select(F.lit(1) / F.col("id")).collect()
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"
+
+
+# ---------------------------------------------------------------------------
+# The in-process file: FileSystem (z316_sales_data_pipeline_spark/jvm)
+# ---------------------------------------------------------------------------
+_IN_PROCESS = ("z316.fs.LocalFs", "z316.fs.LocalFs$Checksummed")
+
+
+def _hadoop_conf(spark):
+    return spark._jsparkSession.sessionState().newHadoopConf()
+
+
+def _stock_local_fs_classes(spark) -> tuple[str, str]:
+    """The ``file:`` FileSystem and AbstractFileSystem classes a session
+    gets without ``session.py``'s conf: Hadoop's defaults, resolved in a
+    fresh ``Configuration`` (the service-loaded ``file`` scheme, which
+    may be a ``LocalFileSystem`` subclass from another jar)."""
+    jvm = spark._jvm
+    conf = jvm.org.apache.hadoop.conf.Configuration()
+    fs_cls = jvm.org.apache.hadoop.fs.FileSystem.getFileSystemClass("file", conf).getName()
+    return fs_cls, conf.get("fs.AbstractFileSystem.file.impl")
+
+
+def _local_fs_classes(spark) -> tuple[str, str]:
+    """The session's ``file:`` FileSystem and AbstractFileSystem classes."""
+    jvm = spark._jvm
+    conf = _hadoop_conf(spark)
+    uri = jvm.java.net.URI("file:///")
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(uri, conf)
+    fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(uri, conf)
+    return fs.getClass().getName(), fc.getDefaultFileSystem().getClass().getName()
+
+
+def test_session_local_fs_is_in_process(spark):
+    """The session's ``file:`` FileSystem and its FileContext twin are
+    the in-process classes of ``jvm/localfs.jar``."""
+    assert _local_fs_classes(spark) == _IN_PROCESS
+
+
+def _write_fs_scenario(spark, root: str, produto, produto_id) -> None:
+    """A partitioned write, an ``append_snapshot`` and a streaming epoch
+    (offset, commit and source logs under its checkpoint)."""
+    import os
+
+    from z316_sales_data_pipeline_spark import sinks
+
+    spark.range(0, 40, 1, 4).selectExpr("id", "id % 3 AS p").write.partitionBy("p").parquet(
+        os.path.join(root, "partitioned")
+    )
+    sinks.append_snapshot(spark.range(0, 5, 1, 1), os.path.join(root, "appended"), txn_key="t0")
+    _webhook_epoch(spark, os.path.join(root, "stream"), produto, _one_item_doc(produto_id))
+
+
+def _tree(root: str) -> list[tuple[str, str]]:
+    """(relative path with UUIDs masked, octal mode) of every file and
+    directory under ``root``, sorted."""
+    import os
+    import re
+
+    uuid = re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")
+    out = []
+    for d, dirs, files in os.walk(root):
+        for name in dirs + files:
+            p = os.path.join(d, name)
+            out.append((uuid.sub("<uuid>", os.path.relpath(p, root)), oct(os.lstat(p).st_mode)))
+    return sorted(out)
+
+
+def test_local_fs_writes_what_stock_fs_writes(spark, sf_dir, tmp_path):
+    """The same writes through Hadoop's stock local FileSystem (switched
+    in for this test through the session's Hadoop conf, FileSystem cache
+    off) and through the in-process one leave the same files and
+    directories, ``.crc`` checksums included, with the same modes."""
+    stock = _stock_local_fs_classes(spark)
+    produto = _produto(spark, sf_dir)
+    produto_id = produto.first()["produto_id"]
+    keys = {
+        "fs.file.impl": stock[0],
+        "fs.file.impl.disable.cache": "true",
+        "fs.AbstractFileSystem.file.impl": stock[1],
+    }
+    try:
+        for k, v in keys.items():
+            spark.conf.set(k, v)
+        assert _local_fs_classes(spark) == stock
+        _write_fs_scenario(spark, str(tmp_path / "stock"), produto, produto_id)
+    finally:
+        for k in keys:
+            spark.conf.unset(k)
+    assert _local_fs_classes(spark) == _IN_PROCESS
+    _write_fs_scenario(spark, str(tmp_path / "inproc"), produto, produto_id)
+
+    want = _tree(str(tmp_path / "stock"))
+    assert any(p.endswith(".crc") for p, _ in want)
+    assert any(p.startswith("stream/checkpoint/offsets/") for p, _ in want)
+    assert _tree(str(tmp_path / "inproc")) == want
+
+
+def test_local_fs_checksum_still_catches_corruption(spark, tmp_path):
+    """A flipped data byte under an intact ``.crc`` raises
+    ``ChecksumException`` on read, through the FileSystem and the
+    FileContext API alike. (FileContext's one-argument ``open`` skips
+    the check in stock Hadoop too: ``FilterFs.open(Path)`` bypasses
+    ``ChecksumFs``; the sized ``open`` goes through it.)"""
+    import pytest
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    conf = _hadoop_conf(spark)
+    path = tmp_path / "data.bin"
+    hpath = jvm.org.apache.hadoop.fs.Path(f"file://{path}")
+    fs = hpath.getFileSystem(conf)
+    out = fs.create(hpath)
+    out.write(bytearray(b"z316" * 64))
+    out.close()
+    assert (tmp_path / ".data.bin.crc").exists()
+    raw = bytearray(path.read_bytes())
+    raw[10] ^= 0xFF
+    path.write_bytes(bytes(raw))
+    fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(hpath.toUri(), conf)
+    for opener in (fs.open, fc.open):
+        with pytest.raises(Py4JJavaError) as err:
+            opener(hpath, 4096).read()
+        assert err.value.java_exception.getClass().getName() == "org.apache.hadoop.fs.ChecksumException"
+
+
+def _raw_local_fs(spark, in_process: bool):
+    jvm = spark._jvm
+    fs = jvm.z316.fs.LocalFs() if in_process else jvm.org.apache.hadoop.fs.LocalFileSystem()
+    fs.initialize(jvm.java.net.URI("file:///"), _hadoop_conf(spark))
+    return fs.getRawFileSystem()
+
+
+def test_local_fs_set_permission_matches_chmod(spark, tmp_path):
+    """``setPermission`` sets what stock ``chmod`` sets: 0640 on a file,
+    01750 (sticky) on a directory, and a directory keeps its set-group-ID
+    bit as under ``chmod 0750``."""
+    import os
+
+    jvm = spark._jvm
+    cases = [("f", False, "640", 0o640), ("d", True, "1750", 0o1750), ("g", True, "750", 0o2750)]
+    for tag in ("stock", "inproc"):
+        fs = _raw_local_fs(spark, tag == "inproc")
+        for name, is_dir, perm, want in cases:
+            p = tmp_path / f"{tag}-{name}"
+            if is_dir:
+                p.mkdir()
+                if name == "g":
+                    os.chmod(p, 0o2755)
+            else:
+                p.write_text("x")
+            fs.setPermission(jvm.org.apache.hadoop.fs.Path(str(p)), jvm.org.apache.hadoop.fs.permission.FsPermission(perm))
+            assert os.stat(p).st_mode & 0o7777 == want, (tag, name)
+
+
+def test_local_fs_link_status_matches_stock(spark, tmp_path):
+    """``getFileLinkStatus`` on a file, a directory, a symlink and a
+    dangling symlink equals stock ``RawLocalFileSystem``'s, by plain and
+    by ``file:``-qualified path (the stock one never sees a link
+    through a qualified path)."""
+    import os
+
+    from py4j.protocol import Py4JJavaError
+
+    (tmp_path / "file").write_text("abc")
+    (tmp_path / "dir").mkdir()
+    os.symlink(tmp_path / "file", tmp_path / "link")
+    os.symlink("missing", tmp_path / "dangling")
+    jvm = spark._jvm
+    stock, inproc = _raw_local_fs(spark, False), _raw_local_fs(spark, True)
+
+    def status(fs, p):
+        try:
+            st = fs.getFileLinkStatus(jvm.org.apache.hadoop.fs.Path(p))
+        except Py4JJavaError as e:
+            return e.java_exception.getClass().getName()
+        return st.toString(), st.isSymlink()
+
+    for name in ("file", "dir", "link", "dangling"):
+        for p in (str(tmp_path / name), f"file://{tmp_path / name}"):
+            assert status(inproc, p) == status(stock, p), p
+    assert status(stock, str(tmp_path / "link"))[1] and status(stock, str(tmp_path / "dangling"))[1]
+
+
+def test_local_fs_jar_matches_source(tmp_path):
+    """Drift guard: ``jvm/localfs.jar`` is the build of ``jvm/LocalFs.java``
+    with the command in that file's header; every class file compiles
+    to the bytes of its jar entry."""
+    import shutil
+    import subprocess
+    import zipfile
+    from pathlib import Path
+
+    import pyspark
+    import pytest
+
+    if shutil.which("javac") is None:
+        pytest.skip("no javac on PATH")
+    jvm_dir = Path(entrymod.__file__).parent / "z316_sales_data_pipeline_spark" / "jvm"
+    api = Path(pyspark.__file__).parent / "jars" / "hadoop-client-api-3.4.2.jar"
+    src = jvm_dir / "LocalFs.java"
+    assert "javac --release 17 -cp <pyspark>/jars/hadoop-client-api-3.4.2.jar" in src.read_text()
+    subprocess.run(["javac", "--release", "17", "-cp", str(api), "-d", str(tmp_path), str(src)], check=True)
+    built = {str(p.relative_to(tmp_path)): p.read_bytes() for p in tmp_path.rglob("*.class")}
+    with zipfile.ZipFile(jvm_dir / "localfs.jar") as jar:
+        shipped = {n: jar.read(n) for n in jar.namelist() if n.endswith(".class")}
+    assert sorted(built) == sorted(shipped)
+    for name, data in built.items():
+        assert shipped[name] == data, f"{name} differs from localfs.jar: rebuild it (see LocalFs.java)"

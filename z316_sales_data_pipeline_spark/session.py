@@ -6,6 +6,16 @@ partition coalescing + skew-join splitting), broadcast threshold
 generous enough to broadcast every dimension table, Arrow enabled for
 the few Pandas-UDF operators, and UTC session time so results are
 comparable with external engines (DuckDB oracle).
+
+Local files go through ``jvm/localfs.jar`` (source ``jvm/LocalFs.java``):
+Hadoop's ``file:`` FileSystem and its FileContext twin with
+``setPermission`` and ``getFileLinkStatus`` done in-process. Without
+libhadoop the stock classes fork ``chmod`` on every file create and
+directory make and ``readlink`` on every FileContext rename (each
+streaming offset, commit and source log entry), a few ms per fork.
+Files, modes and ``.crc`` checksums are the same. The jar goes on the
+driver classpath, which is the whole JVM in ``local[N]``; a cluster
+deployment would put it on the executors' classpath too.
 """
 
 from __future__ import annotations
@@ -16,6 +26,8 @@ from pyspark.sql import SparkSession
 
 # local worker threads, and the default shuffle-partition floor
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+_LOCAL_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "localfs.jar")
 
 
 def _default_driver_memory() -> str:
@@ -65,6 +77,13 @@ def get_spark(app_name: str = "z316_spark", shuffle_partitions: str | int | None
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config("spark.driver.extraClassPath", _LOCAL_FS_JAR)
+        .config("spark.hadoop.fs.file.impl", "z316.fs.LocalFs")
+        .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "z316.fs.LocalFs$Checksummed")
+        # PySpark's per-call DataFrame-origin capture costs py4j round
+        # trips on every Column call; errors keep their class and SQL
+        # context, only the Python call site is dropped
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -256,16 +256,21 @@ def run_multi_sink(
     Reference: gcs_to_bq/main.py:351-372 (one Pub/Sub message → pdv +
     produto×N + pesquisa tables). foreachBatch gives exactly-once per
     sink when each write is idempotent (overwrite-by-partition or
-    dedup-keyed append).
+    dedup-keyed append). The batch is cached only when more than one
+    sink reads it: for a single sink the cache is one extra job per
+    epoch that nothing re-reads.
     """
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.persist()
+        shared = len(sinks) > 1
+        if shared:
+            batch_df.persist()
         try:
-            for _, write in sinks.items():
+            for write in sinks.values():
                 write(batch_df)
         finally:
-            batch_df.unpersist()
+            if shared:
+                batch_df.unpersist()
 
     writer = stream_df.writeStream.foreachBatch(_process).option("checkpointLocation", checkpoint)
     if available_now:
