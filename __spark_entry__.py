@@ -5,6 +5,11 @@ operator-semantic from SURVEY.md §2 (reference file:line cited in the
 implementing module); ``oracle_sql()`` holds the DuckDB-equivalent ANSI
 SQL. Column names and value rounding are kept identical on both sides
 (driver hashes values after sorting columns by name).
+
+The registry is one table, ``_REGISTRY`` at the end of this module: one
+(name, implementation, oracle SQL) row per entry, declared in the
+driver-facing order that ``queries()`` returns. ``bench_queries()`` adds
+the two xxhash64 twins, which have no oracle.
 """
 
 from __future__ import annotations
@@ -13292,736 +13297,345 @@ FROM q LEFT JOIN h USING (query_id)
 """
 
 
-# -- r14 driver sample (first 50), applied as a reorder at return time:
-# new r14 entry + entries whose code changed this round lead, then the
-# FULL remaining r07 cohort (27) and the alphabetical head of the r08
-# block — 43 of the 50 were last driver-attested <= r9 (VERDICT r13
-# item 3). The rest keep registration order. --
-_R14_SAMPLE_HEAD = [
-    # new r14 entries (never driver-attested)
-    "intra_doc_repeat_spans",
-    "curation_funnel",
-    "curation_funnel_incremental",
-    # changed this round (r14): suffix family re-keyed on (hash, pos)
-    # with the positional verify arm; agreement exact channel now
-    # counts pre-merge hit positions; market_hhi gained the per-seller
-    # overflow fail-stop
-    "suffix_dedup_spans",
-    "suffix_span_agreement",
-    "suffix_spans_incremental",
-    "suffix_scrub",
-    "span_contamination",
-    "span_contamination_report",
-    "market_hhi",
-    # the FULL remaining r07 cohort (r13 verdict item 3)
-    "embedding_contamination",
-    "ewma_forecast",
-    "forecast_backtest",
-    "gapfill_daily",
-    "hll_partition_rollup",
-    "inventory_runout",
-    "item_item_cosine",
-    "k_core_peel",
-    "kaplan_meier",
-    "knn_graph",
-    "mann_kendall_trend",
-    "new_vs_returning",
-    "ngram_novelty",
-    "peak_concurrency",
-    "price_elasticity",
-    "promo_uplift",
-    "revenue_gini",
-    "safety_stock",
-    "scd2_history",
-    "scd2_incremental",
-    "scd2_point_in_time",
-    "span_scrub",
-    "sq8_quantize_audit",
-    "status_dwell_time",
-    "touch_attribution",
-    "winsorized_stats",
-    "zone_map_prune",
-    # r08 cohort fill (alphabetical head of the 50-entry block)
-    "a4_union_pages",
-    "a5_manifest_scan",
-    "basket_pairs",
-    "c2_status_dispatch",
-    "c5_validate_or_delete",
-    "cohort_retention",
-    "conversion_latency",
-    "embedding_centroids",
-    "embedding_top_pc",
-    "embedding_whiten",
-    "event_transitions",
-    "f14_pubsub_decode",
-    "f16_url_assembly",
-]
+_Entry = Callable[[SparkSession, str], DataFrame]
+
+# The registry: one (name, Spark implementation, DuckDB oracle SQL) row per
+# entry, in driver-facing order.
+_REGISTRY: tuple[tuple[str, _Entry, str], ...] = (
+    # the driver samples the first 50 rows
+    ("intra_doc_repeat_spans", _intra_doc_repeat_spans, _INTRA_DOC_REPEAT_SPANS_SQL),
+    ("curation_funnel", _curation_funnel, _CURATION_FUNNEL_SQL),
+    # the incremental fold must equal the full batch-path recompute
+    ("curation_funnel_incremental", _curation_funnel_incremental, _CURATION_FUNNEL_SQL),
+    ("suffix_dedup_spans", _suffix_dedup_spans, _SUFFIX_DEDUP_SPANS_SQL),
+    ("suffix_span_agreement", _suffix_span_agreement, _SUFFIX_SPAN_AGREEMENT_SQL),
+    ("suffix_spans_incremental", _suffix_spans_incremental, _SUFFIX_SPANS_INCR_SQL),
+    ("suffix_scrub", _suffix_scrub, _SUFFIX_SCRUB_SQL),
+    ("span_contamination", _span_contamination, _SPAN_CONTAMINATION_SQL),
+    ("span_contamination_report", _span_contamination_report,
+     _SPAN_CONTAMINATION_REPORT_SQL),
+    ("market_hhi", _market_hhi, _MARKET_HHI_SQL),
+    ("embedding_contamination", _embedding_contamination, _EMB_CONTAMINATION_SQL),
+    ("ewma_forecast", _ewma_forecast, _EWMA_SQL),
+    ("forecast_backtest", _forecast_backtest, _FORECAST_BACKTEST_SQL),
+    ("gapfill_daily", _gapfill_daily, _GAPFILL_SQL),
+    ("hll_partition_rollup", _hll_partition_rollup, _HLL_ROLLUP_SQL),
+    ("inventory_runout", _inventory_runout, _RUNOUT_SQL),
+    ("item_item_cosine", _item_item_cosine, _ITEM_ITEM_COSINE_SQL),
+    ("k_core_peel", _k_core_peel, _K_CORE_SQL),
+    ("kaplan_meier", _kaplan_meier, _KAPLAN_MEIER_SQL),
+    ("knn_graph", _knn_graph, _KNN_GRAPH_SQL),
+    ("mann_kendall_trend", _mann_kendall_trend, _MANN_KENDALL_SQL),
+    ("new_vs_returning", _new_vs_returning, _NEW_RETURNING_SQL),
+    ("ngram_novelty", _ngram_novelty, _NGRAM_NOVELTY_SQL),
+    ("peak_concurrency", _peak_concurrency, _PEAK_CONCURRENCY_SQL),
+    ("price_elasticity", _price_elasticity, _ELASTICITY_SQL),
+    ("promo_uplift", _promo_uplift, _PROMO_UPLIFT_SQL),
+    ("revenue_gini", _revenue_gini, _GINI_SQL),
+    ("safety_stock", _safety_stock, _SAFETY_STOCK_SQL),
+    ("scd2_history", _scd2_history, _SCD2_SQL),
+    ("scd2_incremental", _scd2_incremental, _SCD2_SQL),
+    ("scd2_point_in_time", _scd2_point_in_time, _SCD2_PIT_SQL),
+    ("span_scrub", _span_scrub, _SPAN_SCRUB_SQL),
+    ("sq8_quantize_audit", _sq8_quantize_audit, _SQ8_SQL),
+    ("status_dwell_time", _status_dwell_time, _DWELL_SQL),
+    ("touch_attribution", _touch_attribution, _TOUCH_SQL),
+    ("winsorized_stats", _winsorized_stats, _WINSOR_SQL),
+    ("zone_map_prune", _zone_map_prune, _ZONE_MAP_SQL),
+    ("a4_union_pages", _a4_union_pages, _A4_UNION_SQL),
+    ("a5_manifest_scan", _a5_manifest_scan, _A5_SQL),
+    ("basket_pairs", _basket_pairs, _BASKET_PAIRS_SQL),
+    ("c2_status_dispatch", _c2_status_dispatch, _C2_SQL),
+    ("c5_validate_or_delete", _c5_validate_or_delete, _C5_SQL),
+    ("cohort_retention", _cohort_retention, _COHORT_RETENTION_SQL),
+    ("conversion_latency", _conversion_latency, _CONVERSION_LATENCY_SQL),
+    ("embedding_centroids", _embedding_centroids, _EMBEDDING_CENTROIDS_SQL),
+    ("embedding_top_pc", _embedding_top_pc, _top_pc_sql(3)),
+    ("embedding_whiten", _embedding_whiten, _embedding_whiten_sql()),
+    ("event_transitions", _event_transitions, _EVENT_TRANSITIONS_SQL),
+    ("f14_pubsub_decode", _f14_pubsub_decode, _F14_SQL),
+    ("f16_url_assembly", _f16_url_assembly, _F16_SQL),
+    ("code_switch_audit", _code_switch_audit, _code_switch_sql()),
+    ("embedding_outlier_audit", _embedding_outlier_audit, _EMBEDDING_OUTLIER_SQL),
+    ("filter_overlap_matrix", _filter_overlap_matrix, _filter_overlap_sql()),
+    ("curriculum_phases", _curriculum_phases, _CURRICULUM_PHASES_SQL),
+    ("mix_epoch_plan", _mix_epoch_plan, _MIX_EPOCH_PLAN_SQL),
+    ("ivf_append_assign", _ivf_append_assign, _IVF_APPEND_ASSIGN_SQL),
+    ("mmr_rerank", _mmr_rerank, _mmr_rerank_sql()),
+    ("dim_truncation_recall", _dim_truncation_recall, _dim_truncation_recall_sql()),
+    ("doc_ngram_repetition", _doc_ngram_repetition, _DOC_NGRAM_REPETITION_SQL),
+    ("ivf_cell_drift", _ivf_cell_drift, _IVF_CELL_DRIFT_SQL),
+    ("trigram_doc_logprob", _trigram_doc_logprob, _TRIGRAM_LOGPROB_SQL),
+    ("token_budget_incremental", _token_budget_incremental, _TOKEN_BUDGET_SQL),
+    ("ivf_incremental_recall", _ivf_incremental_recall, _IVF_INCREMENTAL_RECALL_SQL),
+    ("ivf_retrain_plan", _ivf_retrain_plan, _ivf_retrain_sql()),
+    ("lorenz_deciles", _lorenz_deciles, _LORENZ_SQL),
+    ("nb_fit", _nb_fit, _NB_FIT_SQL),
+    ("spearman_corr", _spearman_corr, _SPEARMAN_SQL),
+    ("cramers_v", _cramers_v, _CRAMERS_V_SQL),
+    ("cohens_kappa", _cohens_kappa, _cohens_kappa_sql()),
+    ("temperature_mix", _temperature_mix, _TEMPERATURE_MIX_SQL),
+    ("interarrival_fit", _interarrival_fit, _INTERARRIVAL_SQL),
+    ("qq_drift", _qq_drift, _QQ_DRIFT_SQL),
+    ("poisson_fit", _poisson_fit, _POISSON_FIT_SQL),
+    ("acf_table", _acf_table, _ACF_TABLE_SQL),
+    ("conformal_interval", _conformal_interval, _CONFORMAL_SQL),
+    ("propensity_strata", _propensity_strata, _PROPENSITY_SQL),
+    ("fdr_bh_segments", _fdr_bh_segments, _FDR_BH_SQL),
+    ("mde_power", _mde_power, _MDE_POWER_SQL),
+    ("local_clustering", _local_clustering, _LOCAL_CLUSTERING_SQL),
+    ("heaps_law_curve", _heaps_law_curve, _HEAPS_LAW_SQL),
+    ("quantile_match_normalize", _quantile_match_normalize, _QUANTILE_MATCH_SQL),
+    ("domain_cap_sample", _domain_cap_sample, _DOMAIN_CAP_SQL),
+    ("always_valid_pvalue", _always_valid_pvalue, _ALWAYS_VALID_SQL),
+    ("mutual_information", _mutual_information, _MUTUAL_INFORMATION_SQL),
+    ("target_encode_loo", _target_encode_loo, _TARGET_ENCODE_LOO_SQL),
+    ("jaro_winkler_rescore", _jaro_winkler_rescore, _JARO_WINKLER_RESCORE_SQL),
+    ("recs_mrr", _recs_mrr, _RECS_MRR_SQL),
+    ("scd2_agg_mv", _scd2_agg_mv, _SCD2_AGG_MV_SQL),
+    ("sorted_neighborhood_dedup", _sorted_neighborhood_dedup, _SORTED_NEIGHBORHOOD_SQL),
+    ("edit_distance_join", _edit_distance_join, _EDIT_DISTANCE_JOIN_SQL),
+    ("growth_accounting", _growth_accounting, _GROWTH_ACCOUNTING_SQL),
+    ("fd_profile", _fd_profile, _FD_PROFILE_SQL),
+    ("phrase_search", _phrase_search, _PHRASE_SEARCH_SQL),
+    ("lm_trigram_backoff", _lm_trigram_backoff, _LM_TRIGRAM_BACKOFF_SQL),
+    ("interval_union_length", _interval_union_length, _INTERVAL_UNION_SQL),
+    ("monetary_unit_sample", _monetary_unit_sample, _MONETARY_UNIT_SQL),
+    ("ols_two_feature", _ols_two_feature, _OLS_TWO_FEATURE_SQL),
+    ("seasonal_outliers", _seasonal_outliers, _SEASONAL_OUTLIERS_SQL),
+    ("asof_tolerance_join", _asof_tolerance_join, _ASOF_TOLERANCE_SQL),
+    ("containment_join", _containment_join, _CONTAINMENT_JOIN_SQL),
+    ("ks_two_sample", _ks_two_sample, _KS_TWO_SAMPLE_SQL),
+    ("rolling_distinct_users", _rolling_distinct_users, _ROLLING_DISTINCT_SQL),
+    ("cohort_revenue_matrix", _cohort_revenue_matrix, _COHORT_REVENUE_SQL),
+    ("bm25_incremental", _bm25_incremental, _BM25_SQL),
+    ("token_run_lengths", _token_run_lengths, _TOKEN_RUN_SQL),
+    ("quantile_disc_groups", _quantile_disc_groups, _QUANTILE_DISC_SQL),
+    ("topk_diverse", _topk_diverse, _TOPK_DIVERSE_SQL),
+    ("hierarchy_shares", _hierarchy_shares, _HIERARCHY_SHARES_SQL),
+    ("prefix_cluster", _prefix_cluster, _PREFIX_CLUSTER_SQL),
+    ("revenue_bridge", _revenue_bridge, _REVENUE_BRIDGE_SQL),
+    ("measure_correlations", _measure_correlations, _MEASURE_CORR_SQL),
+    ("g1_reconciliation_summary", _g1_reconciliation_summary, _G1_SQL),
+    ("g2_union_distinct", _g2_union_distinct, _G2_SQL),
+    ("g3_intersect", _g3_intersect, _G3_SQL),
+    ("hypertable_quantiles", _hypertable_quantiles, _HYPERTABLE_QUANTILES_SQL),
+    ("hypertable_rollup", _hypertable_rollup, _HYPERTABLE_SQL),
+    ("ivf_pq_top_k", _ivf_pq_top_k, _ivf_pq_sql()),
+    ("ivf_probe_sweep", _ivf_probe_sweep, _IVF_PROBE_SWEEP_SQL),
+    ("k_anonymity", _k_anonymity, _K_ANONYMITY_SQL),
+    ("l_diversity", _l_diversity, _L_DIVERSITY_SQL),
+    ("label_propagation", _label_propagation, _label_propagation_sql()),
+    ("leakage_safe_split", _leakage_safe_split, _LEAKAGE_SPLIT_SQL),
+    ("mad_outliers", _mad_outliers, _MAD_OUTLIERS_SQL),
+    ("minhash_calibration", _minhash_calibration, _MINHASH_CALIBRATION_SQL),
+    ("minhash_incremental", _minhash_incremental, _MINHASH_INCREMENTAL_SQL),
+    ("minhash_gate", _minhash_gate, _MINHASH_GATE_SQL),
+    ("minhash_portable", _minhash_portable, _MINHASH_PORTABLE_SQL),
+    ("minhash_scurve", _minhash_scurve, _MINHASH_SCURVE_SQL),
+    ("multimodal_frames", _multimodal_frames, _MULTIMODAL_FRAMES_SQL),
+    ("multimodal_resize", _multimodal_resize, _MULTIMODAL_RESIZE_SQL),
+    ("pareto_abc", _pareto_abc, _PARETO_ABC_SQL),
+    ("pq_codes", _pq_codes, _PQ_CODES_SQL),
+    ("pq_recall_eval", _pq_recall_eval, _PQ_RECALL_SQL),
+    ("q1_pricing_summary", _q1_pricing_summary, _Q1_SQL),
+    ("quantile_sketch", _quantile_sketch, _QUANTILE_SKETCH_SQL),
+    ("rfm_segments", _rfm_segments, _RFM_SQL),
+    ("simhash_incremental", _simhash_incremental, _simhash_incremental_sql()),
+    ("simhash_portable", _simhash_portable, _simhash_portable_sql()),
+    ("mann_whitney_value", _mann_whitney_value, _MANN_WHITNEY_SQL),
+    ("cuped_adjustment", _cuped_adjustment, _CUPED_SQL),
+    ("srm_check", _srm_check, _SRM_SQL),
+    ("order_totals_reconcile", _order_totals_reconcile, _ORDER_RECONCILE_SQL),
+    ("ab_readout", _ab_readout, _AB_READOUT_SQL),
+    ("link_prediction", _link_prediction, _LINK_PREDICTION_SQL),
+    ("t_closeness", _t_closeness, _T_CLOSENESS_SQL),
+    ("wilcoxon_signed_rank", _wilcoxon_signed_rank, _WILCOXON_SQL),
+    ("paired_t_test", _paired_t_test, _PAIRED_T_SQL),
+    ("auc_eval", _auc_eval, _AUC_SQL),
+    ("deterministic_shuffle", _deterministic_shuffle, _DET_SHUFFLE_SQL),
+    ("token_budget_select", _token_budget_select, _TOKEN_BUDGET_SQL),
+    ("curation_report", _curation_report, _CURATION_REPORT_SQL),
+    ("source_data_card", _source_data_card, _SOURCE_CARD_SQL),
+    ("skew_profile", _skew_profile, _SKEW_PROFILE_SQL),
+    ("span_dedup_incremental", _span_dedup_incremental, _SPAN_INCREMENTAL_SQL),
+    ("topk_per_group", _topk_per_group, _TOPK_SQL),
+    ("w1_group_total", _w1_group_total, _W1_SQL),
+    ("w2_dedup_keeprule", _w2_dedup_keeprule, _W2_SQL),
+    ("w3_pick_first", _w3_pick_first, _W3_SQL),
+    ("w4_min_by", _w4_min_by, _W4_SQL),
+    ("asof_join", _asof_join, _ASOF_SQL),
+    ("bpe_merges", _bpe_merges, _bpe_sql(3)),
+    ("bpe_token_count", _bpe_token_count, _bpe_token_count_sql(3)),
+    ("c1_required_fields_filter", _c1_required_fields_filter, _C1_SQL),
+    ("cube_agg", _cube_agg, _CUBE_SQL),
+    ("dedup_exact", _dedup_exact, _DEDUP_EXACT_SQL),
+    ("dedup_incremental_exact", _dedup_incremental_exact, _DEDUP_INCREMENTAL_SQL),
+    ("doc_fingerprint", _doc_fingerprint, _DOC_FP_SQL),
+    ("doc_pagerank", _doc_pagerank, _doc_pagerank_sql()),
+    ("dup_triangles", _dup_triangles, _DUP_TRIANGLES_SQL),
+    ("e8_duplicate_groups", _e8_duplicate_groups, _E8_SQL),
+    ("embedding_near_dup", _embedding_near_dup, _emb_near_dup_sql()),
+    ("embedding_near_dup_blocked", _embedding_near_dup_blocked, _emb_blocked_sql()),
+    ("f11_split_name_parse", _f11_split_name_parse, _F11_SQL),
+    ("f12_checksum", _f12_checksum, _F12_SQL),
+    ("f15_json_extract", _f15_json_extract, _F15_SQL),
+    ("f1_f3_date_suite", _f1_f3_date_suite, _F1_SQL),
+    ("f2_contact_datetime", _f2_contact_datetime, _F2_SQL),
+    ("f5_discount_parse", _f5_discount_parse, _F5_SQL),
+    ("f8_category_split", _f8_category_split, _F8_SQL),
+    ("f9_f10_blob_names", _f9_f10_blob_names, _F9_SQL),
+    ("grouping_sets_agg", _grouping_sets_agg, _GROUPING_SETS_SQL),
+    ("heavy_hitters_cms", _heavy_hitters_cms, _cms_sql(4, 64)),
+    ("hypertable_distinct", _hypertable_distinct, _HYPERTABLE_DISTINCT_SQL),
+    ("itens_fact", sales_facts.itens_fact, ITENS_FACT_SQL),
+    ("ivf_pq_rerank_top_k", _ivf_pq_rerank_top_k, _ivf_pq_rerank_sql()),
+    ("ivf_top_k", _ivf_top_k, _ivf_sql()),
+    ("kmeans_refine", _kmeans_refine, _KMEANS_SQL),
+    ("knn_brute_force", _knn_brute_force, _knn_sql()),
+    ("lang_id", _lang_id, _lang_id_sql()),
+    ("lsh_top_k", _lsh_top_k, _lsh_sql()),
+    ("minhash_eval", _minhash_eval, _MINHASH_EVAL_SQL),
+    ("minhash_near_dup", _minhash_near_dup, _MINHASH_NEAR_DUP_SQL),
+    ("ngram_jaccard", _ngram_jaccard, _NGRAM_JACCARD_SQL),
+    ("pedidos_fact", sales_facts.pedidos_fact, PEDIDOS_FACT_SQL),
+    ("q18_top_customers", _q18_top_customers, _Q18_SQL),
+    ("range_join_clicks", _range_join_clicks, _RANGE_JOIN_SQL),
+    ("rollup_agg", _rollup_agg, _ROLLUP_SQL),
+    ("salted_agg", _salted_agg, _SALTED_AGG_SQL),
+    ("semantic_dedup", _semantic_dedup, _SEMANTIC_DEDUP_SQL),
+    ("session_windows", _session_windows, _SESSION_SQL),
+    ("simhash_groups", _simhash_groups,
+     _simhash_portable_sql(n_bits=24, with_ids=True)),
+    ("sliding_counts", _sliding_counts, _SLIDING_SQL),
+    ("source_drift", _source_drift, _SOURCE_DRIFT_SQL),
+    ("span_dedup", _span_dedup, _SPAN_DEDUP_SQL),
+    ("sql_surface_portable", _sql_surface_portable, _PORTABLE_SQL),
+    ("text_quality", _text_quality, _TEXT_QUALITY_SQL),
+    ("token_count_bpe", _token_count_bpe, _TOKEN_COUNT_SQL),
+    ("tumbling_counts", _tumbling_counts, _TUMBLING_SQL),
+    ("vocab_coverage", _vocab_coverage, _VOCAB_COVERAGE_SQL),
+    ("bfs_reachability", _bfs_reachability, _BFS_REACHABILITY_SQL),
+    ("decayed_trending", _decayed_trending, _DECAYED_TRENDING_SQL),
+    ("assoc_rules", _assoc_rules, _ASSOC_RULES_SQL),
+    ("dow_seasonality", _dow_seasonality, _DOW_SEASONALITY_SQL),
+    ("cusum_drift", _cusum_drift, _CUSUM_SQL),
+    ("benford_audit", _benford_audit, _BENFORD_SQL),
+    ("abc_xyz_class", _abc_xyz_class, _ABC_XYZ_SQL),
+    ("char_entropy", _char_entropy, _CHAR_ENTROPY_SQL),
+    ("duplicate_payments", _duplicate_payments, _DUP_PAYMENTS_SQL),
+    ("churn_flags", _churn_flags, _CHURN_SQL),
+    ("bm25_search", _bm25_search, _BM25_SQL),
+    ("dsir_weights", _dsir_weights, _DSIR_SQL),
+    ("cdc_merge", _cdc_merge, _CDC_MERGE_SQL),
+    ("approx_profile", _approx_profile, _APPROX_PROFILE_SQL),
+    ("bigram_counts", _bigram_counts, _BIGRAM_SQL),
+    ("boilerplate_ngrams", _boilerplate_ngrams, _BOILERPLATE_SQL),
+    ("contamination_check", _contamination_check, _CONTAMINATION_SQL),
+    ("curation_filter", _curation_filter, _curation_sql()),
+    ("dataset_split", _dataset_split, _DATASET_SPLIT_SQL),
+    ("dedup_agreement", _dedup_agreement, _DEDUP_AGREEMENT_SQL),
+    ("doc_chunks", _doc_chunks, _DOC_CHUNKS_SQL),
+    ("dq_orders_summary", _dq_orders_summary, _DQ_ORDERS_SQL),
+    ("json_ingest_rollup", _json_ingest_rollup, _JSON_INGEST_SQL),
+    ("lm_bigram_score", _lm_bigram_score, _LM_SCORE_SQL),
+    ("multimodal_features", _multimodal_features, _MULTIMODAL_SQL),
+    ("pii_scrub", _pii_scrub, _PII_SCRUB_SQL),
+    ("q12_priority_classes", _q12_priority_classes, _Q12_SQL),
+    ("q21_waiting_suppliers", _q21_waiting_suppliers, _Q21_SQL),
+    ("q2_min_cost_supplier", _q2_min_cost_supplier, _Q2_SQL),
+    ("q9_profit_by_nation_year", _q9_profit_by_nation_year, _Q9_SQL),
+    ("repetition_ratio", _repetition_ratio, _REPETITION_SQL),
+    ("sequence_pack", _sequence_pack, _SEQUENCE_PACK_SQL),
+    ("session_ids", _session_ids, _SESSION_IDS_SQL),
+    ("source_mixture", _source_mixture, _SOURCE_MIXTURE_SQL),
+    ("source_overlap", _source_overlap, _SOURCE_OVERLAP_SQL),
+    ("stratified_sample", _stratified_sample, _STRATIFIED_SQL),
+    ("table_checksum", _table_checksum, _TABLE_CHECKSUM_SQL),
+    ("tfidf_top_terms", _tfidf_top_terms, _TFIDF_SQL),
+    ("weighted_sample", _weighted_sample, _WEIGHTED_SAMPLE_SQL),
+    ("g4_symmetric_difference", _g4_symmetric_difference, _G4_SQL),
+    ("funnel_conversion", _funnel_conversion, _FUNNEL_SQL),
+    ("lang_id_eval", _lang_id_eval, _lang_id_eval_sql()),
+    ("lead_lag_gaps", _lead_lag_gaps, _LEAD_LAG_SQL),
+    ("pack_assignments", _pack_assignments, _PACK_ASSIGNMENTS_SQL),
+    ("percentile_prices", _percentile_prices, _PERCENTILE_SQL),
+    ("pivot_status_counts", _pivot_status_counts, _PIVOT_SQL),
+    ("q10_returned_revenue", _q10_returned_revenue, _Q10_SQL),
+    ("q11_important_parts", _q11_important_parts, _Q11_SQL),
+    ("q13_customer_distribution", _q13_customer_distribution, _Q13_SQL),
+    ("q14_promo_revenue", _q14_promo_revenue, _Q14_SQL),
+    ("q15_top_supplier", _q15_top_supplier, _Q15_SQL),
+    ("q16_supplier_cnt", _q16_supplier_cnt, _Q16_SQL),
+    ("q17_small_qty_revenue", _q17_small_qty_revenue, _Q17_SQL),
+    ("q19_disjunctive_revenue", _q19_disjunctive_revenue, _Q19_SQL),
+    ("q20_promo_suppliers", _q20_promo_suppliers, _Q20_SQL),
+    ("q22_idle_customers", _q22_idle_customers, _Q22_SQL),
+    ("q3_shipping_priority", _q3_shipping_priority, _Q3_SQL),
+    ("q4_priority_count", _q4_priority_count, _Q4_SQL),
+    ("q5_nation_volume", _q5_nation_volume, _Q5_SQL),
+    ("q6_forecast_revenue", _q6_forecast_revenue, _Q6_SQL),
+    ("q7_volume_shipping", _q7_volume_shipping, _Q7_SQL),
+    ("q8_market_share", _q8_market_share, _Q8_SQL),
+    ("quality_prune", _quality_prune, _QUALITY_PRUNE_SQL),
+    ("repair_run", _repair_run, _REPAIR_RUN_SQL),
+    ("retention_daily", _retention_daily, _RETENTION_SQL),
+    ("rolling_7d_revenue", _rolling_7d_revenue, _ROLLING_7D_SQL),
+    ("semantic_dedup_incremental", _semantic_dedup_incremental,
+     _SEMANTIC_DEDUP_INC_SQL),
+    ("tokenizer_fertility", _tokenizer_fertility, _tokenizer_fertility_sql()),
+    ("w2_keeprule_backfill", _w2_keeprule_backfill, _W2B_SQL),
+    ("scd2_fold_late", _scd2_fold_late, _SCD2_SQL),
+    ("prefix_jaccard_join", _prefix_jaccard_join, _PREFIX_JACCARD_SQL),
+    ("snapshot_diff", _snapshot_diff, _SNAPSHOT_DIFF_SQL),
+    ("ivm_join_delta", _ivm_join_delta, _IVM_JOIN_SQL),
+    ("repurchase_intervals", _repurchase_intervals, _REPURCHASE_SQL),
+    ("price_points", _price_points, _PRICE_POINTS_SQL),
+    ("rrf_fusion", _rrf_fusion, _RRF_FUSION_SQL),
+    ("ndcg_eval", _ndcg_eval, _ndcg_sql()),
+    ("collocation_pmi", _collocation_pmi, _COLLOCATION_SQL),
+    ("user_behavior_entropy", _user_behavior_entropy, _USER_ENTROPY_SQL),
+    ("top_event_paths", _top_event_paths, _TOP_PATHS_SQL),
+    ("arrival_burstiness", _arrival_burstiness, _BURSTINESS_SQL),
+    ("revenue_waterfall", _revenue_waterfall, _REVENUE_WATERFALL_SQL),
+    ("chi_square_dow", _chi_square_dow, _CHI_SQUARE_SQL),
+    ("value_drift_psi", _value_drift_psi, _PSI_SQL),
+    ("recs_hit_rate", _recs_hit_rate, _RECS_HIT_RATE_SQL),
+    ("bag_setops", _bag_setops, _BAG_SETOPS_SQL),
+    ("unpivot_measures", _unpivot_measures, _UNPIVOT_SQL),
+    ("window_rank_suite", _window_rank_suite, _WINDOW_RANK_SQL),
+    ("embedding_norm_audit", _embedding_norm_audit, _EMB_NORM_SQL),
+    ("skyline_parts", _skyline_parts, _SKYLINE_SQL),
+    ("basket_triples", _basket_triples, _BASKET_TRIPLES_SQL),
+    ("seasonal_strength", _seasonal_strength, _SEASONAL_STRENGTH_SQL),
+    ("ivm_agg_retract", _ivm_agg_retract, _IVM_AGG_RETRACT_SQL),
+    ("ann_recall_eval", _ann_recall_eval, _ANN_RECALL_SQL),
+    ("cluster_representative", _cluster_representative, _CLUSTER_REP_SQL),
+    ("contrastive_triples", _contrastive_triples, _CONTRASTIVE_SQL),
+    ("d1_item_product_lookup", _d1_item_product_lookup, _D1_SQL),
+    ("d2_order_customer_left", _d2_order_customer_left, _D2_SQL),
+    ("d3_chained_enrichment", _d3_chained_enrichment, _D3_SQL),
+    ("d4_incremental_guard", _d4_incremental_guard, _D4_SQL),
+    ("d5_regroup_pivot", _d5_regroup_pivot, _D5_SQL),
+    ("d6_semi_join", _d6_semi_join, _D6_SQL),
+    ("decile_lift", _decile_lift, _DECILE_LIFT_SQL),
+    ("dup_cluster_stats", _dup_cluster_stats, _DUP_CLUSTER_STATS_SQL),
+    ("dup_clusters", _dup_clusters, _DUP_CLUSTERS_SQL),
+    ("dup_rate_by_source", _dup_rate_by_source, _DUP_RATE_SQL),
+    ("e7_distinct_values", _e7_distinct_values, _E7_SQL),
+    ("entity_resolution", _entity_resolution, _ENTITY_RESOLUTION_SQL),
+)
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    base = _queries_base()
-    head = {k: base[k] for k in _R14_SAMPLE_HEAD}
-    return head | {k: v for k, v in base.items() if k not in head}
-
-
-def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        # -- registration order (historical); the driver-facing order is
-        # the r11 rotation applied in queries() above. --
-        "code_switch_audit": _code_switch_audit,
-        "embedding_outlier_audit": _embedding_outlier_audit,
-        "filter_overlap_matrix": _filter_overlap_matrix,
-        "curriculum_phases": _curriculum_phases,
-        "mix_epoch_plan": _mix_epoch_plan,
-        "ivf_append_assign": _ivf_append_assign,
-        "mmr_rerank": _mmr_rerank,
-        "dim_truncation_recall": _dim_truncation_recall,
-        "doc_ngram_repetition": _doc_ngram_repetition,
-        "ivf_cell_drift": _ivf_cell_drift,
-        "trigram_doc_logprob": _trigram_doc_logprob,
-        "token_budget_incremental": _token_budget_incremental,
-        "ivf_incremental_recall": _ivf_incremental_recall,
-        "ivf_retrain_plan": _ivf_retrain_plan,
-        "lorenz_deciles": _lorenz_deciles,
-        "market_hhi": _market_hhi,
-        "nb_fit": _nb_fit,
-        "spearman_corr": _spearman_corr,
-        "cramers_v": _cramers_v,
-        "cohens_kappa": _cohens_kappa,
-        "temperature_mix": _temperature_mix,
-        "interarrival_fit": _interarrival_fit,
-        "qq_drift": _qq_drift,
-        "poisson_fit": _poisson_fit,
-        "acf_table": _acf_table,
-        "conformal_interval": _conformal_interval,
-        "propensity_strata": _propensity_strata,
-        "fdr_bh_segments": _fdr_bh_segments,
-        "mde_power": _mde_power,
-        "local_clustering": _local_clustering,
-        "heaps_law_curve": _heaps_law_curve,
-        "quantile_match_normalize": _quantile_match_normalize,
-        "domain_cap_sample": _domain_cap_sample,
-        "always_valid_pvalue": _always_valid_pvalue,
-        "mutual_information": _mutual_information,
-        "target_encode_loo": _target_encode_loo,
-        "jaro_winkler_rescore": _jaro_winkler_rescore,
-        "recs_mrr": _recs_mrr,
-        "scd2_agg_mv": _scd2_agg_mv,
-        "sorted_neighborhood_dedup": _sorted_neighborhood_dedup,
-        "edit_distance_join": _edit_distance_join,
-        "growth_accounting": _growth_accounting,
-        "fd_profile": _fd_profile,
-        "phrase_search": _phrase_search,
-        "lm_trigram_backoff": _lm_trigram_backoff,
-        "interval_union_length": _interval_union_length,
-        "monetary_unit_sample": _monetary_unit_sample,
-        "ols_two_feature": _ols_two_feature,
-        "seasonal_outliers": _seasonal_outliers,
-        "asof_tolerance_join": _asof_tolerance_join,
-        "containment_join": _containment_join,
-        "ks_two_sample": _ks_two_sample,
-        "rolling_distinct_users": _rolling_distinct_users,
-        "cohort_revenue_matrix": _cohort_revenue_matrix,
-        "bm25_incremental": _bm25_incremental,
-        "token_run_lengths": _token_run_lengths,
-        "quantile_disc_groups": _quantile_disc_groups,
-        "topk_diverse": _topk_diverse,
-        "hierarchy_shares": _hierarchy_shares,
-        "prefix_cluster": _prefix_cluster,
-        "revenue_bridge": _revenue_bridge,
-        "measure_correlations": _measure_correlations,
-        "g1_reconciliation_summary": _g1_reconciliation_summary,
-        "g2_union_distinct": _g2_union_distinct,
-        "g3_intersect": _g3_intersect,
-        "hypertable_quantiles": _hypertable_quantiles,
-        "hypertable_rollup": _hypertable_rollup,
-        "ivf_pq_top_k": _ivf_pq_top_k,
-        "ivf_probe_sweep": _ivf_probe_sweep,
-        "k_anonymity": _k_anonymity,
-        "l_diversity": _l_diversity,
-        "label_propagation": _label_propagation,
-        "leakage_safe_split": _leakage_safe_split,
-        "mad_outliers": _mad_outliers,
-        "minhash_calibration": _minhash_calibration,
-        "minhash_incremental": _minhash_incremental,
-        "minhash_gate": _minhash_gate,
-        "suffix_dedup_spans": _suffix_dedup_spans,
-        "intra_doc_repeat_spans": _intra_doc_repeat_spans,
-        "suffix_span_agreement": _suffix_span_agreement,
-        "suffix_spans_incremental": _suffix_spans_incremental,
-        "suffix_scrub": _suffix_scrub,
-        "span_contamination": _span_contamination,
-        "span_contamination_report": _span_contamination_report,
-        "minhash_portable": _minhash_portable,
-        "minhash_scurve": _minhash_scurve,
-        "multimodal_frames": _multimodal_frames,
-        "multimodal_resize": _multimodal_resize,
-        "pareto_abc": _pareto_abc,
-        "pq_codes": _pq_codes,
-        "pq_recall_eval": _pq_recall_eval,
-        "q1_pricing_summary": _q1_pricing_summary,
-        "quantile_sketch": _quantile_sketch,
-        "rfm_segments": _rfm_segments,
-        "simhash_incremental": _simhash_incremental,
-        "simhash_portable": _simhash_portable,
-        # -- never-attested r10 additions (positions 51+: next in line
-        # for the r11 rotation) --
-        "mann_whitney_value": _mann_whitney_value,
-        "cuped_adjustment": _cuped_adjustment,
-        "srm_check": _srm_check,
-        "order_totals_reconcile": _order_totals_reconcile,
-        "ab_readout": _ab_readout,
-        "link_prediction": _link_prediction,
-        "t_closeness": _t_closeness,
-        "wilcoxon_signed_rank": _wilcoxon_signed_rank,
-        "paired_t_test": _paired_t_test,
-        "auc_eval": _auc_eval,
-        "deterministic_shuffle": _deterministic_shuffle,
-        "token_budget_select": _token_budget_select,
-        "curation_funnel": _curation_funnel,
-        "curation_funnel_incremental": _curation_funnel_incremental,
-        "curation_report": _curation_report,
-        "source_data_card": _source_data_card,
-        # -- stalest-first: remaining r5/r6-attested, then r7, then r8 --
-        "skew_profile": _skew_profile,
-        "span_dedup_incremental": _span_dedup_incremental,
-        "topk_per_group": _topk_per_group,
-        "w1_group_total": _w1_group_total,
-        "w2_dedup_keeprule": _w2_dedup_keeprule,
-        "w3_pick_first": _w3_pick_first,
-        "w4_min_by": _w4_min_by,
-        "asof_join": _asof_join,
-        "bpe_merges": _bpe_merges,
-        "bpe_token_count": _bpe_token_count,
-        "c1_required_fields_filter": _c1_required_fields_filter,
-        "cube_agg": _cube_agg,
-        "dedup_exact": _dedup_exact,
-        "dedup_incremental_exact": _dedup_incremental_exact,
-        "doc_fingerprint": _doc_fingerprint,
-        "doc_pagerank": _doc_pagerank,
-        "dup_triangles": _dup_triangles,
-        "e8_duplicate_groups": _e8_duplicate_groups,
-        "embedding_near_dup": _embedding_near_dup,
-        "embedding_near_dup_blocked": _embedding_near_dup_blocked,
-        "f11_split_name_parse": _f11_split_name_parse,
-        "f12_checksum": _f12_checksum,
-        "f15_json_extract": _f15_json_extract,
-        "f1_f3_date_suite": _f1_f3_date_suite,
-        "f2_contact_datetime": _f2_contact_datetime,
-        "f5_discount_parse": _f5_discount_parse,
-        "f8_category_split": _f8_category_split,
-        "f9_f10_blob_names": _f9_f10_blob_names,
-        "grouping_sets_agg": _grouping_sets_agg,
-        "heavy_hitters_cms": _heavy_hitters_cms,
-        "hypertable_distinct": _hypertable_distinct,
-        "itens_fact": sales_facts.itens_fact,
-        "ivf_pq_rerank_top_k": _ivf_pq_rerank_top_k,
-        "ivf_top_k": _ivf_top_k,
-        "kmeans_refine": _kmeans_refine,
-        "knn_brute_force": _knn_brute_force,
-        "lang_id": _lang_id,
-        "lsh_top_k": _lsh_top_k,
-        "minhash_eval": _minhash_eval,
-        "minhash_near_dup": _minhash_near_dup,
-        "ngram_jaccard": _ngram_jaccard,
-        "pedidos_fact": sales_facts.pedidos_fact,
-        "q18_top_customers": _q18_top_customers,
-        "range_join_clicks": _range_join_clicks,
-        "rollup_agg": _rollup_agg,
-        "salted_agg": _salted_agg,
-        "semantic_dedup": _semantic_dedup,
-        "session_windows": _session_windows,
-        "simhash_groups": _simhash_groups,
-        "sliding_counts": _sliding_counts,
-        "source_drift": _source_drift,
-        "span_dedup": _span_dedup,
-        "sql_surface_portable": _sql_surface_portable,
-        "text_quality": _text_quality,
-        "token_count_bpe": _token_count_bpe,
-        "tumbling_counts": _tumbling_counts,
-        "vocab_coverage": _vocab_coverage,
-        "bfs_reachability": _bfs_reachability,
-        "item_item_cosine": _item_item_cosine,
-        "decayed_trending": _decayed_trending,
-        "forecast_backtest": _forecast_backtest,
-        "span_scrub": _span_scrub,
-        "ewma_forecast": _ewma_forecast,
-        "peak_concurrency": _peak_concurrency,
-        "safety_stock": _safety_stock,
-        "kaplan_meier": _kaplan_meier,
-        "mann_kendall_trend": _mann_kendall_trend,
-        "ngram_novelty": _ngram_novelty,
-        "gapfill_daily": _gapfill_daily,
-        "assoc_rules": _assoc_rules,
-        "dow_seasonality": _dow_seasonality,
-        "cusum_drift": _cusum_drift,
-        "k_core_peel": _k_core_peel,
-        "sq8_quantize_audit": _sq8_quantize_audit,
-        "zone_map_prune": _zone_map_prune,
-        "price_elasticity": _price_elasticity,
-        "touch_attribution": _touch_attribution,
-        "inventory_runout": _inventory_runout,
-        "revenue_gini": _revenue_gini,
-        "benford_audit": _benford_audit,
-        "abc_xyz_class": _abc_xyz_class,
-        "new_vs_returning": _new_vs_returning,
-        "char_entropy": _char_entropy,
-        "promo_uplift": _promo_uplift,
-        "duplicate_payments": _duplicate_payments,
-        "churn_flags": _churn_flags,
-        "bm25_search": _bm25_search,
-        "dsir_weights": _dsir_weights,
-        "scd2_history": _scd2_history,
-        "scd2_incremental": _scd2_incremental,
-        "scd2_point_in_time": _scd2_point_in_time,
-        "cdc_merge": _cdc_merge,
-        "winsorized_stats": _winsorized_stats,
-        "status_dwell_time": _status_dwell_time,
-        "approx_profile": _approx_profile,
-        "bigram_counts": _bigram_counts,
-        "boilerplate_ngrams": _boilerplate_ngrams,
-        "contamination_check": _contamination_check,
-        "curation_filter": _curation_filter,
-        "dataset_split": _dataset_split,
-        "dedup_agreement": _dedup_agreement,
-        "doc_chunks": _doc_chunks,
-        "dq_orders_summary": _dq_orders_summary,
-        "embedding_contamination": _embedding_contamination,
-        "hll_partition_rollup": _hll_partition_rollup,
-        "json_ingest_rollup": _json_ingest_rollup,
-        "knn_graph": _knn_graph,
-        "lm_bigram_score": _lm_bigram_score,
-        "multimodal_features": _multimodal_features,
-        "pii_scrub": _pii_scrub,
-        "q12_priority_classes": _q12_priority_classes,
-        "q21_waiting_suppliers": _q21_waiting_suppliers,
-        "q2_min_cost_supplier": _q2_min_cost_supplier,
-        "q9_profit_by_nation_year": _q9_profit_by_nation_year,
-        "repetition_ratio": _repetition_ratio,
-        "sequence_pack": _sequence_pack,
-        "session_ids": _session_ids,
-        "source_mixture": _source_mixture,
-        "source_overlap": _source_overlap,
-        "stratified_sample": _stratified_sample,
-        "table_checksum": _table_checksum,
-        "tfidf_top_terms": _tfidf_top_terms,
-        "weighted_sample": _weighted_sample,
-        "a4_union_pages": _a4_union_pages,
-        "a5_manifest_scan": _a5_manifest_scan,
-        "basket_pairs": _basket_pairs,
-        "c2_status_dispatch": _c2_status_dispatch,
-        "c5_validate_or_delete": _c5_validate_or_delete,
-        "cohort_retention": _cohort_retention,
-        "conversion_latency": _conversion_latency,
-        "embedding_centroids": _embedding_centroids,
-        "embedding_top_pc": _embedding_top_pc,
-        "embedding_whiten": _embedding_whiten,
-        "event_transitions": _event_transitions,
-        "f14_pubsub_decode": _f14_pubsub_decode,
-        "f16_url_assembly": _f16_url_assembly,
-        "g4_symmetric_difference": _g4_symmetric_difference,
-        "funnel_conversion": _funnel_conversion,
-        "lang_id_eval": _lang_id_eval,
-        "lead_lag_gaps": _lead_lag_gaps,
-        "pack_assignments": _pack_assignments,
-        "percentile_prices": _percentile_prices,
-        "pivot_status_counts": _pivot_status_counts,
-        "q10_returned_revenue": _q10_returned_revenue,
-        "q11_important_parts": _q11_important_parts,
-        "q13_customer_distribution": _q13_customer_distribution,
-        "q14_promo_revenue": _q14_promo_revenue,
-        "q15_top_supplier": _q15_top_supplier,
-        "q16_supplier_cnt": _q16_supplier_cnt,
-        "q17_small_qty_revenue": _q17_small_qty_revenue,
-        "q19_disjunctive_revenue": _q19_disjunctive_revenue,
-        "q20_promo_suppliers": _q20_promo_suppliers,
-        "q22_idle_customers": _q22_idle_customers,
-        "q3_shipping_priority": _q3_shipping_priority,
-        "q4_priority_count": _q4_priority_count,
-        "q5_nation_volume": _q5_nation_volume,
-        "q6_forecast_revenue": _q6_forecast_revenue,
-        # -- r9-attested (freshest, rotated to the tail) --
-        "q7_volume_shipping": _q7_volume_shipping,
-        "q8_market_share": _q8_market_share,
-        "quality_prune": _quality_prune,
-        "repair_run": _repair_run,
-        "retention_daily": _retention_daily,
-        "rolling_7d_revenue": _rolling_7d_revenue,
-        "semantic_dedup_incremental": _semantic_dedup_incremental,
-        "tokenizer_fertility": _tokenizer_fertility,
-        "w2_keeprule_backfill": _w2_keeprule_backfill,
-        "scd2_fold_late": _scd2_fold_late,
-        "prefix_jaccard_join": _prefix_jaccard_join,
-        "snapshot_diff": _snapshot_diff,
-        "ivm_join_delta": _ivm_join_delta,
-        "repurchase_intervals": _repurchase_intervals,
-        "price_points": _price_points,
-        "rrf_fusion": _rrf_fusion,
-        "ndcg_eval": _ndcg_eval,
-        "collocation_pmi": _collocation_pmi,
-        "user_behavior_entropy": _user_behavior_entropy,
-        "top_event_paths": _top_event_paths,
-        "arrival_burstiness": _arrival_burstiness,
-        "revenue_waterfall": _revenue_waterfall,
-        "chi_square_dow": _chi_square_dow,
-        "value_drift_psi": _value_drift_psi,
-        "recs_hit_rate": _recs_hit_rate,
-        "bag_setops": _bag_setops,
-        "unpivot_measures": _unpivot_measures,
-        "window_rank_suite": _window_rank_suite,
-        "embedding_norm_audit": _embedding_norm_audit,
-        "skyline_parts": _skyline_parts,
-        "basket_triples": _basket_triples,
-        "seasonal_strength": _seasonal_strength,
-        "ivm_agg_retract": _ivm_agg_retract,
-        "ann_recall_eval": _ann_recall_eval,
-        "cluster_representative": _cluster_representative,
-        "contrastive_triples": _contrastive_triples,
-        "d1_item_product_lookup": _d1_item_product_lookup,
-        "d2_order_customer_left": _d2_order_customer_left,
-        "d3_chained_enrichment": _d3_chained_enrichment,
-        "d4_incremental_guard": _d4_incremental_guard,
-        "d5_regroup_pivot": _d5_regroup_pivot,
-        "d6_semi_join": _d6_semi_join,
-        "decile_lift": _decile_lift,
-        "dup_cluster_stats": _dup_cluster_stats,
-        "dup_clusters": _dup_clusters,
-        "dup_rate_by_source": _dup_rate_by_source,
-        "e7_distinct_values": _e7_distinct_values,
-        "entity_resolution": _entity_resolution,
-    }
+def queries() -> dict[str, _Entry]:
+    return {name: fn for name, fn, _ in _REGISTRY}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "code_switch_audit": _code_switch_sql(),
-        "embedding_outlier_audit": _EMBEDDING_OUTLIER_SQL,
-        "filter_overlap_matrix": _filter_overlap_sql(),
-        "curriculum_phases": _CURRICULUM_PHASES_SQL,
-        "mix_epoch_plan": _MIX_EPOCH_PLAN_SQL,
-        "ivf_append_assign": _IVF_APPEND_ASSIGN_SQL,
-        "mmr_rerank": _mmr_rerank_sql(),
-        "dim_truncation_recall": _dim_truncation_recall_sql(),
-        "doc_ngram_repetition": _DOC_NGRAM_REPETITION_SQL,
-        "ivf_cell_drift": _IVF_CELL_DRIFT_SQL,
-        "trigram_doc_logprob": _TRIGRAM_LOGPROB_SQL,
-        "token_budget_incremental": _TOKEN_BUDGET_SQL,
-        "ivf_incremental_recall": _IVF_INCREMENTAL_RECALL_SQL,
-        "ivf_retrain_plan": _ivf_retrain_sql(),
-        "lorenz_deciles": _LORENZ_SQL,
-        "market_hhi": _MARKET_HHI_SQL,
-        "nb_fit": _NB_FIT_SQL,
-        "spearman_corr": _SPEARMAN_SQL,
-        "cramers_v": _CRAMERS_V_SQL,
-        "cohens_kappa": _cohens_kappa_sql(),
-        "temperature_mix": _TEMPERATURE_MIX_SQL,
-        "interarrival_fit": _INTERARRIVAL_SQL,
-        "qq_drift": _QQ_DRIFT_SQL,
-        "poisson_fit": _POISSON_FIT_SQL,
-        "acf_table": _ACF_TABLE_SQL,
-        "conformal_interval": _CONFORMAL_SQL,
-        "propensity_strata": _PROPENSITY_SQL,
-        "fdr_bh_segments": _FDR_BH_SQL,
-        "mde_power": _MDE_POWER_SQL,
-        "local_clustering": _LOCAL_CLUSTERING_SQL,
-        "heaps_law_curve": _HEAPS_LAW_SQL,
-        "quantile_match_normalize": _QUANTILE_MATCH_SQL,
-        "domain_cap_sample": _DOMAIN_CAP_SQL,
-        "always_valid_pvalue": _ALWAYS_VALID_SQL,
-        "mutual_information": _MUTUAL_INFORMATION_SQL,
-        "target_encode_loo": _TARGET_ENCODE_LOO_SQL,
-        "jaro_winkler_rescore": _JARO_WINKLER_RESCORE_SQL,
-        "recs_mrr": _RECS_MRR_SQL,
-        "bfs_reachability": _BFS_REACHABILITY_SQL,
-        "item_item_cosine": _ITEM_ITEM_COSINE_SQL,
-        "decayed_trending": _DECAYED_TRENDING_SQL,
-        "forecast_backtest": _FORECAST_BACKTEST_SQL,
-        "span_scrub": _SPAN_SCRUB_SQL,
-        "ewma_forecast": _EWMA_SQL,
-        "peak_concurrency": _PEAK_CONCURRENCY_SQL,
-        "safety_stock": _SAFETY_STOCK_SQL,
-        "kaplan_meier": _KAPLAN_MEIER_SQL,
-        "mann_kendall_trend": _MANN_KENDALL_SQL,
-        "ngram_novelty": _NGRAM_NOVELTY_SQL,
-        "gapfill_daily": _GAPFILL_SQL,
-        "assoc_rules": _ASSOC_RULES_SQL,
-        "dow_seasonality": _DOW_SEASONALITY_SQL,
-        "cusum_drift": _CUSUM_SQL,
-        "k_core_peel": _K_CORE_SQL,
-        "sq8_quantize_audit": _SQ8_SQL,
-        "zone_map_prune": _ZONE_MAP_SQL,
-        "price_elasticity": _ELASTICITY_SQL,
-        "touch_attribution": _TOUCH_SQL,
-        "inventory_runout": _RUNOUT_SQL,
-        "revenue_gini": _GINI_SQL,
-        "benford_audit": _BENFORD_SQL,
-        "abc_xyz_class": _ABC_XYZ_SQL,
-        "new_vs_returning": _NEW_RETURNING_SQL,
-        "char_entropy": _CHAR_ENTROPY_SQL,
-        "promo_uplift": _PROMO_UPLIFT_SQL,
-        "duplicate_payments": _DUP_PAYMENTS_SQL,
-        "churn_flags": _CHURN_SQL,
-        "bm25_search": _BM25_SQL,
-        "dsir_weights": _DSIR_SQL,
-        "scd2_history": _SCD2_SQL,
-        "scd2_incremental": _SCD2_SQL,
-        "scd2_fold_late": _SCD2_SQL,
-        "prefix_jaccard_join": _PREFIX_JACCARD_SQL,
-        "snapshot_diff": _SNAPSHOT_DIFF_SQL,
-        "ivm_join_delta": _IVM_JOIN_SQL,
-        "repurchase_intervals": _REPURCHASE_SQL,
-        "price_points": _PRICE_POINTS_SQL,
-        "measure_correlations": _MEASURE_CORR_SQL,
-        "rrf_fusion": _RRF_FUSION_SQL,
-        "ndcg_eval": _ndcg_sql(),
-        "collocation_pmi": _COLLOCATION_SQL,
-        "user_behavior_entropy": _USER_ENTROPY_SQL,
-        "top_event_paths": _TOP_PATHS_SQL,
-        "arrival_burstiness": _BURSTINESS_SQL,
-        "revenue_bridge": _REVENUE_BRIDGE_SQL,
-        "revenue_waterfall": _REVENUE_WATERFALL_SQL,
-        "chi_square_dow": _CHI_SQUARE_SQL,
-        "value_drift_psi": _PSI_SQL,
-        "recs_hit_rate": _RECS_HIT_RATE_SQL,
-        "bag_setops": _BAG_SETOPS_SQL,
-        "unpivot_measures": _UNPIVOT_SQL,
-        "window_rank_suite": _WINDOW_RANK_SQL,
-        "embedding_norm_audit": _EMB_NORM_SQL,
-        "skyline_parts": _SKYLINE_SQL,
-        "basket_triples": _BASKET_TRIPLES_SQL,
-        "seasonal_strength": _SEASONAL_STRENGTH_SQL,
-        "ivm_agg_retract": _IVM_AGG_RETRACT_SQL,
-        "scd2_agg_mv": _SCD2_AGG_MV_SQL,
-        "sorted_neighborhood_dedup": _SORTED_NEIGHBORHOOD_SQL,
-        "edit_distance_join": _EDIT_DISTANCE_JOIN_SQL,
-        "growth_accounting": _GROWTH_ACCOUNTING_SQL,
-        "fd_profile": _FD_PROFILE_SQL,
-        "phrase_search": _PHRASE_SEARCH_SQL,
-        "lm_trigram_backoff": _LM_TRIGRAM_BACKOFF_SQL,
-        "interval_union_length": _INTERVAL_UNION_SQL,
-        "monetary_unit_sample": _MONETARY_UNIT_SQL,
-        "ols_two_feature": _OLS_TWO_FEATURE_SQL,
-        "seasonal_outliers": _SEASONAL_OUTLIERS_SQL,
-        "asof_tolerance_join": _ASOF_TOLERANCE_SQL,
-        "containment_join": _CONTAINMENT_JOIN_SQL,
-        "ks_two_sample": _KS_TWO_SAMPLE_SQL,
-        "rolling_distinct_users": _ROLLING_DISTINCT_SQL,
-        "cohort_revenue_matrix": _COHORT_REVENUE_SQL,
-        "bm25_incremental": _BM25_SQL,
-        "token_run_lengths": _TOKEN_RUN_SQL,
-        "quantile_disc_groups": _QUANTILE_DISC_SQL,
-        "topk_diverse": _TOPK_DIVERSE_SQL,
-        "hierarchy_shares": _HIERARCHY_SHARES_SQL,
-        "prefix_cluster": _PREFIX_CLUSTER_SQL,
-        "mann_whitney_value": _MANN_WHITNEY_SQL,
-        "cuped_adjustment": _CUPED_SQL,
-        "srm_check": _SRM_SQL,
-        "order_totals_reconcile": _ORDER_RECONCILE_SQL,
-        "ab_readout": _AB_READOUT_SQL,
-        "link_prediction": _LINK_PREDICTION_SQL,
-        "t_closeness": _T_CLOSENESS_SQL,
-        "wilcoxon_signed_rank": _WILCOXON_SQL,
-        "paired_t_test": _PAIRED_T_SQL,
-        "auc_eval": _AUC_SQL,
-        "deterministic_shuffle": _DET_SHUFFLE_SQL,
-        "token_budget_select": _TOKEN_BUDGET_SQL,
-        "curation_funnel": _CURATION_FUNNEL_SQL,
-        # the incremental fold must equal the full batch-path recompute
-        "curation_funnel_incremental": _CURATION_FUNNEL_SQL,
-        "curation_report": _CURATION_REPORT_SQL,
-        "source_data_card": _SOURCE_CARD_SQL,
-        "scd2_point_in_time": _SCD2_PIT_SQL,
-        "cdc_merge": _CDC_MERGE_SQL,
-        "winsorized_stats": _WINSOR_SQL,
-        "status_dwell_time": _DWELL_SQL,
-        "pedidos_fact": PEDIDOS_FACT_SQL,
-        "itens_fact": ITENS_FACT_SQL,
-        "q1_pricing_summary": _Q1_SQL,
-        "d1_item_product_lookup": _D1_SQL,
-        "d2_order_customer_left": _D2_SQL,
-        "d4_incremental_guard": _D4_SQL,
-        "d5_regroup_pivot": _D5_SQL,
-        "d6_semi_join": _D6_SQL,
-        "c1_required_fields_filter": _C1_SQL,
-        "e8_duplicate_groups": _E8_SQL,
-        "w1_group_total": _W1_SQL,
-        "w2_dedup_keeprule": _W2_SQL,
-        "w4_min_by": _W4_SQL,
-        "topk_per_group": _TOPK_SQL,
-        "g1_reconciliation_summary": _G1_SQL,
-        "g2_union_distinct": _G2_SQL,
-        "g3_intersect": _G3_SQL,
-        "f1_f3_date_suite": _F1_SQL,
-        "f5_discount_parse": _F5_SQL,
-        "f8_category_split": _F8_SQL,
-        "f9_f10_blob_names": _F9_SQL,
-        "f12_checksum": _F12_SQL,
-        "f15_json_extract": _F15_SQL,
-        "dedup_exact": _DEDUP_EXACT_SQL,
-        "text_quality": _TEXT_QUALITY_SQL,
-        "token_count_bpe": _TOKEN_COUNT_SQL,
-        "lang_id": _lang_id_sql(),
-        "ngram_jaccard": _NGRAM_JACCARD_SQL,
-        "knn_brute_force": _knn_sql(),
-        "ivf_top_k": _ivf_sql(),
-        "lsh_top_k": _lsh_sql(),
-        "simhash_portable": _simhash_portable_sql(),
-        "embedding_near_dup": _emb_near_dup_sql(),
-        "embedding_near_dup_blocked": _emb_blocked_sql(),
-        "tumbling_counts": _TUMBLING_SQL,
-        "session_windows": _SESSION_SQL,
-        "sliding_counts": _SLIDING_SQL,
-        "doc_fingerprint": _DOC_FP_SQL,
-        "minhash_portable": _MINHASH_PORTABLE_SQL,
-        "minhash_incremental": _MINHASH_INCREMENTAL_SQL,
-        "minhash_gate": _MINHASH_GATE_SQL,
-        "suffix_dedup_spans": _SUFFIX_DEDUP_SPANS_SQL,
-        "intra_doc_repeat_spans": _INTRA_DOC_REPEAT_SPANS_SQL,
-        "suffix_span_agreement": _SUFFIX_SPAN_AGREEMENT_SQL,
-        "suffix_spans_incremental": _SUFFIX_SPANS_INCR_SQL,
-        "suffix_scrub": _SUFFIX_SCRUB_SQL,
-        "span_contamination": _SPAN_CONTAMINATION_SQL,
-        "span_contamination_report": _SPAN_CONTAMINATION_REPORT_SQL,
-        "salted_agg": _SALTED_AGG_SQL,
-        "q18_top_customers": _Q18_SQL,
-        "d3_chained_enrichment": _D3_SQL,
-        "g4_symmetric_difference": _G4_SQL,
-        "repair_run": _REPAIR_RUN_SQL,
-        "quality_prune": _QUALITY_PRUNE_SQL,
-        "tokenizer_fertility": _tokenizer_fertility_sql(),
-        "ann_recall_eval": _ANN_RECALL_SQL,
-        "k_anonymity": _K_ANONYMITY_SQL,
-        "simhash_incremental": _simhash_incremental_sql(),
-        "multimodal_frames": _MULTIMODAL_FRAMES_SQL,
-        "multimodal_resize": _MULTIMODAL_RESIZE_SQL,
-        "span_dedup_incremental": _SPAN_INCREMENTAL_SQL,
-        "minhash_scurve": _MINHASH_SCURVE_SQL,
-        "quantile_sketch": _QUANTILE_SKETCH_SQL,
-        "pareto_abc": _PARETO_ABC_SQL,
-        "dup_cluster_stats": _DUP_CLUSTER_STATS_SQL,
-        "e7_distinct_values": _E7_SQL,
-        "w3_pick_first": _W3_SQL,
-        "f2_contact_datetime": _F2_SQL,
-        "f11_split_name_parse": _F11_SQL,
-        "rollup_agg": _ROLLUP_SQL,
-        "cube_agg": _CUBE_SQL,
-        "percentile_prices": _PERCENTILE_SQL,
-        "asof_join": _ASOF_SQL,
-        "range_join_clicks": _RANGE_JOIN_SQL,
-        "lead_lag_gaps": _LEAD_LAG_SQL,
-        "session_ids": _SESSION_IDS_SQL,
-        "rolling_7d_revenue": _ROLLING_7D_SQL,
-        "q4_priority_count": _Q4_SQL,
-        "q10_returned_revenue": _Q10_SQL,
-        "q12_priority_classes": _Q12_SQL,
-        "q16_supplier_cnt": _Q16_SQL,
-        "grouping_sets_agg": _GROUPING_SETS_SQL,
-        "pivot_status_counts": _PIVOT_SQL,
-        "a4_union_pages": _A4_UNION_SQL,
-        "f16_url_assembly": _F16_SQL,
-        "stratified_sample": _STRATIFIED_SQL,
-        "dataset_split": _DATASET_SPLIT_SQL,
-        "doc_chunks": _DOC_CHUNKS_SQL,
-        "sequence_pack": _SEQUENCE_PACK_SQL,
-        "weighted_sample": _WEIGHTED_SAMPLE_SQL,
-        "bigram_counts": _BIGRAM_SQL,
-        "tfidf_top_terms": _TFIDF_SQL,
-        "pii_scrub": _PII_SCRUB_SQL,
-        "curation_filter": _curation_sql(),
-        "embedding_centroids": _EMBEDDING_CENTROIDS_SQL,
-        "dup_clusters": _DUP_CLUSTERS_SQL,
-        "cluster_representative": _CLUSTER_REP_SQL,
-        "doc_pagerank": _doc_pagerank_sql(),
-        "dq_orders_summary": _DQ_ORDERS_SQL,
-        "hll_partition_rollup": _HLL_ROLLUP_SQL,
-        "contamination_check": _CONTAMINATION_SQL,
-        "embedding_contamination": _EMB_CONTAMINATION_SQL,
-        "kmeans_refine": _KMEANS_SQL,
-        "knn_graph": _KNN_GRAPH_SQL,
-        "repetition_ratio": _REPETITION_SQL,
-        "sql_surface_portable": _PORTABLE_SQL,
-        "funnel_conversion": _FUNNEL_SQL,
-        "retention_daily": _RETENTION_SQL,
-        "table_checksum": _TABLE_CHECKSUM_SQL,
-        "q7_volume_shipping": _Q7_SQL,
-        "q9_profit_by_nation_year": _Q9_SQL,
-        "q13_customer_distribution": _Q13_SQL,
-        "q14_promo_revenue": _Q14_SQL,
-        "q17_small_qty_revenue": _Q17_SQL,
-        "q19_disjunctive_revenue": _Q19_SQL,
-        "q22_idle_customers": _Q22_SQL,
-        "q2_min_cost_supplier": _Q2_SQL,
-        "q6_forecast_revenue": _Q6_SQL,
-        "q8_market_share": _Q8_SQL,
-        "q11_important_parts": _Q11_SQL,
-        "q15_top_supplier": _Q15_SQL,
-        "q20_promo_suppliers": _Q20_SQL,
-        "q21_waiting_suppliers": _Q21_SQL,
-        "q3_shipping_priority": _Q3_SQL,
-        "q5_nation_volume": _Q5_SQL,
-        "json_ingest_rollup": _JSON_INGEST_SQL,
-        "c5_validate_or_delete": _C5_SQL,
-        "multimodal_features": _MULTIMODAL_SQL,
-        "f14_pubsub_decode": _F14_SQL,
-        "w2_keeprule_backfill": _W2B_SQL,
-        "c2_status_dispatch": _C2_SQL,
-        "a5_manifest_scan": _A5_SQL,
-        "approx_profile": _APPROX_PROFILE_SQL,
-        "dedup_incremental_exact": _DEDUP_INCREMENTAL_SQL,
-        "boilerplate_ngrams": _BOILERPLATE_SQL,
-        "source_overlap": _SOURCE_OVERLAP_SQL,
-        "lm_bigram_score": _LM_SCORE_SQL,
-        "dedup_agreement": _DEDUP_AGREEMENT_SQL,
-        "semantic_dedup": _SEMANTIC_DEDUP_SQL,
-        "semantic_dedup_incremental": _SEMANTIC_DEDUP_INC_SQL,
-        "minhash_eval": _MINHASH_EVAL_SQL,
-        "source_mixture": _SOURCE_MIXTURE_SQL,
-        "vocab_coverage": _VOCAB_COVERAGE_SQL,
-        "bpe_merges": _bpe_sql(3),
-        "dup_triangles": _DUP_TRIANGLES_SQL,
-        "span_dedup": _SPAN_DEDUP_SQL,
-        "bpe_token_count": _bpe_token_count_sql(3),
-        "heavy_hitters_cms": _cms_sql(4, 64),
-        "source_drift": _SOURCE_DRIFT_SQL,
-        "contrastive_triples": _CONTRASTIVE_SQL,
-        "leakage_safe_split": _LEAKAGE_SPLIT_SQL,
-        "event_transitions": _EVENT_TRANSITIONS_SQL,
-        "lang_id_eval": _lang_id_eval_sql(),
-        "basket_pairs": _BASKET_PAIRS_SQL,
-        "pack_assignments": _PACK_ASSIGNMENTS_SQL,
-        "rfm_segments": _RFM_SQL,
-        "decile_lift": _DECILE_LIFT_SQL,
-        "hypertable_rollup": _HYPERTABLE_SQL,
-        "pq_codes": _PQ_CODES_SQL,
-        "pq_recall_eval": _PQ_RECALL_SQL,
-        "entity_resolution": _ENTITY_RESOLUTION_SQL,
-        "mad_outliers": _MAD_OUTLIERS_SQL,
-        "l_diversity": _L_DIVERSITY_SQL,
-        "ivf_pq_top_k": _ivf_pq_sql(),
-        "label_propagation": _label_propagation_sql(),
-        "hypertable_quantiles": _HYPERTABLE_QUANTILES_SQL,
-        "skew_profile": _SKEW_PROFILE_SQL,
-        "minhash_calibration": _MINHASH_CALIBRATION_SQL,
-        "ivf_probe_sweep": _IVF_PROBE_SWEEP_SQL,
-        "conversion_latency": _CONVERSION_LATENCY_SQL,
-        "cohort_retention": _COHORT_RETENTION_SQL,
-        "dup_rate_by_source": _DUP_RATE_SQL,
-        "embedding_top_pc": _top_pc_sql(3),
-        "embedding_whiten": _embedding_whiten_sql(),
-        "minhash_near_dup": _MINHASH_NEAR_DUP_SQL,
-        "simhash_groups": _simhash_portable_sql(n_bits=24, with_ids=True),
-        "ivf_pq_rerank_top_k": _ivf_pq_rerank_sql(),
-        "hypertable_distinct": _HYPERTABLE_DISTINCT_SQL,
-        # Every queries() entry has a value-check oracle — 168/168. The
-        # xxhash64 dedup twins (minhash_near_dup_xxhash64 /
-        # simhash_groups_xxhash64) live on the library + bench surface
-        # (see bench_queries()): their hash family is not SQL-portable;
-        # the portable operating points above value-check the shared
-        # banding/verify pipelines value-for-value.
-    }
+    return {name: sql for name, _, sql in _REGISTRY}
 
 
-def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def bench_queries() -> dict[str, _Entry]:
     """Library-surface operators benchmarked but not oracle-checked:
     engine-specific xxhash64 hash families whose portable operating
     points carry the value check in queries() under the canonical

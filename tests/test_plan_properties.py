@@ -1113,9 +1113,10 @@ def test_local_fs_writes_what_stock_fs_writes(spark, sf_dir, tmp_path):
 def test_local_fs_checksum_still_catches_corruption(spark, tmp_path):
     """A flipped data byte under an intact ``.crc`` raises
     ``ChecksumException`` on read, through the FileSystem and the
-    FileContext API alike. (FileContext's one-argument ``open`` skips
-    the check in stock Hadoop too: ``FilterFs.open(Path)`` bypasses
-    ``ChecksumFs``; the sized ``open`` goes through it.)"""
+    FileContext API alike, with and without a buffer size. Spark's
+    checkpoint manager reads offset, commit and source log entries with
+    FileContext's one-argument ``open``, which in stock Hadoop skips the
+    check (``FilterFs.open(Path)`` bypasses ``ChecksumFs``)."""
     import pytest
     from py4j.protocol import Py4JJavaError
 
@@ -1133,9 +1134,10 @@ def test_local_fs_checksum_still_catches_corruption(spark, tmp_path):
     path.write_bytes(bytes(raw))
     fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(hpath.toUri(), conf)
     for opener in (fs.open, fc.open):
-        with pytest.raises(Py4JJavaError) as err:
-            opener(hpath, 4096).read()
-        assert err.value.java_exception.getClass().getName() == "org.apache.hadoop.fs.ChecksumException"
+        for args in ((hpath, 4096), (hpath,)):
+            with pytest.raises(Py4JJavaError) as err:
+                opener(*args).read()
+            assert err.value.java_exception.getClass().getName() == "org.apache.hadoop.fs.ChecksumException"
 
 
 def _raw_local_fs(spark, in_process: bool):

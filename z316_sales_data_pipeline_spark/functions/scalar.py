@@ -101,14 +101,6 @@ def category_secundaria(c: Column | str) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# F9 — filename template assembly: "{dados_id}-pdv-{timestamp}-{uuid}".
-# Reference: api_to_gcs/main.py:147,150; webhook_handler/main.py:35-39.
-# ---------------------------------------------------------------------------
-def build_blob_name(*parts: Column | str) -> Column:
-    return F.concat_ws("-", *[_col(p) for p in parts])
-
-
-# ---------------------------------------------------------------------------
 # F10 — filename regex parse. The reference grammar
 # (backfill/gcs_to_pupsub.py:10,19-31):
 #   z316-tiny-api-{dados_id}-(produto|pdv|pesquisa)(-{pid})?-{ts}-{uuid}.json
@@ -128,47 +120,8 @@ def parse_blob_name(c: Column | str) -> dict[str, Column]:
 
 
 # ---------------------------------------------------------------------------
-# F12 — canonical MD5 checksum: md5 of a canonical JSON rendering.
-# Reference: api_to_gcs/main.py:234-236 (json.dumps(sort_keys=True)).
-# Build the struct with fields already sorted by name — to_json preserves
-# struct field order, so sorted construction = canonical rendering.
-# ---------------------------------------------------------------------------
-def canonical_checksum(*named_cols: tuple[str, Column]) -> Column:
-    ordered = sorted(named_cols, key=lambda kv: kv[0])
-    return F.md5(F.to_json(F.struct(*[c.alias(n) for n, c in ordered])))
-
-
-# ---------------------------------------------------------------------------
 # F13 — UUID per row (nondeterministic; excluded from oracle hashes).
 # Reference: webhook_handler/main.py:62.
 # ---------------------------------------------------------------------------
 def gen_uuid() -> Column:
     return F.expr("uuid()")
-
-
-# ---------------------------------------------------------------------------
-# F14 — base64 decode + JSON parse (Pub/Sub envelope decode).
-# Reference: gcs_to_bq/main.py:354-355.
-# ---------------------------------------------------------------------------
-def decode_pubsub(c: Column | str, schema) -> Column:
-    return F.from_json(F.unbase64(_col(c)).cast("string"), schema)
-
-
-# ---------------------------------------------------------------------------
-# F16 — token sanitize for logs: strip '?token=…' from URLs.
-# Reference: api_to_gcs/main.py:59 and call sites.
-# ---------------------------------------------------------------------------
-def sanitize_url(c: Column | str) -> Column:
-    return F.split(_col(c), r"\?token=").getItem(0)
-
-
-# ---------------------------------------------------------------------------
-# C6 — lineage metadata columns stamped on every row.
-# Reference: gcs_to_bq/main.py:272-277,305-310,332-337.
-# ---------------------------------------------------------------------------
-def lineage_columns(source: str, version: str) -> dict[str, Column]:
-    return {
-        "uuid": gen_uuid(),
-        "source_id": F.lit(f"{source}-pdv_{version}"),
-        "update_timestamp": F.current_timestamp(),
-    }

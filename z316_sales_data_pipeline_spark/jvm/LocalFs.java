@@ -7,7 +7,9 @@
  * offset/commit/source log entry). Each fork costs milliseconds. The
  * classes below do the same two things in-process with java.nio and
  * inherit everything else, so the files, their modes and their .crc
- * checksums stay what the stock classes write.
+ * checksums stay what the stock classes write. One read differs on
+ * purpose: FileContext's one-argument open verifies the .crc here,
+ * where stock skips it (see Checksummed.open).
  *
  *   z316.fs.LocalFs              fs.file.impl (FileSystem API)
  *   z316.fs.LocalFs$Checksummed  fs.AbstractFileSystem.file.impl (FileContext API)
@@ -35,6 +37,7 @@ import java.nio.file.InvalidPathException;
 import org.apache.hadoop.conf.Configuration;
 import org.apache.hadoop.fs.ChecksumFs;
 import org.apache.hadoop.fs.DelegateToFileSystem;
+import org.apache.hadoop.fs.FSDataInputStream;
 import org.apache.hadoop.fs.FSLinkResolver;
 import org.apache.hadoop.fs.FileStatus;
 import org.apache.hadoop.fs.FsConstants;
@@ -112,6 +115,17 @@ public class LocalFs extends LocalFileSystem {
   public static class Checksummed extends ChecksumFs {
     public Checksummed(URI uri, Configuration conf) throws IOException, URISyntaxException {
       super(new RawDelegate(conf));
+    }
+
+    /**
+     * Stock FilterFs.open(Path) reads the raw file and skips the .crc
+     * check; FileContext.open(Path), which Spark's checkpoint manager
+     * uses for offset, commit and source log entries, lands here. Go
+     * through the checksummed open(Path, int) as FileSystem.open does.
+     */
+    @Override
+    public FSDataInputStream open(Path f) throws IOException {
+      return open(f, getServerDefaults(f).getFileBufferSize());
     }
   }
 

@@ -12,46 +12,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def order_rollup(items: DataFrame, key: str | list[str], measures: dict[str, Column]) -> DataFrame:
-    """E1–E5 — per-order rollup of named measures.
-
-    ``measures`` maps output alias → aggregate Column; e.g.
-    E1 custo_total = sum(preco_custo * quantidade)
-    E2 gross       = sum(valor / (1 - desconto/100))   (reference quirk:
-                     NOT multiplied by quantity — sales_to_bq/main.py:107)
-    E3 net         = sum(valor)
-    E4 base        = sum(valor * quantidade)
-    """
-    keys = [key] if isinstance(key, str) else key
-    return items.groupBy(*keys).agg(*[c.alias(a) for a, c in measures.items()])
-
-
-def duplicate_groups(df: DataFrame, key: str | list[str], collect_col: str | None = None) -> DataFrame:
-    """E8 — groups with more than one member (duplicate detection).
-
-    Reference: api_to_gcs-checker.py:130-135,169-173.
-    """
-    keys = [key] if isinstance(key, str) else key
-    aggs = [F.count(F.lit(1)).alias("n")]
-    if collect_col:
-        aggs.append(F.sort_array(F.collect_list(collect_col)).alias(f"{collect_col}s"))
-    return df.groupBy(*keys).agg(*aggs).filter(F.col("n") > 1)
-
-
-def count_verify(df: DataFrame, predicate: Column) -> int:
-    """E6 — post-write verification count (expected 0 after a delete).
-
-    Reference: api_to_gcs-checker.py:121-128. An action, not a plan.
-    """
-    return df.filter(predicate).count()
-
-
-def distinct_values(df: DataFrame, cols: str | list[str]) -> DataFrame:
-    """E7 — distinct-set extraction."""
-    cols = [cols] if isinstance(cols, str) else cols
-    return df.select(*cols).distinct()
-
-
 def association_rules(
     baskets: DataFrame,
     basket_col: str,
@@ -701,7 +661,6 @@ def target_encode_loo(
         )
         .drop("__v", "__tot", "__nk")
     )
-
 
 
 def spearman_exact(df: DataFrame, x_int: Column, y_int: Column) -> DataFrame:

@@ -23,7 +23,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint64, shingles
-from ..functions.vector import cosine
 from ..persistence import persist_fact, pin_fact
 
 
@@ -270,21 +269,6 @@ def minhash_dedup_gate(
         df.select(id_col)
         .join(dropped, id_col, "left")
         .select(id_col, F.col("__drop").isNull().alias("keep"))
-    )
-
-
-def minhash_signature(df: DataFrame, text_col: str, id_col: str, n_hashes: int = 32, shingle_k: int = 3) -> DataFrame:
-    """(id, minhash array<long>) — one shuffle (the groupBy on id).
-
-    Signature min_i over pmod-affine permutations of the shingle hash;
-    all codegen, partial-aggregated map-side.
-    """
-    ex = _shingle_hashes(df, text_col, id_col, shingle_k).withColumn(
-        "__hp", F.pmod(F.col("__h"), F.lit(_MINHASH_P))
-    )
-    aggs = [F.min(_perm(F.col("__hp"), i)).alias(f"__m{i}") for i in range(n_hashes)]
-    return ex.groupBy(id_col).agg(*aggs).select(
-        id_col, F.array(*[f"__m{i}" for i in range(n_hashes)]).alias("minhash")
     )
 
 

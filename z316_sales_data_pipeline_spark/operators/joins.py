@@ -57,35 +57,6 @@ def existence_check(df: DataFrame, other: DataFrame, key: str | list[str], exist
     return df.join(other.select(*keys).distinct(), keys, how)
 
 
-def regroup_pivot(
-    df: DataFrame,
-    group_col: str,
-    type_col: str,
-    value_col: str,
-    scalar_types: list[str],
-    list_types: list[str] | None = None,
-) -> DataFrame:
-    """D5 — folder-regroup co-group as a pivot-style conditional agg.
-
-    Reference: backfill/gcs_to_pupsub.py:64-92 — group blobs by folder,
-    pick the single pdv/pesquisa part and collect all produto parts into
-    one composite message. One hash-aggregate shuffle on the group key;
-    map-side partial aggregation keeps it scale-safe.
-    """
-    aggs: list[Column] = []
-    for t in scalar_types:
-        aggs.append(
-            F.max(F.when(F.col(type_col) == t, F.col(value_col))).alias(t)
-        )
-    for t in list_types or []:
-        aggs.append(
-            F.sort_array(
-                F.collect_list(F.when(F.col(type_col) == t, F.col(value_col)))
-            ).alias(f"{t}_list")
-        )
-    return df.groupBy(group_col).agg(*aggs)
-
-
 def range_join_bucketed(
     left: DataFrame,
     right: DataFrame,
@@ -190,5 +161,3 @@ def asof_join(
     for c in carry_all:
         out = out.withColumn(f"{c}{suffix}", F.col("__carry")[c])
     return out.drop("__side", "__carry")
-
-

@@ -23,25 +23,6 @@ def group_total(df: DataFrame, key: str | list[str], value: Column | str, alias:
     return df.withColumn(alias, F.sum(value).over(Window.partitionBy(*keys)))
 
 
-def proportional_allocation(
-    df: DataFrame,
-    key: str | list[str],
-    item_value: Column | str,
-    total_amount: Column | str,
-    alias: str = "allocated",
-) -> DataFrame:
-    """F7/W1 — allocate a group-level amount across rows by value share.
-
-    alloc = total_amount * item_value / sum(item_value) over group.
-    Conservation law: sum(alloc) per group == total_amount (tested).
-    """
-    keys = [key] if isinstance(key, str) else key
-    item_value = F.col(item_value) if isinstance(item_value, str) else item_value
-    total_amount = F.col(total_amount) if isinstance(total_amount, str) else total_amount
-    share = F.try_divide(item_value, F.sum(item_value).over(Window.partitionBy(*keys)))
-    return df.withColumn(alias, F.coalesce(total_amount * share, F.lit(0.0)))
-
-
 def dedup_keep_rule(
     df: DataFrame,
     key: str | list[str],
@@ -76,19 +57,6 @@ def top_k_per_group(df: DataFrame, key: str | list[str], order_by: list[Column],
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= k)
         .withColumnRenamed("__rn", "rank_in_group")
-    )
-
-
-def min_by_group(df: DataFrame, key: str | list[str], pick: str, order_col: str) -> DataFrame:
-    """W4 — min-by: the ``pick`` value at the minimum ``order_col``.
-
-    Reference: api_to_gcs-checker.py:148-150 (min(folders, key=ts)).
-    Plain hash aggregate (min_by) — cheaper than a window when only the
-    winner is needed.
-    """
-    keys = [key] if isinstance(key, str) else key
-    return df.groupBy(*keys).agg(
-        F.min_by(pick, order_col).alias(pick), F.min(order_col).alias(order_col)
     )
 
 

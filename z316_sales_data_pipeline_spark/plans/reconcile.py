@@ -13,28 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..persistence import pin_fact
-
-from ..operators import setops
 from ..sources.tables import load_table
-
-
-def orders_missing_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G1 — o_custkey values with no customer row (RI violation set)."""
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    return setops.difference(
-        orders.select(F.col("o_custkey").alias("id")),
-        customer.select(F.col("c_custkey").alias("id")),
-    )
-
-
-def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D4-style anti-join: dimension rows never referenced by the fact."""
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    return customer.join(
-        orders.select(F.col("o_custkey").alias("c_custkey")).distinct(), "c_custkey", "left_anti"
-    ).select("c_custkey", "c_name", "c_nationkey")
 
 
 def _setdiff_counts(a: DataFrame, b: DataFrame, prefix: str) -> DataFrame:
