@@ -8,6 +8,7 @@ benchmark three rounds later.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
@@ -417,7 +418,17 @@ def test_ivf_partitioned_at_rest_prunes_partitions(spark, sf_dir):
     assert n_cells_present > 4  # sanity: the layout actually spreads cells
 
 
-def test_no_query_plans_cartesian_or_row_python(spark, sf_dir):
+@pytest.fixture(scope="module")
+def executed_plans(spark, sf_dir) -> dict[str, str]:
+    """Every ``bench_queries()`` entry's executed plan string, built once
+    for the fleet-wide plan checks below."""
+    return {
+        name: fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        for name, fn in entrymod.bench_queries().items()
+    }
+
+
+def test_no_query_plans_cartesian_or_row_python(executed_plans):
     """Fleet-wide plan hygiene: NO registry entry may compile to a
     CartesianProduct (unbounded pair blowup) or BatchEvalPython
     (row-at-a-time Python UDF). Arrow-batched Pandas operators
@@ -427,8 +438,7 @@ def test_no_query_plans_cartesian_or_row_python(spark, sf_dir):
     refactor silently drops a join condition or swaps a column
     expression for a Python lambda."""
     offenders = {}
-    for name, fn in entrymod.bench_queries().items():
-        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    for name, plan in executed_plans.items():
         marks = [m for m in ("CartesianProduct", "BatchEvalPython") if m in plan]
         if marks:
             offenders[name] = marks
@@ -497,7 +507,7 @@ _BOUNDED_GLOBAL_WINDOW_SITES = {
 }
 
 
-def test_no_query_plans_unpartitioned_window_over_unbounded_relation(spark, sf_dir):
+def test_no_query_plans_unpartitioned_window_over_unbounded_relation(executed_plans):
     """Fleet-wide plan hygiene, r4 verdict item 5: NO registry entry
     may compile to an ORDER BY window with an empty partition spec
     over an unbounded relation — that window sorts the whole relation
@@ -506,10 +516,9 @@ def test_no_query_plans_unpartitioned_window_over_unbounded_relation(spark, sf_d
     re-planned onto the two-phase zipWithIndex shape). Bounded sites
     (sketch-grain / post-LIMIT windows) are explicitly allowlisted."""
     offenders = {}
-    for name, fn in entrymod.bench_queries().items():
+    for name, plan in executed_plans.items():
         if name in _BOUNDED_GLOBAL_WINDOW_SITES:
             continue
-        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         hits = _unpartitioned_ordered_windows(plan)
         if hits:
             offenders[name] = hits[0][:160]
@@ -926,16 +935,61 @@ def test_run_sales_pipeline_counts_match_written_tables(spark, sf_dir, tmp_path)
 
 def test_run_sales_pipeline_job_budget(spark, sf_dir, tmp_path):
     """Job-budget guard: a second ``run_sales_pipeline`` in a session
-    runs at most 10 Spark jobs on ``sf_dir`` (measured: 10). Before the
+    runs at most 8 Spark jobs on ``sf_dir`` (measured: 8). Before the
     source schema memo and the write-job row-count observations it ran
     25: one parquet schema-inference job for each of its 7 source-table
     loads, and 8 for re-listing and re-counting the two tables it had
-    just written. A change that brings either back fails here."""
+    just written. With one enrichment and one orders frame per rebuild
+    (no separate order-day join) it dropped from 10 to 8. A change that
+    brings any of these back fails here."""
     from z316_sales_data_pipeline_spark.plans import pipeline
 
     pipeline.run_sales_pipeline(spark, sf_dir, str(tmp_path / "warm"))
     n = _jobs_run(spark, lambda: pipeline.run_sales_pipeline(spark, sf_dir, str(tmp_path / "lake")))
-    assert n <= 10, f"run_sales_pipeline ran {n} Spark jobs, budget 10"
+    assert n <= 8, f"run_sales_pipeline ran {n} Spark jobs, budget 8"
+
+
+def test_run_sales_pipeline_loads_each_source_once(spark, sf_dir, tmp_path, monkeypatch):
+    """One rebuild loads ``orders``, ``lineitem`` and ``part`` once each:
+    both facts share one enrichment and one orders frame."""
+    from collections import Counter
+
+    from z316_sales_data_pipeline_spark.plans import pipeline, sales_facts
+
+    loads = Counter()
+    for mod in (pipeline, sales_facts):
+        if hasattr(mod, "load_table"):
+            real = mod.load_table
+
+            def counting(spark, sf_dir, name, _real=real):
+                loads[name] += 1
+                return _real(spark, sf_dir, name)
+
+            monkeypatch.setattr(mod, "load_table", counting)
+    pipeline.run_sales_pipeline(spark, sf_dir, str(tmp_path / "lake"))
+    assert loads == Counter({"orders": 1, "lineitem": 1, "part": 1}), loads
+
+
+def test_run_sales_pipeline_writes_the_public_facts(spark, sf_dir, tmp_path):
+    """The written tables, lineage columns excluded, are the public facts
+    joined to their order day, row multiset for row multiset."""
+    from z316_sales_data_pipeline_spark.plans import pipeline, sales_facts
+    from z316_sales_data_pipeline_spark.sources.tables import load_table
+
+    out = str(tmp_path / "lake")
+    pipeline.run_sales_pipeline(spark, sf_dir, out)
+    order_days = load_table(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("pedido_id"), F.to_date("o_orderdate").alias("pedido_dia")
+    )
+    lineage = ("uuid", "source_id", "update_timestamp")
+    for table, fact in (("pedidos", sales_facts.pedidos_fact), ("itens_pedido", sales_facts.itens_fact)):
+        want = fact(spark, sf_dir).join(order_days, "pedido_id")
+        got = spark.read.parquet(f"{out}/{table}").drop(*lineage)
+        assert sorted(got.columns) == sorted(want.columns), table
+        got = got.withColumn("pedido_dia", F.col("pedido_dia").cast("date")).select(want.columns)
+        assert got.dtypes == want.dtypes, table
+        assert got.count() == want.count() > 0, table
+        assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty(), table
 
 
 def _webhook_epoch(spark, root, produto, doc: dict):

@@ -50,3 +50,39 @@ def test_oracle_sql_strings_run_verbatim_on_spark(spark, sf_dir):
         want = {tuple(r) for r in qs[name](spark, sf_dir).collect()}
         assert got == want, name
         assert want or name == "q11_important_parts"  # q11 tiny at sf0.001
+
+
+def test_parse_and_explode_edge_rows(spark):
+    """Pins the item rows of the webhook parse: one row per ``itens``
+    element with its fields as columns; a null array element gives one
+    row of null item fields; a null or empty ``itens``, malformed JSON
+    and a null payload give no row."""
+    from z316_sales_data_pipeline_spark.sources import json_ingest
+
+    payloads = [
+        '{"numero": 1, "situacao": "F", "itens": ['
+        '{"linha": 1, "idProduto": 10, "valor": 2.5, "quantidade": 2.0},'
+        '{"linha": 2, "idProduto": 11}]}',
+        '{"numero": 2, "situacao": "A", "itens": null}',
+        '{"numero": 3, "situacao": "A", "itens": []}',
+        '{"numero": 4, "situacao": "F", "itens": [null]}',
+        '{"numero": 5, "itens": [{"linha": 1, "idProduto": 12, "valor": 1.0, "quantidade": 3.0}]}',
+        '{"numero": 6, "situacao": "F", "itens": [',
+        None,
+    ]
+    df = spark.createDataFrame([(p,) for p in payloads], "payload string")
+    out = json_ingest.parse_and_explode(df)
+    assert out.dtypes == [
+        ("numero", "bigint"),
+        ("situacao", "string"),
+        ("linha", "int"),
+        ("produto_id", "bigint"),
+        ("valor", "double"),
+        ("quantidade", "double"),
+    ]
+    assert sorted(out.collect(), key=lambda r: (r.numero, r.linha or 0)) == [
+        (1, "F", 1, 10, 2.5, 2.0),
+        (1, "F", 2, 11, None, None),
+        (4, "F", None, None, None, None),
+        (5, None, 1, 12, 1.0, 3.0),
+    ]

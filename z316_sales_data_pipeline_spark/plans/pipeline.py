@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from .. import sinks
 from ..functions import scalar
-from ..sources.tables import load_table
 from . import sales_facts
 
 SOURCE_ID = "z316-spark"
@@ -28,10 +27,12 @@ def with_lineage(df: DataFrame) -> DataFrame:
     nondeterministic by design — excluded from oracle-checked queries,
     present on the write path.
     """
-    return (
-        df.withColumn("uuid", scalar.gen_uuid())
-        .withColumn("source_id", F.lit(f"{SOURCE_ID}-pdv_{VERSION}"))
-        .withColumn("update_timestamp", F.current_timestamp())
+    return df.withColumns(
+        {
+            "uuid": scalar.gen_uuid(),
+            "source_id": F.lit(f"{SOURCE_ID}-pdv_{VERSION}"),
+            "update_timestamp": F.current_timestamp(),
+        }
     )
 
 
@@ -43,16 +44,18 @@ def run_sales_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[s
     cluster sort = the reference's clustering fields
     (sales_to_bq/main.py:360-363 analogue).
 
+    Each source table is loaded once: the lineitem ⋈ part enrichment
+    and the orders frame (which carries the partition day) are built
+    once and shared by both facts.
+
     The returned row counts come from ``count(1)`` observations riding
     each write job (``sinks.counted``), not from re-reading the
     written tables.
     """
-    order_days = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("pedido_id"), F.to_date("o_orderdate").alias("pedido_dia")
-    )
-
-    pedidos = sales_facts.pedidos_fact(spark, sf_dir).join(order_days, "pedido_id")
-    itens = sales_facts.itens_fact(spark, sf_dir).join(order_days, "pedido_id")
+    items = sales_facts.enriched_items(spark, sf_dir)
+    orders = sales_facts._orders(spark, sf_dir)
+    pedidos = sales_facts._pedidos(items, orders)
+    itens = sales_facts._itens(items, orders)
 
     pedidos, pedidos_rows = sinks.counted(with_lineage(pedidos))
     itens, itens_rows = sinks.counted(with_lineage(itens))

@@ -26,6 +26,12 @@ shuffle] → window(partition by order key) [one shuffle, reused by the
 order-grain join that follows via the same hash partitioning] →
 hash-agg rollup (partial map-side) → join(orders) [AQE decides
 broadcast vs shuffle]. No Python touches a row.
+
+The public facts are thin wrappers over private builders (``_orders``,
+``_pedidos``, ``_itens``): a rebuild (``plans.pipeline.run_sales_pipeline``)
+builds one ``enriched_items`` enrichment and one orders frame and hands
+both to both facts, which carry the order day ``pedido_dia`` through the
+orders join they already do.
 """
 
 from __future__ import annotations
@@ -110,24 +116,32 @@ def enriched_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     valor = F.col("l_extendedprice")
     desconto_pct = F.col("l_discount") * 100.0
     qty = F.col("l_quantity")
-    return (
-        items.join(
-            F.broadcast(produto.select("p_partkey", "p_retailprice", "categoria", "p_name")),
-            items.l_partkey == produto.p_partkey,
-            "inner",
-        )
-        .withColumn("pedido_id", F.col("l_orderkey"))
-        .withColumn("produto_id", F.col("l_partkey"))
-        .withColumn("quantidade", qty)
-        .withColumn("valor", valor)
-        .withColumn("desconto", desconto_pct)
-        .withColumn("preco_custo", F.col("p_retailprice"))
-        .withColumn("custo_item", F.col("p_retailprice") * qty)
-        .withColumn("valor_bruto", scalar.gross_up(valor, desconto_pct))
-        .withColumn("desconto_produto", scalar.item_discount_amount(valor, desconto_pct))
-        .withColumn("categoria_principal", scalar.category_principal("categoria"))
-        .withColumn("categoria_secundaria", scalar.category_secundaria("categoria"))
+    return items.join(
+        F.broadcast(produto.select("p_partkey", "p_retailprice", "categoria", "p_name")),
+        items.l_partkey == produto.p_partkey,
+        "inner",
+    ).withColumns(  # no new column reads another: one projection
+        {
+            "pedido_id": F.col("l_orderkey"),
+            "produto_id": F.col("l_partkey"),
+            "quantidade": qty,
+            "valor": valor,
+            "desconto": desconto_pct,
+            "preco_custo": F.col("p_retailprice"),
+            "custo_item": F.col("p_retailprice") * qty,
+            "valor_bruto": scalar.gross_up(valor, desconto_pct),
+            "desconto_produto": scalar.item_discount_amount(valor, desconto_pct),
+            "categoria_principal": scalar.category_principal("categoria"),
+            "categoria_secundaria": scalar.category_secundaria("categoria"),
+        }
     )
+
+
+def _orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """orders with the synthetic discount string and the order day
+    (``pedido_dia``, the written tables' partition column)."""
+    orders = with_order_discount_str(load_table(spark, sf_dir, "orders"))
+    return orders.withColumn("pedido_dia", F.to_date("o_orderdate"))
 
 
 # ---------------------------------------------------------------------------
@@ -147,6 +161,12 @@ def pedidos_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
       lucro_bruto          :259-263 faturado − custo
     """
     items = enriched_items(spark, sf_dir)
+    return _pedidos(items, _orders(spark, sf_dir)).drop("pedido_dia")
+
+
+def _pedidos(items: DataFrame, orders: DataFrame) -> DataFrame:
+    """``pedidos_fact`` over ``enriched_items`` and ``_orders``, with
+    ``pedido_dia`` as its last column."""
     rollup = items.groupBy("pedido_id").agg(
         F.sum(F.col("preco_custo") * F.col("quantidade")).alias("custo_total"),
         F.sum(F.try_divide(F.col("valor"), F.lit(1.0) - F.col("desconto") / 100.0)).alias(
@@ -157,7 +177,6 @@ def pedidos_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("desconto_produto").alias("desconto_itens"),
         F.count(F.lit(1)).alias("n_itens"),
     )
-    orders = with_order_discount_str(load_table(spark, sf_dir, "orders"))
     joined = orders.join(rollup, orders.o_orderkey == rollup.pedido_id, "inner")
     return joined.select(
         F.col("pedido_id"),
@@ -172,6 +191,7 @@ def pedidos_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.col("o_totalprice").alias("valor_faturado"),
         F.round(F.col("o_totalprice") - F.col("custo_total"), 4).alias("lucro_bruto"),
+        F.col("pedido_dia"),
     )
 
 
@@ -228,11 +248,15 @@ def itens_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Conservation: sum(desconto_alocado) per order == desconto_pedido.
     """
     items = enriched_items(spark, sf_dir)
+    return _itens(items, _orders(spark, sf_dir)).drop("pedido_dia")
+
+
+def _itens(items: DataFrame, orders: DataFrame) -> DataFrame:
+    """``itens_fact`` over ``enriched_items`` and ``_orders``, with
+    ``pedido_dia`` as its last column."""
     w = Window.partitionBy("pedido_id")
     items = items.withColumn("base_desconto", F.sum(F.col("valor") * F.col("quantidade")).over(w))
-
-    orders = with_order_discount_str(load_table(spark, sf_dir, "orders"))
-    order_discount = orders.select("o_orderkey", "desconto_str")
+    order_discount = orders.select("o_orderkey", "desconto_str", "pedido_dia")
 
     joined = items.join(order_discount, items.pedido_id == order_discount.o_orderkey, "inner")
     desconto_pedido = scalar.parse_discount(F.col("desconto_str"), F.col("base_desconto"))
@@ -255,6 +279,7 @@ def itens_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(alocado, 4).alias("desconto_pedido_alocado"),
         F.round(valor_liquido, 4).alias("valor_liquido"),
         F.round(valor_liquido - F.col("custo_item"), 4).alias("lucro_item"),
+        F.col("pedido_dia"),
     )
 
 

@@ -3,11 +3,11 @@
 The reference's hot path carries one nested JSON document per sale
 (TinyERP ``retorno.pedido`` with an ``itens`` array). Spark-side:
 explicit ``StructType`` (§1.3 regime 1 — never inference), permissive
-``from_json`` (missing → NULL), ``explode`` for the item fan-out.
+``from_json`` (missing → NULL), ``inline`` for the item fan-out.
 
 For the driver tables we synthesize the documents from orders+lineitem
 (deterministically, so the DuckDB oracle can compute the same result
-relationally), then run the REAL parse→explode→project pipeline. This
+relationally), then run the REAL parse→inline pipeline. This
 tests that the JSON roundtrip preserves the analytics exactly.
 """
 
@@ -71,26 +71,20 @@ def synthesize_pedido_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def parse_and_explode(payloads: DataFrame) -> DataFrame:
-    """from_json (permissive) → explode itens → flat item rows.
+    """from_json (permissive) → inline itens → flat item rows.
 
     The reference's fan-out per line item (api_to_gcs/main.py:156-166,
-    sales_to_bq/main.py:347) as one Generate operator.
+    sales_to_bq/main.py:347) as one Generate operator: ``inline`` emits
+    the item struct's fields as named columns, so no struct-field
+    projection follows it.
+    A null or empty ``itens`` yields no rows; a null element yields one
+    row of null item fields.
     """
     parsed = payloads.select(F.from_json("payload", PEDIDO_JSON_SCHEMA).alias("doc"))
-    return (
-        parsed.select(
-            F.col("doc.numero").alias("numero"),
-            F.col("doc.situacao").alias("situacao"),
-            F.explode("doc.itens").alias("item"),
-        )
-        .select(
-            "numero",
-            "situacao",
-            F.col("item.linha").alias("linha"),
-            F.col("item.idProduto").alias("produto_id"),
-            F.col("item.valor").alias("valor"),
-            F.col("item.quantidade").alias("quantidade"),
-        )
+    return parsed.select(
+        F.col("doc.numero").alias("numero"),
+        F.col("doc.situacao").alias("situacao"),
+        F.inline("doc.itens").alias("linha", "produto_id", "valor", "quantidade"),
     )
 
 
