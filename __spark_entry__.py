@@ -1604,31 +1604,9 @@ def _minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     path; grouping to 17 rows is a map-side-combinable hash agg."""
     ex = pair_graph.full_shingle_table(spark, sf_dir, shingle_k=3, portable=True)
     n_hashes, n_bands = 16, 8
-    aggs = [
-        F.min(dedup._perm(F.col("__hp"), i)).alias(f"__m{i}") for i in range(n_hashes)
-    ]
-    sig = (
-        ex.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("__nsh"), *aggs)
-        .select(
-            "doc_id",
-            "__nsh",
-            F.array(*[f"__m{i}" for i in range(n_hashes)]).alias("minhash"),
-        )
-        .localCheckpoint(eager=True)  # signatures feed two joins below
-    )
-    bands = dedup.lsh_bands(sig, n_bands, n_hashes // n_bands).select(
-        "doc_id", "band_id", "band_hash"
-    )
-    cand = (
-        bands.alias("a")
-        .join(bands.alias("b"), ["band_id", "band_hash"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    # signatures feed two joins below
+    sig = dedup._signatures(ex, "doc_id", n_hashes).localCheckpoint(eager=True)
+    cand = dedup._band_pairs(dedup.lsh_bands(sig, n_bands, n_hashes // n_bands), "doc_id")
     sa = sig.select(
         F.col("doc_id").alias("id_a"),
         F.col("__nsh").alias("__na"),
@@ -1644,17 +1622,8 @@ def _minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0),
         lambda acc, x: acc + x,
     )
-    ea = ex.select(F.col("doc_id").alias("id_a"), "__h")
-    eb = ex.select(F.col("doc_id").alias("id_b"), "__h")
-    inter = (
-        cand.join(ea, "id_a")
-        .join(eb, ["id_b", "__h"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("__ninter"))
-    )
     return (
-        cand.join(inter, ["id_a", "id_b"], "left")
-        .na.fill({"__ninter": 0})
+        dedup._intersections(cand, ex, "doc_id")
         .join(sa, "id_a")
         .join(sb, "id_b")
         .withColumn("n_agree", agree.cast("int"))

@@ -418,16 +418,6 @@ def test_ivf_partitioned_at_rest_prunes_partitions(spark, sf_dir):
     assert n_cells_present > 4  # sanity: the layout actually spreads cells
 
 
-@pytest.fixture(scope="module")
-def executed_plans(spark, sf_dir) -> dict[str, str]:
-    """Every ``bench_queries()`` entry's executed plan string, built once
-    for the fleet-wide plan checks below."""
-    return {
-        name: fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        for name, fn in entrymod.bench_queries().items()
-    }
-
-
 def test_no_query_plans_cartesian_or_row_python(executed_plans):
     """Fleet-wide plan hygiene: NO registry entry may compile to a
     CartesianProduct (unbounded pair blowup) or BatchEvalPython
@@ -438,7 +428,7 @@ def test_no_query_plans_cartesian_or_row_python(executed_plans):
     refactor silently drops a join condition or swaps a column
     expression for a Python lambda."""
     offenders = {}
-    for name, plan in executed_plans.items():
+    for name, (plan, _columns) in executed_plans.items():
         marks = [m for m in ("CartesianProduct", "BatchEvalPython") if m in plan]
         if marks:
             offenders[name] = marks
@@ -516,7 +506,7 @@ def test_no_query_plans_unpartitioned_window_over_unbounded_relation(executed_pl
     re-planned onto the two-phase zipWithIndex shape). Bounded sites
     (sketch-grain / post-LIMIT windows) are explicitly allowlisted."""
     offenders = {}
-    for name, plan in executed_plans.items():
+    for name, (plan, _columns) in executed_plans.items():
         if name in _BOUNDED_GLOBAL_WINDOW_SITES:
             continue
         hits = _unpartitioned_ordered_windows(plan)
@@ -808,6 +798,65 @@ def test_ann_audit_kernel_has_one_home():
     assert not spread, spread
 
 
+def test_minhash_kernel_has_one_home():
+    """Source guard: across ``operators/dedup.py`` and
+    ``__spark_entry__.py`` each piece of the near-dup kernel has one
+    home, so per-caller copies cannot quietly come back. Counted by
+    enclosing function (qualified by its enclosing functions): ``_perm``
+    is called only in ``_signatures``, a join on
+    ``["band_id", "band_hash"]`` appears only in ``_band_pairs``,
+    ``"__ninter"`` is counted only in ``_intersections``, and the
+    n-gram pair path (``ngram_*`` and ``_set_pairs``) reaches
+    ``array_intersect`` only in ``_set_pairs``."""
+    import ast
+    import pathlib
+
+    from z316_sales_data_pipeline_spark.operators import dedup as D
+
+    homes: dict[str, set[str]] = {
+        "_perm call": set(),
+        "band join": set(),
+        '.alias("__ninter")': set(),
+        "n-gram array_intersect": set(),
+    }
+
+    def scan(node, where: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            inner = where
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = f"{where}.{child.name}" if where else child.name
+            if isinstance(child, ast.Call):
+                func = child.func
+                name = func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", None)
+                args = [a.value for a in child.args if isinstance(a, ast.Constant)]
+                if name == "_perm":
+                    homes["_perm call"].add(where)
+                if name == "join" and any(
+                    isinstance(a, ast.List)
+                    and [getattr(e, "value", None) for e in a.elts] == ["band_id", "band_hash"]
+                    for a in child.args
+                ):
+                    homes["band join"].add(where)
+                if name == "alias" and args == ["__ninter"]:
+                    homes['.alias("__ninter")'].add(where)
+            if (
+                isinstance(child, ast.Attribute)
+                and child.attr == "array_intersect"
+                and (where.startswith("ngram_") or where == "_set_pairs")
+            ):
+                homes["n-gram array_intersect"].add(where)
+            scan(child, inner)
+
+    for path in (D.__file__, entrymod.__file__):
+        scan(ast.parse(pathlib.Path(path).read_text()), "")
+    assert homes == {
+        "_perm call": {"_signatures"},
+        "band join": {"_band_pairs"},
+        '.alias("__ninter")': {"_intersections"},
+        "n-gram array_intersect": {"_set_pairs"},
+    }, homes
+
+
 def test_ivf_retrain_plan_releases_its_pins(spark, sf_dir):
     """``ivf_retrain_plan`` returns a driver-built row, so it releases
     every frame it pinned once its scalars are collected: a streaming
@@ -854,6 +903,48 @@ def _jobs_run(spark, fn) -> int:
             sc.setLocalProperty(key, None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _minhash_gate_stream(spark, sf_dir, tmp_path, n_epochs: int):
+    """A fresh ``minhash_gate_sink`` and ``n_epochs`` monotone-id slices
+    of the sf documents, about 84 docs each."""
+    from z316_sales_data_pipeline_spark.sources.tables import load_table
+    from z316_sales_data_pipeline_spark.streaming import pipeline as P
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
+    fold = P.minhash_gate_sink(
+        str(tmp_path / "st"), str(tmp_path / "acc"), str(tmp_path / "qua"), "text", "doc_id"
+    )
+    slices = [
+        docs.filter((F.col("doc_id") >= 84 * i) & (F.col("doc_id") < 84 * (i + 1)))
+        for i in range(n_epochs)
+    ]
+    return fold, slices
+
+
+def test_minhash_gate_sink_releases_its_pins(spark, sf_dir, tmp_path):
+    """A stream folds epochs for as long as it runs, so a
+    ``minhash_gate_sink`` epoch releases every frame it pinned: the
+    batch's shingle and band rows, the verified pairs and the labeled
+    split. Over four epochs no persistent RDD created during an epoch
+    survives it (compared by RDD id, as in
+    ``test_ivf_retrain_plan_releases_its_pins``)."""
+    fold, slices = _minhash_gate_stream(spark, sf_dir, tmp_path, 4)
+    jsc = spark.sparkContext._jsc
+    for epoch, sl in enumerate(slices):
+        before = set(jsc.getPersistentRDDs().keys())
+        fold(sl, epoch)
+        assert set(jsc.getPersistentRDDs().keys()) - before == set(), epoch
+
+
+def test_minhash_gate_epoch_job_budget(spark, sf_dir, tmp_path):
+    """A steady ``minhash_gate_sink`` epoch (prior segments at rest) runs
+    at most 28 Spark jobs. The pair kernel pins only what it builds, so
+    the batch's localCheckpointed shingle and band rows are not cached a
+    second time (40 jobs per epoch before)."""
+    fold, (sl0, sl1) = _minhash_gate_stream(spark, sf_dir, tmp_path, 2)
+    fold(sl0, 0)
+    assert _jobs_run(spark, lambda: fold(sl1, 1)) <= 28
 
 
 def _write_table(directory, name: str, columns: dict) -> None:

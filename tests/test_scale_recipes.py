@@ -207,12 +207,16 @@ def test_semantic_dedup_keeps_one_per_chain(spark):
 
 def test_minhash_candidate_recall_counts_consistent(spark, sf_dir):
     """tp ≤ min(true, candidates); ratios match the counts; recall on
-    this dup-heavy corpus is high (banding tuned for J≥0.35)."""
+    this dup-heavy corpus is high (banding tuned for J≥0.35). The
+    audit's candidates are exactly the pair builder's at threshold 0:
+    both run the same band join."""
     from z316_sales_data_pipeline_spark.operators import dedup
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
     r = dedup.minhash_candidate_recall(docs, "text", "doc_id", true_threshold=0.35).collect()[0]
     assert r["n_tp"] <= min(r["n_true"], r["n_candidates"])
+    pairs = dedup.minhash_near_dup_pairs(docs, "text", "doc_id", threshold=0.0, portable=True)
+    assert r["n_candidates"] == pairs.count()
     if r["n_true"]:
         assert r["recall"] == round(r["n_tp"] / r["n_true"], 6)
         assert r["recall"] >= 0.8

@@ -11,13 +11,14 @@ from __future__ import annotations
 
 import math
 import sys
+from pathlib import Path
 import time
 from collections import Counter
 from datetime import date, datetime
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from z316_sales_data_pipeline_spark.session import get_spark  # noqa: E402

@@ -15,8 +15,9 @@ from __future__ import annotations
 import contextlib
 import io
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from z316_sales_data_pipeline_spark.session import get_spark  # noqa: E402
@@ -894,7 +895,7 @@ def main() -> None:
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
         out += [f"## {name}", "", check, "", "```", buf.getvalue().rstrip(), "```", ""]
-    with open("/root/repo/docs/PLANS.md", "w") as f:
+    with open(Path(__file__).resolve().parents[1] / "docs" / "PLANS.md", "w") as f:
         f.write("\n".join(out))
     print(f"wrote docs/PLANS.md ({len(CHECKLIST)} plans)")
 

@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint64, shingles
-from ..persistence import persist_fact, pin_fact
+from ..persistence import persist_fact, pin_fact, release
 
 
 # ---------------------------------------------------------------------------
@@ -119,6 +119,58 @@ def shingle_table(
     ).withColumn("__hp", F.pmod(F.col("__h"), F.lit(_MINHASH_P)))
 
 
+def _signatures(ex: DataFrame, id_col: str, n_hashes: int) -> DataFrame:
+    """(id, __nsh, minhash) over a shingle table: ONE grouped pass
+    yields the signature AND the per-doc distinct shingle count (the
+    Jaccard denominator) — no second aggregation."""
+    aggs = [F.min(_perm(F.col("__hp"), i)).alias(f"__m{i}") for i in range(n_hashes)]
+    return (
+        ex.groupBy(id_col)
+        .agg(F.count(F.lit(1)).alias("__nsh"), *aggs)
+        .select(
+            id_col, "__nsh", F.array(*[f"__m{i}" for i in range(n_hashes)]).alias("minhash")
+        )
+    )
+
+
+def _band_pairs(index: DataFrame, id_col: str, probe: DataFrame | None = None) -> DataFrame:
+    """Canonical distinct (id_a < id_b) pairs sharing a band bucket of
+    ``index`` (id, band_id, band_hash). Band rows carry KEYS ONLY
+    through the join shuffle. Without ``probe`` it is a self-join under
+    ``<``; with one, ``probe`` × ``index`` under ``!=``, oriented by
+    least/greatest (a pair inside the probe is found from both sides)."""
+    right = index.select("band_id", "band_hash", F.col(id_col).alias("__ib"))
+    left = (index if probe is None else probe).select(
+        "band_id", "band_hash", F.col(id_col).alias("__ia")
+    )
+    joined = left.join(right, ["band_id", "band_hash"])
+    if probe is None:
+        pairs = joined.filter(F.col("__ia") < F.col("__ib")).select(
+            F.col("__ia").alias("id_a"), F.col("__ib").alias("id_b")
+        )
+    else:
+        pairs = joined.filter(F.col("__ia") != F.col("__ib")).select(
+            F.least("__ia", "__ib").alias("id_a"), F.greatest("__ia", "__ib").alias("id_b")
+        )
+    return pairs.dropDuplicates(["id_a", "id_b"])
+
+
+def _intersections(pairs: DataFrame, ex: DataFrame, id_col: str) -> DataFrame:
+    """``pairs`` plus ``__ninter`` = |A∩B| over the hashed shingle
+    relation ``ex``: a double join counted per pair, left-joined back
+    so pairs sharing no shingle count 0 (64-bit hashes: collision-safe
+    in practice)."""
+    ea = ex.select(F.col(id_col).alias("id_a"), "__h")
+    eb = ex.select(F.col(id_col).alias("id_b"), "__h")
+    inter = (
+        pairs.join(ea, "id_a")
+        .join(eb, ["id_b", "__h"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("__ninter"))
+    )
+    return pairs.join(inter, ["id_a", "id_b"], "left").na.fill({"__ninter": 0})
+
+
 def minhash_index(
     ex: DataFrame, id_col: str, n_hashes: int = 16, n_bands: int = 8
 ) -> DataFrame:
@@ -126,16 +178,7 @@ def minhash_index(
     band_hash), n_bands rows per doc. Partition/bucket it by band_hash
     at rest and candidate lookups become co-located joins.
     """
-    rows_per_band = n_hashes // n_bands
-    aggs = [F.min(_perm(F.col("__hp"), i)).alias(f"__m{i}") for i in range(n_hashes)]
-    sig = (
-        ex.groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("__nsh"), *aggs)
-        .select(
-            id_col, "__nsh", F.array(*[f"__m{i}" for i in range(n_hashes)]).alias("minhash")
-        )
-    )
-    return lsh_bands(sig, n_bands, rows_per_band).select(
+    return lsh_bands(_signatures(ex, id_col, n_hashes), n_bands, n_hashes // n_bands).select(
         id_col, "__nsh", "band_id", "band_hash"
     )
 
@@ -145,18 +188,9 @@ def _verified_jaccard(
 ) -> DataFrame:
     """Exact Jaccard for candidate (id_a, id_b) pairs by relational set
     algebra on the hashed shingle relation ``ex``; ``sizes`` is
-    (id, __nsh). |A∩B| via a double join, |A∪B| = |A|+|B|−|A∩B|."""
-    ea = ex.select(F.col(id_col).alias("id_a"), "__h")
-    eb = ex.select(F.col(id_col).alias("id_b"), "__h")
-    inter = (
-        pairs.join(ea, "id_a")
-        .join(eb, ["id_b", "__h"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("__ninter"))
-    )
+    (id, __nsh). |A∪B| = |A|+|B|−|A∩B|."""
     return (
-        pairs.join(inter, ["id_a", "id_b"], "left")
-        .na.fill({"__ninter": 0})
+        _intersections(pairs, ex, id_col)
         .join(sizes.select(F.col(id_col).alias("id_a"), F.col("__nsh").alias("__na")), "id_a")
         .join(sizes.select(F.col(id_col).alias("id_b"), F.col("__nsh").alias("__nb")), "id_b")
         .withColumn(
@@ -195,38 +229,22 @@ def minhash_near_dup_incremental(
     banding are deterministic. Callers that also PERSIST the batch's
     relations (minhash_gate_sink appends them to the at-rest segments)
     pass the prebuilt ``ex_new``/``idx_new`` so the batch is shingled
-    once, not twice.
+    once, not twice; the caller owns their pins, this kernel pins and
+    releases only what it builds.
     """
-    ex_new = (
-        ex_new
-        if ex_new is not None
-        else shingle_table(new_docs, text_col, id_col, shingle_k, portable)
-    ).persist()
-    idx_new = (
-        idx_new if idx_new is not None else minhash_index(ex_new, id_col, n_hashes, n_bands)
-    ).persist()
-    all_idx = corpus_index.unionByName(idx_new)
-    left = idx_new.select("band_id", "band_hash", F.col(id_col).alias("__id_n"))
-    right = all_idx.select("band_id", "band_hash", F.col(id_col).alias("__id_o"))
-    pairs = (
-        left.join(right, ["band_id", "band_hash"])
-        .filter(F.col("__id_n") != F.col("__id_o"))
-        .select(
-            F.least("__id_n", "__id_o").alias("id_a"),
-            F.greatest("__id_n", "__id_o").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sizes = (
-        corpus_index.select(F.col(id_col), "__nsh")
-        .unionByName(idx_new.select(F.col(id_col), "__nsh"))
-        .dropDuplicates([id_col])
-    )
+    built = []
+    if ex_new is None:
+        ex_new = shingle_table(new_docs, text_col, id_col, shingle_k, portable).persist()
+        built.append(ex_new)
+    if idx_new is None:
+        idx_new = minhash_index(ex_new, id_col, n_hashes, n_bands).persist()
+        built.append(idx_new)
+    pairs = _band_pairs(corpus_index.unionByName(idx_new), id_col, probe=idx_new)
+    sizes = corpus_index.unionByName(idx_new).select(id_col, "__nsh").dropDuplicates([id_col])
     ex_all = corpus_ex.unionByName(ex_new)
     result = _verified_jaccard(pairs, ex_all, sizes, id_col, threshold)
     out = persist_fact(result)  # pair-output grain: keep lineage
-    ex_new.unpersist()
-    idx_new.unpersist()
+    release(*built)
     return out
 
 
@@ -333,7 +351,6 @@ def minhash_near_dup_pairs(
     8×4) — false positives cost only a cheap verified join, missed
     candidates are unrecoverable.
     """
-    rows_per_band = n_hashes // n_bands
     # Distinct (id, shingle-hash) relation — persisted because it feeds
     # the signature aggregation AND the candidate-pair intersection
     # join. At lake scale this is the shingle table you'd materialize
@@ -342,33 +359,10 @@ def minhash_near_dup_pairs(
     # collect_set (ObjectHashAggregate falls out of whole-stage codegen
     # and measured ~2× slower end-to-end).
     ex = (ex if ex is not None else shingle_table(df, text_col, id_col, shingle_k, portable)).persist()
-    # ONE grouped pass yields the signature AND the per-doc distinct
-    # shingle count (the Jaccard denominator) — no second aggregation.
-    aggs = [F.min(_perm(F.col("__hp"), i)).alias(f"__m{i}") for i in range(n_hashes)]
-    sig = (
-        ex.groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("__nsh"), *aggs)
-        .select(
-            id_col,
-            "__nsh",
-            F.array(*[f"__m{i}" for i in range(n_hashes)]).alias("minhash"),
-        )
-        .persist()
+    sig = _signatures(ex, id_col, n_hashes).persist()
+    pairs = _band_pairs(
+        lsh_bands(sig.select(id_col, "minhash"), n_bands, n_hashes // n_bands), id_col
     )
-    # Band rows carry KEYS ONLY through the self-join shuffle.
-    banded = lsh_bands(sig.select(id_col, "minhash"), n_bands, rows_per_band).select(
-        id_col, "band_id", "band_hash"
-    )
-    left = banded.select("band_id", "band_hash", F.col(id_col).alias("id_a"))
-    right = banded.select("band_id", "band_hash", F.col(id_col).alias("id_b"))
-    pairs = (
-        left.join(right, ["band_id", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    # Exact Jaccard by relational set algebra on the hashed shingles
-    # (64-bit hashes: collision-safe in practice).
     result = _verified_jaccard(pairs, ex, sig.select(id_col, "__nsh"), id_col, threshold)
     # Materialize the (tiny: pairs-only) result eagerly, then free both
     # cached intermediates — otherwise repeated invocations in one
@@ -379,6 +373,58 @@ def minhash_near_dup_pairs(
     ex.unpersist()
     sig.unpersist()
     return out
+
+
+def _hashed_shingle_sets(
+    df: DataFrame, text_col: str, id_col: str, group_col: str, shingle_k: int
+) -> DataFrame:
+    """(group, __id, __sh, __n): each doc's distinct xxhash64'd shingles
+    and their count, the base of the exact n-gram pair builders."""
+    return df.select(
+        F.col(group_col),
+        F.col(id_col).alias("__id"),
+        F.array_distinct(
+            F.transform(shingles(text_col, shingle_k), lambda s: F.xxhash64(s))
+        ).alias("__sh"),
+    ).withColumn("__n", F.size("__sh"))
+
+
+def _set_pairs(
+    sets: DataFrame, group_col: str, threshold: float, probe: DataFrame | None = None
+) -> DataFrame:
+    """(group, id_a, id_b, jaccard ≥ threshold) over hashed shingle sets
+    of :func:`_hashed_shingle_sets`, paired within ``group_col``.
+    Without ``probe`` it is a self-join under ``<``; with one, ``probe``
+    × ``sets`` under ``!=``, oriented by least/greatest and deduped on
+    the canonical key (a pair inside the probe is found from both
+    sides). |A∪B| = |A|+|B|−|A∩B| from the precomputed sizes."""
+
+    def side(df: DataFrame, s: str) -> DataFrame:
+        return df.select(
+            group_col, F.col("__id").alias(f"__i{s}"), F.col("__sh").alias(f"sh_{s}"),
+            F.col("__n").alias(f"n{s}"),
+        )
+
+    joined = side(sets if probe is None else probe, "a").join(side(sets, "b"), group_col)
+    if probe is None:
+        pairs = joined.filter(F.col("__ia") < F.col("__ib")).withColumnsRenamed(
+            {"__ia": "id_a", "__ib": "id_b"}
+        )
+    else:
+        pairs = (
+            joined.filter(F.col("__ia") != F.col("__ib"))
+            .withColumn("id_a", F.least("__ia", "__ib"))
+            .withColumn("id_b", F.greatest("__ia", "__ib"))
+            .dropDuplicates([group_col, "id_a", "id_b"])
+        )
+    inter = F.col("__inter").cast("double")
+    union = (F.col("na") + F.col("nb") - F.col("__inter")).cast("double")
+    return (
+        pairs.withColumn("__inter", F.size(F.array_intersect("sh_a", "sh_b")))
+        .withColumn("jaccard", F.round(F.try_divide(inter, union), 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select(group_col, "id_a", "id_b", "jaccard")
+    )
 
 
 def ngram_jaccard_pairs(
@@ -403,40 +449,10 @@ def ngram_jaccard_pairs(
     LOSS here (near-dup pairs have near-equal sizes — it prunes little
     and taxes every pair) and deliberately left out.
     """
-    base = df.select(
-        F.col(group_col),
-        F.col(id_col),
-        F.array_distinct(
-            F.transform(shingles(text_col, shingle_k), lambda s: F.xxhash64(s))
-        ).alias("__sh"),
-    ).withColumn("__n", F.size("__sh")).persist()
-    a = base.select(
-        F.col(group_col), F.col(id_col).alias("id_a"), F.col("__sh").alias("sh_a"), F.col("__n").alias("na")
-    )
-    b = base.select(
-        F.col(group_col), F.col(id_col).alias("id_b"), F.col("__sh").alias("sh_b"), F.col("__n").alias("nb")
-    )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    result = (
-        a.join(b, group_col)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("__inter", inter)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.try_divide(
-                    F.col("__inter").cast("double"),
-                    (F.col("na") + F.col("nb") - F.col("__inter")).cast("double"),
-                ),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select(group_col, "id_a", "id_b", "jaccard")
-    )
+    base = _hashed_shingle_sets(df, text_col, id_col, group_col, shingle_k).persist()
     # same cache discipline as minhash_near_dup_pairs: materialize the
     # (pairs-only) result, then free the shingle cache
-    out = persist_fact(result)  # pair-output grain: keep lineage
+    out = persist_fact(_set_pairs(base, group_col, threshold))  # pair-output grain: keep lineage
     base.unpersist()
     return out
 
@@ -466,56 +482,14 @@ def ngram_jaccard_pairs_incremental(
     |A|+|B|−|A∩B|. Output is canonical (id_a < id_b) regardless of
     which side a pair member arrived on.
     """
-
-    def _base(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col(group_col),
-            F.col(id_col),
-            F.array_distinct(
-                F.transform(shingles(text_col, shingle_k), lambda s: F.xxhash64(s))
-            ).alias("__sh"),
-        ).withColumn("__n", F.size("__sh"))
-
     # only the batch side is referenced twice (probe side + its slice
     # of the b side); the corpus side streams through the join once
-    new_b = _base(new_docs).persist()
-    all_b = _base(corpus_docs).unionByName(new_b)
-    a = new_b.select(
-        F.col(group_col),
-        F.col(id_col).alias("__ia"),
-        F.col("__sh").alias("sh_a"),
-        F.col("__n").alias("na"),
-    )
-    b = all_b.select(
-        F.col(group_col),
-        F.col(id_col).alias("__ib"),
-        F.col("__sh").alias("sh_b"),
-        F.col("__n").alias("nb"),
-    )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    result = (
-        a.join(b, group_col)
-        .filter(F.col("__ia") != F.col("__ib"))
-        # canonical orientation; new×new pairs appear once from each
-        # side, so dedup on the canonical key
-        .withColumn("id_a", F.least("__ia", "__ib"))
-        .withColumn("id_b", F.greatest("__ia", "__ib"))
-        .dropDuplicates([group_col, "id_a", "id_b"])
-        .withColumn("__inter", inter)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.try_divide(
-                    F.col("__inter").cast("double"),
-                    (F.col("na") + F.col("nb") - F.col("__inter")).cast("double"),
-                ),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select(group_col, "id_a", "id_b", "jaccard")
-    )
-    out = persist_fact(result)  # pair-output grain: keep lineage
+    new_b = _hashed_shingle_sets(new_docs, text_col, id_col, group_col, shingle_k).persist()
+    all_b = _hashed_shingle_sets(
+        corpus_docs, text_col, id_col, group_col, shingle_k
+    ).unionByName(new_b)
+    # pair-output grain: keep lineage
+    out = persist_fact(_set_pairs(all_b, group_col, threshold, probe=new_b))
     new_b.unpersist()
     return out
 
@@ -859,16 +833,7 @@ def minhash_candidate_recall(
     One row: n_true, n_candidates, n_tp, recall, candidate_precision.
     """
     ex = shingle_table(df, text_col, id_col, shingle_k, portable).persist()
-    idx = minhash_index(ex, id_col, n_hashes, n_bands)
-    left = idx.select("band_id", "band_hash", F.col(id_col).alias("id_a"))
-    right = idx.select("band_id", "band_hash", F.col(id_col).alias("id_b"))
-    cand = (
-        left.join(right, ["band_id", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-        .persist()
-    )
+    cand = _band_pairs(minhash_index(ex, id_col, n_hashes, n_bands), id_col).persist()
     sizes = ex.groupBy(id_col).agg(F.count(F.lit(1)).alias("__nsh"))
     all_pairs = (
         sizes.select(F.col(id_col).alias("id_a"))

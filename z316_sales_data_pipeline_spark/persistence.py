@@ -18,6 +18,9 @@ The grain rule (r8 VERDICT item 3):
 
 Pinned by ``tests/test_plan_properties.py::
 test_fact_grain_frames_never_localcheckpoint``.
+
+Either kind of pin lives until it is released: :func:`release` frees
+both, so a long-running stream can drop each epoch's pins at its end.
 """
 
 from __future__ import annotations
@@ -56,3 +59,20 @@ def persist_fact(df: DataFrame) -> DataFrame:
     df = df.persist(StorageLevel.DISK_ONLY)
     df.count()
     return df
+
+
+def release(*frames: DataFrame) -> None:
+    """Free what each frame pins, once nothing reads it again: the
+    cache of a frame persisted through this very object, or the blocks
+    of a ``localCheckpoint``. ``unpersist()`` alone does not free a
+    local checkpoint: its blocks belong to the RDD under the frame's
+    ``LogicalRDD`` plan, which stays among the SparkContext's
+    persistent RDDs until that RDD is unpersisted. Uncaching goes by
+    plan, so release only frames the caller itself pinned."""
+    for df in frames:
+        if df.is_cached:
+            df.unpersist()
+            continue
+        plan = df._jdf.queryExecution().logical()
+        if plan.nodeName() == "LogicalRDD":
+            plan.rdd().unpersist(False)

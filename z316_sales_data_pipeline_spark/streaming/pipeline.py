@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import sinks
+from ..persistence import release
 
 
 def _read_commit(path: str) -> tuple[int, int] | None:
@@ -169,12 +170,15 @@ def _split_by_drop(
         .drop("__drop")
         .localCheckpoint(eager=True)  # batch grain; pins the split
     )
-    sinks.append_snapshot(
-        labeled.filter(F.col("__keep")).drop("__keep"), accepted_dir, txn_key=txn
-    )
-    sinks.append_snapshot(
-        labeled.filter(~F.col("__keep")).drop("__keep"), quarantined_dir, txn_key=txn
-    )
+    try:
+        sinks.append_snapshot(
+            labeled.filter(F.col("__keep")).drop("__keep"), accepted_dir, txn_key=txn
+        )
+        sinks.append_snapshot(
+            labeled.filter(~F.col("__keep")).drop("__keep"), quarantined_dir, txn_key=txn
+        )
+    finally:
+        release(labeled)
 
 
 def _budget_fold(
@@ -1241,8 +1245,7 @@ def minhash_gate_sink(
             f"{id_col} long, __nsh long, band_id int, band_hash long",
         )
         # batch-grain, materialized once: shared by the pair kernel AND
-        # the segment appends (the kernel's own persist/unpersist cycle
-        # would otherwise recompute the shingling for the appends)
+        # the segment appends, released when the epoch is done
         ex_new = dedup_ops.shingle_table(batch, text_col, id_col, shingle_k).localCheckpoint(
             eager=True
         )
@@ -1262,12 +1265,15 @@ def minhash_gate_sink(
             ex_new=ex_new,
             idx_new=idx_new,
         )
-        sinks.append_snapshot(ex_new, ex_dir, txn_key=txn)
-        sinks.append_snapshot(idx_new, idx_dir, txn_key=txn)
-        _split_by_drop(
-            batch, pairs.select(F.col("id_b").alias(id_col)), id_col,
-            accepted_dir, quarantined_dir, txn,
-        )
+        try:
+            sinks.append_snapshot(ex_new, ex_dir, txn_key=txn)
+            sinks.append_snapshot(idx_new, idx_dir, txn_key=txn)
+            _split_by_drop(
+                batch, pairs.select(F.col("id_b").alias(id_col)), id_col,
+                accepted_dir, quarantined_dir, txn,
+            )
+        finally:
+            release(ex_new, idx_new, pairs)
 
     return _monotone_gate(
         "minhash_gate_sink", state_dir, "_MHG_COMMIT", id_col, step,
