@@ -883,17 +883,28 @@ def test_ivf_retrain_plan_releases_its_pins(spark, sf_dir):
     assert set(jsc.getPersistentRDDs().keys()) - before == set()
 
 
-def _jobs_run(spark, fn) -> int:
-    """Spark jobs ``fn()`` submits, counted in the status store.
+def _job_ids(spark, fn) -> tuple[set[int], set[int]]:
+    """Run ``fn()`` under a fresh job group; return the ids of the jobs
+    in that group and the ids of every job the status store gained
+    meanwhile, read once the listener bus has drained.
 
-    The jobs are tagged with a fresh job group and counted once the
-    listener bus has drained. Counting by group instead of by the
-    store's job-list size keeps the count exact late in a long
-    session, where the store trims old jobs (``spark.ui.retainedJobs``).
+    The store lists jobs newest first and job ids only grow, so the
+    jobs it gained are the leading ones above its newest id before the
+    call; old jobs the store trims late in a long session
+    (``spark.ui.retainedJobs``) cannot blur either set.
     """
+    import itertools
     import uuid
 
     sc = spark.sparkContext
+    bus, store = sc._jsc.sc().listenerBus(), sc._jsc.sc().statusStore()
+
+    def newest_first():
+        jobs = store.jobsList(None)
+        return (jobs.apply(i).jobId() for i in range(jobs.size()))
+
+    bus.waitUntilEmpty()
+    last = next(newest_first(), -1)
     group = f"job-count-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
@@ -901,25 +912,37 @@ def _jobs_run(spark, fn) -> int:
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    bus.waitUntilEmpty()
+    gained = set(itertools.takewhile(lambda job_id: job_id > last, newest_first()))
+    return set(sc.statusTracker().getJobIdsForGroup(group)), gained
 
 
-def _minhash_gate_stream(spark, sf_dir, tmp_path, n_epochs: int):
-    """A fresh ``minhash_gate_sink`` and ``n_epochs`` monotone-id slices
-    of the sf documents, about 84 docs each."""
+def _jobs_run(spark, fn) -> int:
+    """Spark jobs ``fn()`` submits, counted by job group in the status
+    store (:func:`_job_ids`)."""
+    return len(_job_ids(spark, fn)[0])
+
+
+def _doc_slices(spark, sf_dir, n_epochs: int):
+    """``n_epochs`` monotone-id slices of the sf documents, about 84
+    docs each."""
     from z316_sales_data_pipeline_spark.sources.tables import load_table
-    from z316_sales_data_pipeline_spark.streaming import pipeline as P
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    fold = P.minhash_gate_sink(
-        str(tmp_path / "st"), str(tmp_path / "acc"), str(tmp_path / "qua"), "text", "doc_id"
-    )
-    slices = [
+    return [
         docs.filter((F.col("doc_id") >= 84 * i) & (F.col("doc_id") < 84 * (i + 1)))
         for i in range(n_epochs)
     ]
-    return fold, slices
+
+
+def _minhash_gate_stream(spark, sf_dir, tmp_path, n_epochs: int):
+    """A fresh ``minhash_gate_sink`` and ``n_epochs`` document slices."""
+    from z316_sales_data_pipeline_spark.streaming import pipeline as P
+
+    fold = P.minhash_gate_sink(
+        str(tmp_path / "st"), str(tmp_path / "acc"), str(tmp_path / "qua"), "text", "doc_id"
+    )
+    return fold, _doc_slices(spark, sf_dir, n_epochs)
 
 
 def test_minhash_gate_sink_releases_its_pins(spark, sf_dir, tmp_path):
@@ -945,6 +968,25 @@ def test_minhash_gate_epoch_job_budget(spark, sf_dir, tmp_path):
     fold, (sl0, sl1) = _minhash_gate_stream(spark, sf_dir, tmp_path, 2)
     fold(sl0, 0)
     assert _jobs_run(spark, lambda: fold(sl1, 1)) <= 28
+
+
+def test_suffix_span_sink_releases_its_pins(spark, sf_dir, tmp_path):
+    """A ``suffix_span_sink`` epoch releases every frame it pinned: the
+    batch's localCheckpointed window rows and the kernel's candidate
+    windows (``dedup._suffix_spans_pinned``), once the spans are
+    appended. Over three epochs no persistent RDD created during an
+    epoch survives it (2 per epoch did before), and the last, steady
+    epoch runs at most 31 Spark jobs."""
+    from z316_sales_data_pipeline_spark.streaming import pipeline as P
+
+    fold = P.suffix_span_sink(str(tmp_path / "st"), str(tmp_path / "spans"), "text", "doc_id")
+    jsc = spark.sparkContext._jsc
+    jobs = {}
+    for epoch, sl in enumerate(_doc_slices(spark, sf_dir, 3)):
+        before = set(jsc.getPersistentRDDs().keys())
+        jobs[epoch] = _jobs_run(spark, lambda: fold(sl, epoch))
+        assert set(jsc.getPersistentRDDs().keys()) - before == set(), epoch
+    assert jobs[2] <= 31, jobs
 
 
 def _write_table(directory, name: str, columns: dict) -> None:
@@ -1038,6 +1080,96 @@ def test_run_sales_pipeline_job_budget(spark, sf_dir, tmp_path):
     pipeline.run_sales_pipeline(spark, sf_dir, str(tmp_path / "warm"))
     n = _jobs_run(spark, lambda: pipeline.run_sales_pipeline(spark, sf_dir, str(tmp_path / "lake")))
     assert n <= 8, f"run_sales_pipeline ran {n} Spark jobs, budget 8"
+
+
+def test_run_sales_pipeline_jobs_stay_in_the_callers_group(spark, sf_dir, tmp_path):
+    """Every job of a steady rebuild runs in the caller's job group, the
+    ``itens_pedido`` write's jobs on the worker thread too: the group
+    holds all 8 jobs the status store gained during the call. A plain
+    ``threading.Thread`` starts without the caller's local properties,
+    so its 4 jobs would leave the group and
+    ``test_run_sales_pipeline_job_budget`` would count only the other 4."""
+    from z316_sales_data_pipeline_spark.plans import pipeline
+
+    pipeline.run_sales_pipeline(spark, sf_dir, str(tmp_path / "warm"))
+    in_group, gained = _job_ids(
+        spark, lambda: pipeline.run_sales_pipeline(spark, sf_dir, str(tmp_path / "lake"))
+    )
+    assert in_group == gained and len(gained) == 8, (sorted(in_group), sorted(gained))
+
+
+@pytest.mark.parametrize("failing", ["_pedidos", "_itens"])
+def test_run_sales_pipeline_raises_a_failed_fact_write(spark, sf_dir, tmp_path, monkeypatch, failing):
+    """A fact that fails to build raises out of ``run_sales_pipeline``,
+    whether it is built on the calling thread (``_pedidos``) or on the
+    worker (``_itens``), and only once the other write, slowed down here,
+    has finished: no thread outlives the call.
+
+    One failure-path difference from writing the tables one after the
+    other: the sibling table may now be overwritten when the other
+    write fails. Neither write was atomic before either."""
+    import os
+    import threading
+    import time
+
+    from z316_sales_data_pipeline_spark import sinks
+    from z316_sales_data_pipeline_spark.plans import pipeline, sales_facts
+
+    class FactFailed(RuntimeError):
+        pass
+
+    def fail(items, orders):
+        raise FactFailed(failing)
+
+    def slow_write(df, path, *args, _write=sinks.write_partitioned, **kwargs):
+        time.sleep(1.0)
+        _write(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(sales_facts, failing, fail)
+    monkeypatch.setattr(sinks, "write_partitioned", slow_write)
+    threads = threading.active_count()
+    out = tmp_path / "lake"
+    with pytest.raises(FactFailed, match=failing):
+        pipeline.run_sales_pipeline(spark, sf_dir, str(out))
+    assert threading.active_count() == threads
+    sibling = "itens_pedido" if failing == "_pedidos" else "pedidos"
+    assert os.listdir(out) == [sibling] and (out / sibling / "_SUCCESS").exists()
+
+
+def test_package_starts_threads_only_as_inheritable_threads():
+    """Source guard: no module of the package names ``threading.Thread``
+    (called, subclassed or passed) or a ``Thread`` imported from
+    ``threading``. A driver thread that runs Spark jobs is a
+    ``pyspark.InheritableThread``, which copies the caller's local
+    properties, so a fan-out cannot drop jobs out of the caller's job
+    group (and out of every job count taken by group)."""
+    import ast
+    import pathlib
+
+    import z316_sales_data_pipeline_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        modules = {"threading"} | {
+            a.asname for n in ast.walk(tree) if isinstance(n, ast.Import)
+            for a in n.names if a.name == "threading" and a.asname
+        }
+        names = {
+            a.asname or a.name for n in ast.walk(tree)
+            if isinstance(n, ast.ImportFrom) and n.module == "threading"
+            for a in n.names if a.name == "Thread"
+        }
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "Thread"
+                and isinstance(node.value, ast.Name)
+                and node.value.id in modules
+            ) or (isinstance(node, ast.Name) and node.id in names):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not offenders, offenders
 
 
 def test_run_sales_pipeline_loads_each_source_once(spark, sf_dir, tmp_path, monkeypatch):

@@ -1264,6 +1264,27 @@ def suffix_dedup_spans_incremental(
     bit-identical with pruning on or off (pinned test) while the
     corpus-side shuffle shrinks to near the true match volume.
     """
+    return _suffix_spans_pinned(
+        corpus_windows, new_docs, text_col, id_col, min_tokens, max_tokens,
+        win_new, corpus_docs, bloom_m_bits,
+    )[0]
+
+
+def _suffix_spans_pinned(
+    corpus_windows: DataFrame,
+    new_docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    min_tokens: int,
+    max_tokens: int,
+    win_new: DataFrame | None,
+    corpus_docs: DataFrame | None,
+    bloom_m_bits: int | None,
+) -> tuple[DataFrame, list[DataFrame]]:
+    """:func:`suffix_dedup_spans_incremental`'s spans plus the frames it
+    pinned to build them. The spans are lazy and read those pins, so a
+    caller releases them (``persistence.release``) once the spans are
+    consumed; ``suffix_span_sink`` does so after each epoch's append."""
     if corpus_docs is None:
         raise ValueError(
             "suffix_dedup_spans_incremental: corpus_docs is required — the "
@@ -1271,9 +1292,11 @@ def suffix_dedup_spans_incremental(
             "verify arm re-extracts candidate window text from the doc "
             "relation positionally"
         )
+    pins = []
     if win_new is None:
         win_new = suffix_window_table(new_docs, text_col, id_col, min_tokens, max_tokens)
         win_new = persist_fact(win_new)  # batch-window grain: reused thrice by independent stages — eager
+        pins.append(win_new)
     if bloom_m_bits:
         from .bloom import bloom_prune, build_bloom
 
@@ -1296,6 +1319,7 @@ def suffix_dedup_spans_incremental(
     batch_w = persist_fact(
         _extract_windows(new_docs, cand_new, text_col, id_col, min_tokens)
     )  # candidate grain: corpus-verify join + within-batch agg + output (independent — eager)
+    pins.append(batch_w)
     # verify arm, corpus side: re-slice ONLY hash-matched corpus windows
     cand_corpus = corpus_windows.join(matched_h, "__h", "left_semi")
     corpus_hw = (
@@ -1312,7 +1336,7 @@ def suffix_dedup_spans_incremental(
     )
     dup_hw = corpus_hw.unionByName(batch_multi_hw).distinct()
     hits = batch_w.join(dup_hw, ["__h", "__w"], "left_semi").select(id_col, "pos")
-    return _merge_window_islands(hits, id_col, min_tokens)
+    return _merge_window_islands(hits, id_col, min_tokens), pins
 
 
 def eval_span_contamination(

@@ -1335,22 +1335,20 @@ def suffix_span_sink(
         prior_docs = _prior_segments(
             spark, docs_dir, id_col, lo, f"{id_col} long, {text_col} string"
         )
+        # batch-window grain: probe + append, released when the epoch is done
         win_new = dedup_ops.suffix_window_table(
             batch, text_col, id_col, min_tokens, max_tokens
-        ).localCheckpoint(eager=True)  # batch-window grain: probe + append
-        spans = dedup_ops.suffix_dedup_spans_incremental(
-            prior_win,
-            batch,
-            text_col,
-            id_col,
-            min_tokens,
-            max_tokens,
-            win_new=win_new,
-            corpus_docs=prior_docs,
+        ).localCheckpoint(eager=True)
+        spans, pins = dedup_ops._suffix_spans_pinned(
+            prior_win, batch, text_col, id_col, min_tokens, max_tokens,
+            win_new, prior_docs, None,
         )
-        sinks.append_snapshot(win_new, win_dir, txn_key=txn)
-        sinks.append_snapshot(batch.select(id_col, text_col), docs_dir, txn_key=txn)
-        sinks.append_snapshot(spans, spans_dir, txn_key=txn)
+        try:
+            sinks.append_snapshot(win_new, win_dir, txn_key=txn)
+            sinks.append_snapshot(batch.select(id_col, text_col), docs_dir, txn_key=txn)
+            sinks.append_snapshot(spans, spans_dir, txn_key=txn)
+        finally:
+            release(win_new, *pins)
 
     return _monotone_gate(
         "suffix_span_sink", state_dir, "_SSS_COMMIT", id_col, step,
