@@ -701,13 +701,19 @@ def test_versioned_table_format_lives_only_in_sinks():
 
 
 def test_streaming_epoch_protocol_has_one_home():
-    """Source guard: in ``streaming/pipeline.py`` the monotone-id gate
-    protocol and the token-budget fold each have one home, so per-sink
-    copies cannot quietly come back. ``_read_commit`` and
-    ``_write_commit`` are each called from exactly one function
-    (qualified by its enclosing functions), exactly one ``raise``
-    carries the ``late/reordered`` refusal (docstrings do not count),
-    and ``_token_budget_fold_cum`` has one call site."""
+    """Source guard: in ``streaming/pipeline.py`` the two epoch
+    protocols (module docstring, mechanisms 1 and 2) and the
+    token-budget fold each have one home, so per-sink copies cannot
+    quietly come back. ``_read_commit`` and ``_write_commit`` are each
+    called from exactly one function (qualified by its enclosing
+    functions), exactly one ``raise`` carries the ``late/reordered``
+    refusal (docstrings do not count), and ``_token_budget_fold_cum``
+    has one call site. Every replay decision, ``int(epoch_id)``
+    ordered against a marker (``int(epoch_id) <= …``), sits in
+    ``_monotone_gate`` or ``_state_fold``, and every ``sinks.write_snapshot(...,
+    meta=...)`` sits in ``_state_fold``, except the retrain model's
+    write, whose ``_IVF_MODEL_EPOCH`` rides inside the monotone
+    gate."""
     import ast
     import pathlib
 
@@ -717,6 +723,15 @@ def test_streaming_epoch_protocol_has_one_home():
     callers: dict[str, set[str]] = {"_read_commit": set(), "_write_commit": set()}
     fold_cum_calls = []
     refusals = []
+    replay_checks: set[str] = set()
+    meta_writes: set[str] = set()
+
+    def is_int_epoch(node) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "id", None) == "int"
+            and [getattr(a, "id", None) for a in node.args] == ["epoch_id"]
+        )
 
     def scan(node, where: str) -> None:
         for child in ast.iter_child_nodes(node):
@@ -730,6 +745,19 @@ def test_streaming_epoch_protocol_has_one_home():
                     callers[name].add(where)
                 if name == "_token_budget_fold_cum":
                     fold_cum_calls.append(f"{where}:{child.lineno}")
+                if (
+                    name == "write_snapshot"
+                    and getattr(func, "value", None) is not None
+                    and getattr(func.value, "id", None) == "sinks"
+                    and any(kw.arg == "meta" for kw in child.keywords)
+                ):
+                    meta_writes.add(where)
+            if (
+                isinstance(child, ast.Compare)
+                and any(isinstance(op, (ast.Lt, ast.LtE, ast.Gt, ast.GtE)) for op in child.ops)
+                and is_int_epoch(child.left)
+            ):
+                replay_checks.add(where.split(".")[0])
             if isinstance(child, ast.Raise) and any(
                 isinstance(c, ast.Constant)
                 and isinstance(c.value, str)
@@ -744,6 +772,8 @@ def test_streaming_epoch_protocol_has_one_home():
     assert len(callers["_write_commit"]) == 1, sorted(callers["_write_commit"])
     assert len(refusals) == 1, refusals
     assert len(fold_cum_calls) == 1, fold_cum_calls
+    assert replay_checks == {"_monotone_gate", "_state_fold"}, sorted(replay_checks)
+    assert meta_writes == {"_state_fold", "ivf_retrain_sink._write_model"}, sorted(meta_writes)
 
 
 def test_ann_audit_kernel_has_one_home():
@@ -987,6 +1017,88 @@ def test_suffix_span_sink_releases_its_pins(spark, sf_dir, tmp_path):
         jobs[epoch] = _jobs_run(spark, lambda: fold(sl, epoch))
         assert set(jsc.getPersistentRDDs().keys()) - before == set(), epoch
     assert jobs[2] <= 31, jobs
+
+
+def _state_sink_stream(spark, tmp_path, sink: str):
+    """A fresh full-image state sink and its two tiny epochs: the first
+    bootstraps the state (and MV), the second folds onto them. The
+    batches are parquet scans, as a stream's micro-batches are, so
+    ``isEmpty`` runs a Spark job (a local relation answers it on the
+    driver)."""
+    from z316_sales_data_pipeline_spark.streaming import pipeline as P
+
+    st, mv = str(tmp_path / "state"), str(tmp_path / "mv")
+    scd2 = dict(key="k", attr="g", ts="ts", tiebreak="tb")
+    scd2_rows = (
+        "k long, g string, ts string, tb long",
+        [(1, "a", "2024-01-01 00:00:00", 1), (2, "a", "2024-01-01 00:00:00", 2)],
+        [(2, "b", "2024-01-02 00:00:00", 3), (3, "c", "2024-01-02 00:00:00", 4)],
+    )
+    make, (schema, *epochs) = {
+        "scd2_history_sink": (lambda: P.scd2_history_sink(st, **scd2), scd2_rows),
+        "scd2_agg_mv_sink": (lambda: P.scd2_agg_mv_sink(st, mv, **scd2), scd2_rows),
+        "growth_accounting_sink": (
+            lambda: P.growth_accounting_sink(st, mv, "user_id", "ts"),
+            (
+                "user_id long, ts string",
+                [(1, "2024-01-01 08:00:00"), (2, "2024-01-01 09:00:00")],
+                [(1, "2024-01-02 08:00:00")],
+            ),
+        ),
+        "ab_readout_sink": (
+            lambda: P.ab_readout_sink(st, mv, "uid", "x", "y"),
+            ("uid long, x long, y long", [(1, 10, 20), (2, 5, 9), (3, 7, 7)], [(4, 3, 30), (1, 12, 26)]),
+        ),
+        "quantile_sketch_sink": (
+            lambda: P.quantile_sketch_sink(st, mv, "v", "p", 0.0, 200.0, 16, (0.5, 0.9)),
+            ("v double, p string", [(1.0, "a"), (120.0, "b")], [(3.0, "a"), (60.0, "a")]),
+        ),
+        "token_budget_sink": (
+            lambda: P.token_budget_sink(st, "text", "doc_id", "source", 6),
+            (
+                "doc_id long, source string, text string",
+                [(1, "s", "w1 w2 w3"), (2, "s", "w4 w5")],
+                [(3, "s", "w6 w7 w8 w9")],
+            ),
+        ),
+    }[sink]
+    batches = []
+    for i, rows in enumerate(epochs):
+        df = spark.createDataFrame(rows, schema)
+        if "ts" in df.columns:
+            df = df.withColumn("ts", F.to_timestamp("ts"))
+        df.coalesce(1).write.parquet(str(tmp_path / f"batch{i}"))
+        batches.append(spark.read.parquet(str(tmp_path / f"batch{i}")))
+    return make(), batches
+
+
+@pytest.mark.parametrize(
+    "sink, steady, replay",
+    [
+        ("scd2_history_sink", 8, 1),
+        ("scd2_agg_mv_sink", 20, 1),
+        ("growth_accounting_sink", 17, 1),
+        ("ab_readout_sink", 13, 7),
+        ("quantile_sketch_sink", 13, 8),
+        ("token_budget_sink", 22, 1),
+    ],
+)
+def test_state_sink_epoch_job_budget(spark, tmp_path, sink, steady, replay):
+    """Per-epoch job budget of each full-image state sink
+    (``_state_fold``): a steady epoch (state at rest) and its replay
+    run at most these many Spark jobs. A replay runs only the
+    empty-batch check, plus, for the two sinks whose MV is derived
+    from their state, the MV rewrite that heals a crash between the
+    two writes. ``scd2_agg_mv_sink`` no longer checks the batch for
+    emptiness a second time in its history fold (21 jobs before), and
+    a replayed ``growth_accounting_sink`` epoch no longer pins and
+    collects its batch before it reads the marker (6 before). Budgets,
+    not exact counts: the token-budget steady epoch has read both 21
+    and 22 on one input."""
+    fold, (b0, b1) = _state_sink_stream(spark, tmp_path, sink)
+    fold(b0, 0)
+    got = (_jobs_run(spark, lambda: fold(b1, 1)), _jobs_run(spark, lambda: fold(b1, 1)))
+    assert got[0] <= steady and got[1] <= replay, (got, (steady, replay))
 
 
 def _write_table(directory, name: str, columns: dict) -> None:

@@ -36,15 +36,25 @@ no-op with one of three mechanisms:
    ``max_segments``) runs after the marker: a crash inside it never
    loses the epoch, because readers skip folded originals through
    ``_COMPACTED_THROUGH`` and replays no-op through the ``_TXNS`` log.
-2. Snapshot epoch meta — full-image state sinks write the folded epoch
-   as a ``meta`` file inside the snapshot version, before the pointer
-   flip, so the marker and the data cannot disagree; an epoch
-   at-or-below it is a replay (``scd2_history_sink`` ``_SCD2_EPOCH``,
+2. Snapshot epoch meta — the full-image state sinks, all run by
+   ``_state_fold``: ``scd2_history_sink`` ``_SCD2_EPOCH`` (through
+   ``_scd2_fold``, which also folds ``scd2_agg_mv_sink``'s history),
    ``scd2_agg_mv_sink`` ``_MV_EPOCH``, ``growth_accounting_sink``
    ``_GA_EPOCH``, ``ab_readout_sink`` ``_ABR_EPOCH``,
-   ``token_budget_sink`` ``_TBS_EPOCH``, ``quantile_sketch_sink``
-   ``_QS_EPOCH``, and ``curation_gate_sink``'s selection
-   ``_CGS_SEL_EPOCH``).
+   ``quantile_sketch_sink`` ``_QS_EPOCH``, and ``_budget_fold``
+   (``token_budget_sink`` ``_TBS_EPOCH``, ``curation_gate_sink``'s
+   selection ``_CGS_SEL_EPOCH``). Per epoch: the sink skips an empty
+   batch; an epoch at-or-below the marker of the latest snapshot
+   version is a replay and merges nothing. A new epoch reads the prior
+   state (none before the first commit, so the sink bootstraps), and
+   the sink's ``merge`` returns the new, pinned state with any extra
+   meta (``_SCD2_FIRST_EPOCH``, ``_GA_DAY``), or nothing to write.
+   ``write_snapshot`` lands the marker as a ``meta`` file inside the
+   new version dir before the pointer flip, so the marker and the data
+   cannot disagree. The MV of ``ab_readout_sink`` and
+   ``quantile_sketch_sink`` is a pure function of the state and is
+   rewritten from the committed state every epoch, replays included,
+   which heals a crash between the two writes.
 3. ``sinks.append_snapshot(txn_key=...)`` — pure appends: a replayed
    key finds its committed segment and no-ops (``ivm_join_mv_sink``,
    ``ivf_append_sink``, ``contamination_gate_sink``, the
@@ -142,6 +152,42 @@ def _monotone_gate(
     return fold
 
 
+def _state_fold(
+    spark: SparkSession,
+    state_dir: str,
+    meta_key: str,
+    epoch_id: int,
+    merge: Callable[[DataFrame | None, str | None], tuple[DataFrame, dict[str, str]] | None],
+    mv: tuple[str, Callable[[DataFrame], DataFrame]] | None = None,
+) -> None:
+    """One epoch of a full-image state sink: the snapshot-marker
+    protocol (module docstring, mechanism 2) around the sink's own
+    ``merge(prior, last)``. An epoch at-or-below the ``meta_key``
+    marker of the ``state_dir`` snapshot is a replay and merges
+    nothing. On a new epoch ``merge`` gets the prior state (None before
+    the first commit, so the sink bootstraps) and the marker (None if
+    absent), and returns the new state, already pinned, with any extra
+    meta, or None to write nothing; the state and its marker commit in
+    one ``write_snapshot``. With ``mv=(mv_dir, derive)`` the MV is then
+    rewritten as ``derive`` of the committed state, on a replay too:
+    it is a pure function of the state, so the rewrite is what heals a
+    crash between the state write and the MV write."""
+    last = sinks.snapshot_meta(state_dir, meta_key)
+    replay = last is not None and int(epoch_id) <= int(last)
+    if not replay:
+        try:
+            prior = sinks.read_snapshot(spark, state_dir)
+        except OSError:
+            prior = None
+        merged = merge(prior, last)
+        if merged is not None:
+            state, extra = merged
+            sinks.write_snapshot(state, state_dir, meta={meta_key: str(int(epoch_id)), **extra})
+    if mv is not None:
+        mv_dir, derive = mv
+        sinks.write_snapshot(derive(sinks.read_snapshot(spark, state_dir)), mv_dir)
+
+
 def _prior_segments(
     spark: SparkSession, table_dir: str, id_col: str, lo, empty_schema: str | None = None
 ) -> DataFrame | None:
@@ -182,9 +228,7 @@ def _split_by_drop(
 
 
 def _budget_fold(
-    spark: SparkSession,
     sel_dir: str,
-    cutoff_dir: str,
     meta_key: str,
     epoch_id: int,
     new_docs: DataFrame,
@@ -193,38 +237,38 @@ def _budget_fold(
     source_col: str,
     budget_tokens: int,
 ) -> None:
-    """Fold ``new_docs`` into a token-budget snapshot pair: the
-    selection at ``sel_dir`` (epoch meta ``meta_key``) and the
-    per-source cutoff at ``cutoff_dir``. An epoch at-or-below the meta
-    is a replay and a no-op. The cutoff commits before the selection;
+    """Fold ``new_docs`` into a token-budget snapshot pair through
+    :func:`_state_fold`: the selection at ``sel_dir`` (epoch meta
+    ``meta_key``) and the per-source cutoff at ``{sel_dir}_cutoff``.
+    The merge commits the cutoff, so it lands before the selection;
     :func:`token_budget_sink` says why the pair always converges."""
     from ..operators import corpus as corpus_ops
 
-    marker = sinks.snapshot_meta(sel_dir, meta_key)
-    if marker is not None and int(epoch_id) <= int(marker):
-        return  # replay: this batch is already in the selection
-    try:
-        prior = sinks.read_snapshot(spark, sel_dir)
-    except OSError:
-        prior = spark.createDataFrame(
-            [], f"source string, {id_col} long, quality_x3 int, n_tokens long"
+    spark, cutoff_dir = new_docs.sparkSession, f"{sel_dir}_cutoff"
+
+    def merge(prior: DataFrame | None, last: str | None):
+        if prior is None:
+            prior = spark.createDataFrame(
+                [], f"source string, {id_col} long, quality_x3 int, n_tokens long"
+            )
+        try:
+            prior_cut = sinks.read_snapshot(spark, cutoff_dir)
+        except OSError:
+            id_type = new_docs.schema[id_col].dataType.simpleString()
+            prior_cut = spark.createDataFrame(
+                [], f"source string, cut_quality_x3 int, cut_id {id_type}"
+            )
+        cum = corpus_ops._token_budget_fold_cum(
+            prior, prior_cut, new_docs, text_col, id_col, source_col
+        ).localCheckpoint(eager=True)  # fold grain: budget + batch bounded
+        sel = cum.filter(F.col("cum_tokens") <= budget_tokens).select(
+            "source", F.col(id_col), "quality_x3", "n_tokens", "cum_tokens"
         )
-    try:
-        prior_cut = sinks.read_snapshot(spark, cutoff_dir)
-    except OSError:
-        id_type = new_docs.schema[id_col].dataType.simpleString()
-        prior_cut = spark.createDataFrame(
-            [], f"source string, cut_quality_x3 int, cut_id {id_type}"
-        )
-    cum = corpus_ops._token_budget_fold_cum(
-        prior, prior_cut, new_docs, text_col, id_col, source_col
-    ).localCheckpoint(eager=True)  # fold grain: budget + batch bounded
-    sel = cum.filter(F.col("cum_tokens") <= budget_tokens).select(
-        "source", F.col(id_col), "quality_x3", "n_tokens", "cum_tokens"
-    )
-    fold_cut = corpus_ops._first_rejected_cutoff(cum, id_col, budget_tokens)
-    sinks.write_snapshot(corpus_ops._cutoff_rank_min(prior_cut, fold_cut), cutoff_dir)
-    sinks.write_snapshot(sel, sel_dir, meta={meta_key: str(int(epoch_id))})
+        fold_cut = corpus_ops._first_rejected_cutoff(cum, id_col, budget_tokens)
+        sinks.write_snapshot(corpus_ops._cutoff_rank_min(prior_cut, fold_cut), cutoff_dir)
+        return sel, {}
+
+    _state_fold(spark, sel_dir, meta_key, epoch_id, merge)
 
 
 def _ivf_model(spark: SparkSession, state_dir: str) -> list:
@@ -547,15 +591,33 @@ def scd2_history_sink(
     written BEFORE the fold's epoch marker commits, so a crash between
     the two replays the epoch into the same partition (idempotent).
     """
-    from ..operators import windows as W
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
-        last = sinks.snapshot_meta(table_dir, "_SCD2_EPOCH")
-        if last is not None and int(epoch_id) <= int(last):
-            return  # replayed epoch: already folded into _LATEST
+        _scd2_fold(batch_df, epoch_id, table_dir, key, attr, ts, tiebreak, events_dir)
+
+    return fold
+
+
+def _scd2_fold(
+    batch_df: DataFrame,
+    epoch_id: int,
+    table_dir: str,
+    key: str,
+    attr: str,
+    ts: str,
+    tiebreak: str,
+    events_dir: str | None = None,
+) -> None:
+    """One :func:`scd2_history_sink` epoch of a non-empty batch, under
+    the ``_SCD2_EPOCH`` marker; :func:`scd2_agg_mv_sink` folds its
+    history through it too."""
+    from ..operators import windows as W
+
+    spark = batch_df.sparkSession
+
+    def merge(hist: DataFrame | None, last: str | None):
         batch = batch_df.select(key, attr, ts, tiebreak)
         if events_dir is not None:
             # raw-log append first: epoch-partition overwrite is
@@ -568,73 +630,70 @@ def scd2_history_sink(
                 "partitionOverwriteMode", "dynamic"
             ).parquet(events_dir)
         first_epoch = sinks.snapshot_meta(table_dir, "_SCD2_FIRST_EPOCH")
-        try:
-            hist = sinks.read_snapshot(spark, table_dir)
-            if events_dir is not None:
-                # Completeness guard (ADVICE r8): the repair path
-                # rebuilds late keys from the raw log, which is only
-                # sound if the log covers the table's WHOLE history.
-                # If the snapshot's first folded epoch predates the
-                # log's earliest partition (events_dir enabled on a
-                # pre-existing table), a rebuild would silently drop
-                # the missing epochs — refuse instead; warn when the
-                # first-epoch provenance marker is absent (table
-                # created before this guard existed).
-                import warnings as _warnings
-
-                log_epochs = [
-                    int(d.split("=", 1)[1])
-                    for d in os.listdir(events_dir)
-                    if d.startswith("epoch=") and d.split("=", 1)[1].isdigit()
-                ]
-                log_min = min(log_epochs) if log_epochs else int(epoch_id)
-                if first_epoch is None:
-                    _warnings.warn(
-                        "scd2 sink: snapshot has no _SCD2_FIRST_EPOCH marker; "
-                        "cannot prove the raw event log covers the table's "
-                        "full history — repair results for late keys may be "
-                        "incomplete. Set events_dir from epoch 0.",
-                        stacklevel=2,
-                    )
-                elif int(first_epoch) < log_min:
-                    raise ValueError(
-                        f"scd2 sink: raw event log at {events_dir} starts at "
-                        f"epoch {log_min} but the snapshot's history began at "
-                        f"epoch {first_epoch} — the log is incomplete and a "
-                        "key-scoped repair would silently drop the missing "
-                        "epochs. events_dir must be enabled from epoch 0."
-                    )
-                prior = (
-                    spark.read.parquet(events_dir)
-                    .filter(F.col("epoch") < int(epoch_id))
-                    .drop("epoch")
-                )
-                new_hist = W.scd2_fold_or_repair(
-                    hist, batch, prior, key=key, attr=attr, ts=ts, tiebreak=tiebreak
-                )
-            else:
-                new_hist = W.scd2_apply_batch(
-                    hist, batch, key=key, attr=attr, ts=ts, tiebreak=tiebreak
-                )
-        except OSError:
+        if hist is None:
             new_hist = W.scd2_history(
                 batch, key=key, attr=attr, ts=ts, tiebreak=tiebreak, carry_last=True
             )
             if first_epoch is None:
                 first_epoch = str(int(epoch_id))
+        elif events_dir is not None:
+            # Completeness guard (ADVICE r8): the repair path
+            # rebuilds late keys from the raw log, which is only
+            # sound if the log covers the table's WHOLE history.
+            # If the snapshot's first folded epoch predates the
+            # log's earliest partition (events_dir enabled on a
+            # pre-existing table), a rebuild would silently drop
+            # the missing epochs — refuse instead; warn when the
+            # first-epoch provenance marker is absent (table
+            # created before this guard existed).
+            import warnings as _warnings
+
+            log_epochs = [
+                int(d.split("=", 1)[1])
+                for d in os.listdir(events_dir)
+                if d.startswith("epoch=") and d.split("=", 1)[1].isdigit()
+            ]
+            log_min = min(log_epochs) if log_epochs else int(epoch_id)
+            if first_epoch is None:
+                _warnings.warn(
+                    "scd2 sink: snapshot has no _SCD2_FIRST_EPOCH marker; "
+                    "cannot prove the raw event log covers the table's "
+                    "full history — repair results for late keys may be "
+                    "incomplete. Set events_dir from epoch 0.",
+                    stacklevel=2,
+                )
+            elif int(first_epoch) < log_min:
+                raise ValueError(
+                    f"scd2 sink: raw event log at {events_dir} starts at "
+                    f"epoch {log_min} but the snapshot's history began at "
+                    f"epoch {first_epoch} — the log is incomplete and a "
+                    "key-scoped repair would silently drop the missing "
+                    "epochs. events_dir must be enabled from epoch 0."
+                )
+            prior = (
+                spark.read.parquet(events_dir)
+                .filter(F.col("epoch") < int(epoch_id))
+                .drop("epoch")
+            )
+            new_hist = W.scd2_fold_or_repair(
+                hist, batch, prior, key=key, attr=attr, ts=ts, tiebreak=tiebreak
+            )
+        else:
+            new_hist = W.scd2_apply_batch(
+                hist, batch, key=key, attr=attr, ts=ts, tiebreak=tiebreak
+            )
         # pin rows before writing: the fold reads the CURRENT snapshot
         # dir lazily, and although versions are immutable, a retention
         # sweep (vacuum_snapshots) between plan and execution must not
         # be able to pull the input out from under the write
         new_hist = new_hist.localCheckpoint(eager=True)
-        meta = {"_SCD2_EPOCH": str(int(epoch_id))}
-        if first_epoch is not None:
-            # carried forward every fold so the completeness guard
-            # above can compare table provenance vs log coverage
-            meta["_SCD2_FIRST_EPOCH"] = str(int(first_epoch))
-        sinks.write_snapshot(new_hist, table_dir, meta=meta)
+        # the first epoch is carried forward every fold so the
+        # completeness guard above can compare table provenance vs
+        # log coverage
+        extra = {} if first_epoch is None else {"_SCD2_FIRST_EPOCH": str(int(first_epoch))}
+        return new_hist, extra
 
-    return fold
+    _state_fold(spark, table_dir, "_SCD2_EPOCH", epoch_id, merge)
 
 
 def scd2_agg_mv_sink(
@@ -674,7 +733,6 @@ def scd2_agg_mv_sink(
 
     if measures is None:
         measures = {"sum_uid": F.col(key)}
-    hist_fold = scd2_history_sink(hist_dir, key=key, attr=attr, ts=ts, tiebreak=tiebreak)
 
     def open_rows(spark, version: int) -> DataFrame:
         return (
@@ -687,67 +745,67 @@ def scd2_agg_mv_sink(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        mv_last = sinks.snapshot_meta(mv_dir, "_MV_EPOCH")
-        if mv_last is not None and int(epoch_id) <= int(mv_last):
-            return  # fully replayed epoch: both tables already folded
-        hist_fold(batch_df, epoch_id)  # its own marker no-ops replays
-        # v_after = the history version this epoch produced; v_before
-        # = the version the MV actually reflects (marker == _MV_EPOCH,
-        # ADVICE r9) — NOT merely "first version older than epoch_id",
-        # which silently skipped any history-ahead-of-MV gap (external
-        # folds, crash between the two writes by >1 epoch). The
-        # open-row diff between those two versions nets ALL
-        # intermediate changes, so a multi-epoch catch-up folds
-        # correctly in one delta.
-        v_after = v_before = None
-        for v in sorted(sinks._versions(hist_dir), reverse=True):
-            marker = sinks.snapshot_meta(hist_dir, "_SCD2_EPOCH", version=v)
-            if marker is None:
-                continue
-            if int(marker) == int(epoch_id) and v_after is None:
-                v_after = v
-            if mv_last is not None and int(marker) == int(mv_last) and v_before is None:
-                v_before = v
-            if v_after is not None and (mv_last is None or v_before is not None):
-                break  # both located — stop the O(versions) meta scan
-        if v_after is None:
-            return  # history rejected the batch (e.g. older epoch)
-        cur_after = open_rows(spark, v_after)
-        if mv_last is None:
-            # bootstrap: no MV snapshot yet — full aggregation of the
-            # current open rows. Covers both a brand-new pipeline and
-            # attaching the sink to a PRE-EXISTING history (ADVICE r9:
-            # the old else-branch read_snapshot(mv_dir) raised here).
-            mv = cur_after.groupBy(attr).agg(
-                F.count(F.lit(1)).alias("n"),
-                *[F.sum(e).cast("long").alias(a) for a, e in measures.items()],
-            )
-        else:
-            if v_before is None:
-                raise ValueError(
-                    f"scd2_agg_mv_sink: the MV's _MV_EPOCH={mv_last} has no "
-                    f"matching _SCD2_EPOCH history version under {hist_dir} "
-                    "(vacuumed or externally rewritten) — the delta base is "
-                    "gone; rebuild the MV by removing its snapshot dir so "
-                    "the next epoch bootstraps from the full open-row set."
+
+        def merge(mv_before: DataFrame | None, mv_last: str | None):
+            # its own marker no-ops a replay of the history fold
+            _scd2_fold(batch_df, epoch_id, hist_dir, key, attr, ts, tiebreak)
+            # v_after = the history version this epoch produced; v_before
+            # = the version the MV actually reflects (marker == _MV_EPOCH,
+            # ADVICE r9) — NOT merely "first version older than epoch_id",
+            # which silently skipped any history-ahead-of-MV gap (external
+            # folds, crash between the two writes by >1 epoch). The
+            # open-row diff between those two versions nets ALL
+            # intermediate changes, so a multi-epoch catch-up folds
+            # correctly in one delta.
+            v_after = v_before = None
+            for v in sorted(sinks._versions(hist_dir), reverse=True):
+                marker = sinks.snapshot_meta(hist_dir, "_SCD2_EPOCH", version=v)
+                if marker is None:
+                    continue
+                if int(marker) == int(epoch_id) and v_after is None:
+                    v_after = v
+                if mv_last is not None and int(marker) == int(mv_last) and v_before is None:
+                    v_before = v
+                if v_after is not None and (mv_last is None or v_before is not None):
+                    break  # both located — stop the O(versions) meta scan
+            if v_after is None:
+                return None  # history rejected the batch (e.g. older epoch)
+            cur_after = open_rows(spark, v_after)
+            if mv_last is None:
+                # bootstrap: no MV snapshot yet — full aggregation of the
+                # current open rows. Covers both a brand-new pipeline and
+                # attaching the sink to a PRE-EXISTING history (ADVICE r9:
+                # the old else-branch read_snapshot(mv_dir) raised here).
+                mv = cur_after.groupBy(attr).agg(
+                    F.count(F.lit(1)).alias("n"),
+                    *[F.sum(e).cast("long").alias(a) for a, e in measures.items()],
                 )
-            cur_before = open_rows(spark, v_before)
-            mv_before = sinks.read_snapshot(spark, mv_dir)
-            diff = ivm.snapshot_diff(cur_before, cur_after, key, [attr])
-            changes = diff.select(
-                key,
-                F.col(f"{attr}_new").alias(attr),
-                F.when(F.col("change") == "removed", F.lit("delete"))
-                .otherwise(F.lit("upsert"))
-                .alias("__op"),
-                F.lit(1).cast("long").alias("__ver"),
-            )
-            mv = ivm.retractable_agg_maintain(
-                mv_before, cur_before, changes, key=key, op_col="__op",
-                version_col="__ver", group_col=attr, measures=measures,
-            )
-        mv = mv.localCheckpoint(eager=True)  # group-grain reduction
-        sinks.write_snapshot(mv, mv_dir, meta={"_MV_EPOCH": str(int(epoch_id))})
+            else:
+                if v_before is None:
+                    raise ValueError(
+                        f"scd2_agg_mv_sink: the MV's _MV_EPOCH={mv_last} has no "
+                        f"matching _SCD2_EPOCH history version under {hist_dir} "
+                        "(vacuumed or externally rewritten) — the delta base is "
+                        "gone; rebuild the MV by removing its snapshot dir so "
+                        "the next epoch bootstraps from the full open-row set."
+                    )
+                cur_before = open_rows(spark, v_before)
+                diff = ivm.snapshot_diff(cur_before, cur_after, key, [attr])
+                changes = diff.select(
+                    key,
+                    F.col(f"{attr}_new").alias(attr),
+                    F.when(F.col("change") == "removed", F.lit("delete"))
+                    .otherwise(F.lit("upsert"))
+                    .alias("__op"),
+                    F.lit(1).cast("long").alias("__ver"),
+                )
+                mv = ivm.retractable_agg_maintain(
+                    mv_before, cur_before, changes, key=key, op_col="__op",
+                    version_col="__ver", group_col=attr, measures=measures,
+                )
+            return mv.localCheckpoint(eager=True), {}  # group-grain reduction
+
+        _state_fold(spark, mv_dir, "_MV_EPOCH", epoch_id, merge)
 
     return fold
 
@@ -780,8 +838,8 @@ def growth_accounting_sink(
     Exactly-once AND late-data refusal (ADVICE r9): the state
     snapshot carries a ``_GA_DAY`` marker (last folded day) and a
     ``_GA_EPOCH`` marker (last folded epoch). An epoch at-or-below
-    ``_GA_EPOCH`` is a REPLAY — its already-folded days are skipped
-    as no-ops. A NEW epoch carrying rows for days at-or-below
+    ``_GA_EPOCH`` is a REPLAY and a strict no-op on both tables
+    (:func:`_state_fold`). A NEW epoch carrying rows for days at-or-below
     ``_GA_DAY`` is LATE DATA, which this day-cursor state model
     cannot fold retroactively — the sink REFUSES (ValueError) instead
     of silently diverging from the batch twin
@@ -800,112 +858,105 @@ def growth_accounting_sink(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        ud = (
-            batch_df.select(
-                F.col(user_col).alias("u"), F.to_date(ts_col).alias("d")
-            )
-            .distinct()
-            .localCheckpoint(eager=True)  # (user, day) grain of ONE batch
-        )
-        days = sorted(r["d"] for r in ud.select("d").distinct().collect())
-        marker = sinks.snapshot_meta(state_dir, "_GA_DAY")
-        prev_day = _dt.date.fromisoformat(marker) if marker else None
-        epoch_marker = sinks.snapshot_meta(state_dir, "_GA_EPOCH")
-        is_replay = epoch_marker is not None and int(epoch_id) <= int(epoch_marker)
-        if prev_day is not None and not is_replay and days and days[0] <= prev_day:
-            if epoch_marker is None:
-                # state written before the _GA_EPOCH marker existed —
-                # cannot prove replay vs late; keep legacy skip, warn
-                _warnings.warn(
-                    "growth_accounting_sink: state has no _GA_EPOCH marker; "
-                    f"rows for already-folded days <= {prev_day} are being "
-                    "skipped as replays but could be late data. Rebuild the "
-                    "state snapshot to get the late-data refusal guard.",
-                    stacklevel=2,
+
+        def merge(state: DataFrame | None, epoch_marker: str | None):
+            ud = (
+                batch_df.select(
+                    F.col(user_col).alias("u"), F.to_date(ts_col).alias("d")
                 )
-            else:
-                raise ValueError(
-                    f"growth_accounting_sink: epoch {int(epoch_id)} is NEW "
-                    f"(last folded epoch {int(epoch_marker)}) but carries rows "
-                    f"for day {days[0].isoformat()} <= last folded day "
-                    f"{prev_day.isoformat()} — late data cannot be folded "
-                    "retroactively by the day-cursor state and would silently "
-                    "diverge the MV from the batch twin. Watermark-filter the "
-                    "stream (ts at or after the day after _GA_DAY) to drop "
-                    "late rows deliberately."
-                )
-        try:
-            state = sinks.read_snapshot(spark, state_dir)
-        except OSError:
-            state = spark.createDataFrame([], "u long, first_d date, last_d date")
-        folded_any = False
-        for d in days:
-            if prev_day is not None and d <= prev_day:
-                continue  # replayed day: already folded
-            folded_any = True
-            active = ud.filter(F.col("d") == d).select("u")
-            joined = active.join(state, "u", "left")
-            day_row = joined.agg(
-                F.count(F.lit(1)).cast("long").alias("dau"),
-                F.sum(F.when(F.col("last_d").isNull(), 1).otherwise(0))
-                .cast("long")
-                .alias("n_new"),
-                F.sum(
-                    F.when(F.datediff(F.lit(d), F.col("last_d")) == 1, 1).otherwise(0)
-                )
-                .cast("long")
-                .alias("n_retained"),
-                F.sum(
-                    F.when(F.datediff(F.lit(d), F.col("last_d")) > 1, 1).otherwise(0)
-                )
-                .cast("long")
-                .alias("n_resurrected"),
-            ).select(F.lit(d).cast("date").alias("day"), "*")
-            # churn rows for every lapse day in (prev_day, d]
-            lapsed = state.withColumn("__cd", F.date_add("last_d", 1)).filter(
-                (F.col("__cd") <= F.lit(d))
-                & (F.lit(True) if prev_day is None else F.col("__cd") > F.lit(prev_day))
+                .distinct()
+                .localCheckpoint(eager=True)  # (user, day) grain of ONE batch
             )
-            churn = (
-                lapsed.join(
-                    active.withColumn("__a", F.lit(1)), "u", "left"
+            days = sorted(r["d"] for r in ud.select("d").distinct().collect())
+            marker = sinks.snapshot_meta(state_dir, "_GA_DAY")
+            prev_day = _dt.date.fromisoformat(marker) if marker else None
+            if prev_day is not None and days and days[0] <= prev_day:
+                if epoch_marker is None:
+                    # state written before the _GA_EPOCH marker existed —
+                    # cannot prove replay vs late; keep legacy skip, warn
+                    _warnings.warn(
+                        "growth_accounting_sink: state has no _GA_EPOCH marker; "
+                        f"rows for already-folded days <= {prev_day} are being "
+                        "skipped as replays but could be late data. Rebuild the "
+                        "state snapshot to get the late-data refusal guard.",
+                        stacklevel=2,
+                    )
+                    days = [d for d in days if d > prev_day]
+                else:
+                    raise ValueError(
+                        f"growth_accounting_sink: epoch {int(epoch_id)} is NEW "
+                        f"(last folded epoch {int(epoch_marker)}) but carries rows "
+                        f"for day {days[0].isoformat()} <= last folded day "
+                        f"{prev_day.isoformat()} — late data cannot be folded "
+                        "retroactively by the day-cursor state and would silently "
+                        "diverge the MV from the batch twin. Watermark-filter the "
+                        "stream (ts at or after the day after _GA_DAY) to drop "
+                        "late rows deliberately."
+                    )
+            if not days:
+                return None  # legacy state: every day already folded
+            if state is None:
+                state = spark.createDataFrame([], "u long, first_d date, last_d date")
+            for d in days:
+                active = ud.filter(F.col("d") == d).select("u")
+                joined = active.join(state, "u", "left")
+                day_row = joined.agg(
+                    F.count(F.lit(1)).cast("long").alias("dau"),
+                    F.sum(F.when(F.col("last_d").isNull(), 1).otherwise(0))
+                    .cast("long")
+                    .alias("n_new"),
+                    F.sum(
+                        F.when(F.datediff(F.lit(d), F.col("last_d")) == 1, 1).otherwise(0)
+                    )
+                    .cast("long")
+                    .alias("n_retained"),
+                    F.sum(
+                        F.when(F.datediff(F.lit(d), F.col("last_d")) > 1, 1).otherwise(0)
+                    )
+                    .cast("long")
+                    .alias("n_resurrected"),
+                ).select(F.lit(d).cast("date").alias("day"), "*")
+                # churn rows for every lapse day in (prev_day, d]
+                lapsed = state.withColumn("__cd", F.date_add("last_d", 1)).filter(
+                    (F.col("__cd") <= F.lit(d))
+                    & (F.lit(True) if prev_day is None else F.col("__cd") > F.lit(prev_day))
                 )
-                .filter((F.col("__cd") < F.lit(d)) | F.col("__a").isNull())
-                .groupBy(F.col("__cd").alias("day"))
-                .agg(F.count(F.lit(1)).cast("long").alias("n_churned"))
-            )
-            mv_rows = (
-                day_row.join(churn, "day", "full_outer")
-                .select(
-                    "day",
-                    *[
-                        F.coalesce(c, F.lit(0)).cast("long").alias(c)
-                        for c in ("dau", "n_new", "n_retained", "n_resurrected", "n_churned")
-                    ],
+                churn = (
+                    lapsed.join(
+                        active.withColumn("__a", F.lit(1)), "u", "left"
+                    )
+                    .filter((F.col("__cd") < F.lit(d)) | F.col("__a").isNull())
+                    .groupBy(F.col("__cd").alias("day"))
+                    .agg(F.count(F.lit(1)).cast("long").alias("n_churned"))
                 )
-                .localCheckpoint(eager=True)  # day-grain reduction
-            )
-            sinks.append_snapshot(mv_rows, mv_dir, txn_key=f"ga-{d.isoformat()}")
-            # state upsert: actives get last_d = d (first_d kept)
-            touched = active.join(state, "u", "left").select(
-                "u",
-                F.coalesce("first_d", F.lit(d)).alias("first_d"),
-                F.lit(d).cast("date").alias("last_d"),
-            )
-            state = (
-                state.join(active, "u", "left_anti")
-                .unionByName(touched)
-                .localCheckpoint(eager=True)  # user-grain state; bounded by
-                # the user universe, the size a serving store holds anyway
-            )
-            prev_day = d
-        if not folded_any:
-            return  # fully-replayed epoch: strict no-op on BOTH tables
-        sinks.write_snapshot(
-            state,
-            state_dir,
-            meta={"_GA_DAY": prev_day.isoformat(), "_GA_EPOCH": str(int(epoch_id))},
-        )
+                mv_rows = (
+                    day_row.join(churn, "day", "full_outer")
+                    .select(
+                        "day",
+                        *[
+                            F.coalesce(c, F.lit(0)).cast("long").alias(c)
+                            for c in ("dau", "n_new", "n_retained", "n_resurrected", "n_churned")
+                        ],
+                    )
+                    .localCheckpoint(eager=True)  # day-grain reduction
+                )
+                sinks.append_snapshot(mv_rows, mv_dir, txn_key=f"ga-{d.isoformat()}")
+                # state upsert: actives get last_d = d (first_d kept)
+                touched = active.join(state, "u", "left").select(
+                    "u",
+                    F.coalesce("first_d", F.lit(d)).alias("first_d"),
+                    F.lit(d).cast("date").alias("last_d"),
+                )
+                state = (
+                    state.join(active, "u", "left_anti")
+                    .unionByName(touched)
+                    .localCheckpoint(eager=True)  # user-grain state; bounded by
+                    # the user universe, the size a serving store holds anyway
+                )
+                prev_day = d
+            return state, {"_GA_DAY": prev_day.isoformat()}
+
+        _state_fold(spark, state_dir, "_GA_EPOCH", epoch_id, merge)
 
     return fold
 
@@ -1062,25 +1113,29 @@ def ab_readout_sink(
     function of current unit state, not of arrival order.
 
     Exactly-once: the state snapshot carries an ``_ABR_EPOCH`` marker;
-    epochs at-or-below it are strict no-ops on BOTH tables. A crash
-    between the state write and the MV write heals on replay: the
-    MV is recomputed from the CURRENT state, so rewriting it is
+    epochs at-or-below it leave the state as it is. A crash between
+    the state write and the MV write heals on replay: the MV is
+    recomputed from the CURRENT state every epoch, so rewriting it is
     idempotent (the MV needs no marker of its own — it is derived,
-    never folded).
+    never folded; :func:`_state_fold`'s ``mv``).
 
     At 100 TB: state is unit-grain (the size a serving store holds);
     the readout aggregate reduces it to ``n_arms`` rows of exact
     decimal moments; every float in the MV is one shared expression
     over those moments (the experiment.ab_readout discipline).
     """
+    from ..operators import experiment
+
+    def readout(state: DataFrame) -> DataFrame:
+        return experiment.ab_readout(
+            state, F.col("__x"), F.col("__y"), "__u", n_arms=n_arms
+        ).localCheckpoint(eager=True)  # arm-grain reduction
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
-        marker = sinks.snapshot_meta(state_dir, "_ABR_EPOCH")
-        already = marker is not None and int(epoch_id) <= int(marker)
-        if not already:
+
+        def merge(state: DataFrame | None, last: str | None):
             # ties on the caller's tiebreak fall through to the value
             # struct so the within-batch winner is a pure function of
             # the data, never of partition order (self-review r10)
@@ -1102,33 +1157,21 @@ def ab_readout_sink(
                 )
                 .select("__u", F.col("__v.__x").alias("__x"), F.col("__v.__y").alias("__y"))
             )
-            try:
-                state = sinks.read_snapshot(spark, state_dir)
-            except OSError:
+            if state is None:
                 # bootstrap with the BATCH's own schema (self-review
                 # r10: a literal "__u long" schema broke string unit
                 # ids at the unionByName)
                 state = ups.limit(0)
-            state = (
+            return (
                 state.join(ups, "__u", "left_anti")
                 .unionByName(ups)
                 .localCheckpoint(eager=True)  # unit-grain reduction; also
                 # pins rows before the versioned dir flips underneath
-            )
-            sinks.write_snapshot(
-                state, state_dir, meta={"_ABR_EPOCH": str(int(epoch_id))}
-            )
-        # MV: pure function of current state — recompute + overwrite is
-        # idempotent, which is exactly what heals a crash that landed
-        # the state write but lost the MV write (replayed epoch takes
-        # the `already` branch above and still rewrites the MV here)
-        state = sinks.read_snapshot(spark, state_dir)
-        from ..operators import experiment
+            ), {}
 
-        mv = experiment.ab_readout(
-            state, F.col("__x"), F.col("__y"), "__u", n_arms=n_arms
-        ).localCheckpoint(eager=True)  # arm-grain reduction
-        sinks.write_snapshot(mv, mv_dir)
+        _state_fold(
+            batch_df.sparkSession, state_dir, "_ABR_EPOCH", epoch_id, merge, mv=(mv_dir, readout)
+        )
 
     return fold
 
@@ -1174,9 +1217,7 @@ def token_budget_sink(
         if batch_df.isEmpty():
             return
         _budget_fold(
-            batch_df.sparkSession,
             state_dir,
-            f"{state_dir}_cutoff",
             "_TBS_EPOCH",
             epoch_id,
             batch_df.dropDuplicates([source_col, id_col]),
@@ -1777,29 +1818,31 @@ def quantile_sketch_sink(
     Exactly-once: ``_QS_EPOCH`` marker; replayed epochs skip ONLY the
     counter fold (adding the same counters twice would double mass —
     the guard is load-bearing) but still recompute and overwrite the
-    MV from the current state, exactly as ab_readout_sink's `already`
-    branch does — a crash between the state write (which commits
-    ``_QS_EPOCH``) and the MV write would otherwise leave the MV stale
-    forever on replay (r12 advice). Unlike the day-cursor growth sink
+    MV from the current state, exactly as ab_readout_sink does
+    (:func:`_state_fold`'s ``mv``) — a crash between the state write
+    (which commits ``_QS_EPOCH``) and the MV write would otherwise
+    leave the MV stale forever on replay (r12 advice). Unlike the day-cursor growth sink
     there is NO late-data refusal: bucket counters fold in any order.
     """
     from ..operators import sketch as sketch_ops
+
+    def quantiles(state: DataFrame) -> DataFrame:
+        return sketch_ops.histogram_quantiles(
+            state, list(qs), lo, hi, n_buckets
+        ).localCheckpoint(eager=True)
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        epoch_marker = sinks.snapshot_meta(state_dir, "_QS_EPOCH")
-        already = epoch_marker is not None and int(epoch_id) <= int(epoch_marker)
-        if not already:
+
+        def merge(prior: DataFrame | None, last: str | None):
             part = sketch_ops.histogram_table(
                 batch_df, value_col, F.col(part_col), lo, hi, n_buckets
             )
-            try:
-                prior = sinks.read_snapshot(spark, state_dir)
-            except OSError:
+            if prior is None:
                 prior = spark.createDataFrame([], "part string, bucket int, c long")
-            merged = (
+            return (
                 prior.unionByName(
                     part.select(
                         F.col("part").cast("string").alias("part"),
@@ -1810,17 +1853,9 @@ def quantile_sketch_sink(
                 .groupBy("part", "bucket")
                 .agg(F.sum("c").cast("long").alias("c"))
                 .localCheckpoint(eager=True)  # sketch grain: n_buckets x parts
-            )
-            sinks.write_snapshot(
-                merged, state_dir, meta={"_QS_EPOCH": str(int(epoch_id))}
-            )
-        # MV: pure function of current state — recompute + overwrite is
-        # idempotent, so running it on the `already` branch too is what
-        # heals a crash that landed the state write but lost the MV write
-        mv = sketch_ops.histogram_quantiles(
-            sinks.read_snapshot(spark, state_dir), list(qs), lo, hi, n_buckets
-        ).localCheckpoint(eager=True)
-        sinks.write_snapshot(mv, mv_dir)
+            ), {}
+
+        _state_fold(spark, state_dir, "_QS_EPOCH", epoch_id, merge, mv=(mv_dir, quantiles))
 
     return fold
 
@@ -1974,7 +2009,6 @@ def curation_gate_sink(
     fp_dir = f"{state_dir}/fp"
     levels_dir = f"{state_dir}/levels"
     sel_dir = f"{state_dir}/sel"
-    cutoff_dir = f"{state_dir}/sel_cutoff"
 
     eval_sh = (
         eval_docs.select(
@@ -2121,9 +2155,7 @@ def curation_gate_sink(
             txn_key=txn,
         )
         _budget_fold(
-            spark,
             sel_dir,
-            cutoff_dir,
             "_CGS_SEL_EPOCH",
             epoch_id,
             batch_raw.join(admitted.select(id_col), id_col, "semi"),
