@@ -6633,9 +6633,10 @@ FROM v LEFT JOIN dropped d ON v.vec_id = d.vec_id
 def _semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous-ingestion SemDeDup: the new batch (vec_id % 5 == 0)
     is assigned to the at-rest cluster model (per-cluster mean
-    centroids aggregated inline from the pinned corpus⨝assignment
-    relation, then similarity.nearest_centroid_assign) and pruned
-    against the at-rest kept representatives AND lower-id batch
+    centroids, similarity._cluster_means of the pinned
+    corpus⨝assignment relation, then
+    similarity.nearest_centroid_assign) and pruned against the
+    at-rest kept representatives AND lower-id batch
     members (operators/dedup.py semantic_dedup_incremental) — the
     embedding-space complement of minhash_incremental. The corpus is
     touched only through its kept-rep relation and the k·dim centroid
@@ -6651,20 +6652,11 @@ def _semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )  # corpus-grain; batch dedup + kept-rep join (lazy pin)
     flags = dedup.semantic_dedup(clustered, "embedding", "vec_id", "cluster", threshold=0.3)
     kept = clustered.join(flags.filter(F.col("keep")).select("vec_id"), "vec_id")
-    # r15: centroids derive from the PINNED clustered relation instead
-    # of centroid_table(assign, corpus) — that form re-ran the whole
-    # kmeans assignment subtree a second time (assign was unpinned and
-    # corpus⨝assign is exactly what `clustered` already holds); same
-    # rows, same round-6 means, one InMemoryRelation consumer instead
-    # of a duplicate explode+join+aggregate chain (guide §2.4).
-    cents = (
-        clustered.select(
-            "cluster",
-            F.posexplode(F.col("embedding").cast("array<double>")).alias("__pos", "__x"),
-        )
-        .groupBy("cluster", "__pos")
-        .agg(F.round(F.avg("__x"), 6).alias("__c"))
-    )
+    # centroids derive from the PINNED clustered relation, not from
+    # centroid_table(assign, corpus): that form re-runs the whole kmeans
+    # assignment subtree (assign is unpinned, and corpus⨝assign is what
+    # `clustered` already holds)
+    cents = similarity._cluster_means(clustered, "embedding")
     new_assign = similarity.nearest_centroid_assign(new, "embedding", "vec_id", cents)
     new_clustered = new.select("vec_id", "embedding").join(new_assign, "vec_id")
     return dedup.semantic_dedup_incremental(

@@ -385,15 +385,19 @@ def test_connected_components_long_chain_converges(spark):
     assert out.count() == n
 
 
-def test_connected_components_raises_when_not_converged(spark):
+@pytest.mark.parametrize("form", ["batch", "incremental"])
+def test_connected_components_raises_when_not_converged(spark, form):
     """Exhausting max_iters with labels still moving must raise, not
-    silently return a partial (wrong) clustering."""
-    import pytest
-
+    silently return a partial (wrong) clustering — in both forms; the
+    incremental one runs from an empty at-rest labelling."""
     nodes = spark.createDataFrame([(i,) for i in range(16)], "id long")
     pairs = spark.createDataFrame([(i, i + 1) for i in range(15)], "id_a long, id_b long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(nodes, pairs, id_col="id", max_iters=2)
+        if form == "batch":
+            dedup.connected_components(nodes, pairs, id_col="id", max_iters=2)
+        else:
+            at_rest = spark.createDataFrame([], "id long, cluster_id long")
+            dedup.connected_components_incremental(at_rest, nodes, pairs, id_col="id", max_iters=2)
 
 
 def test_q7_volume_shipping_nonempty_at_sf001(spark):

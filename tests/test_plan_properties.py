@@ -887,6 +887,65 @@ def test_minhash_kernel_has_one_home():
     }, homes
 
 
+def test_dedup_twin_kernels_have_one_home():
+    """Source guard: across ``operators/dedup.py``,
+    ``operators/similarity.py``, ``streaming/pipeline.py`` and
+    ``__spark_entry__.py`` each kernel a batch dedup operator shares
+    with its incremental twin has one home. Counted by enclosing
+    function, qualified by its module: the rounded cosine
+    ``F.round(dot(...) / (...), ...)`` is built only in
+    ``similarity._cos_pairs``, the pointer-jump alias ``"jlabel"`` only
+    in ``dedup._min_labels``, and the span rollup's ``"n_dup_windows"``
+    alias only in ``dedup._span_report``."""
+    import ast
+    import pathlib
+
+    from z316_sales_data_pipeline_spark.operators import dedup as D
+    from z316_sales_data_pipeline_spark.operators import similarity as S
+    from z316_sales_data_pipeline_spark.streaming import pipeline as P
+
+    homes: dict[str, set[str]] = {
+        "rounded dot cosine": set(),
+        '.alias("jlabel")': set(),
+        '.alias("n_dup_windows")': set(),
+    }
+
+    def name_of(call: ast.Call):
+        func = call.func
+        return func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", None)
+
+    def scan(node, where: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            inner = where
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = f"{where}.{child.name}"
+            if isinstance(child, ast.Call):
+                name = name_of(child)
+                args = [a.value for a in child.args if isinstance(a, ast.Constant)]
+                if (
+                    name == "round"
+                    and child.args
+                    and isinstance(child.args[0], ast.BinOp)
+                    and isinstance(child.args[0].op, ast.Div)
+                    and isinstance(child.args[0].left, ast.Call)
+                    and name_of(child.args[0].left) == "dot"
+                ):
+                    homes["rounded dot cosine"].add(where)
+                if name == "alias" and args == ["jlabel"]:
+                    homes['.alias("jlabel")'].add(where)
+                if name == "alias" and args == ["n_dup_windows"]:
+                    homes['.alias("n_dup_windows")'].add(where)
+            scan(child, inner)
+
+    for mod in (D, S, P, entrymod):
+        scan(ast.parse(pathlib.Path(mod.__file__).read_text()), mod.__name__.rsplit(".", 1)[-1])
+    assert homes == {
+        "rounded dot cosine": {"similarity._cos_pairs"},
+        '.alias("jlabel")': {"dedup._min_labels"},
+        '.alias("n_dup_windows")': {"dedup._span_report"},
+    }, homes
+
+
 def test_ivf_retrain_plan_releases_its_pins(spark, sf_dir):
     """``ivf_retrain_plan`` returns a driver-built row, so it releases
     every frame it pinned once its scalars are collected: a streaming
@@ -1000,6 +1059,55 @@ def test_minhash_gate_epoch_job_budget(spark, sf_dir, tmp_path):
     assert _jobs_run(spark, lambda: fold(sl1, 1)) <= 28
 
 
+def _semantic_gate_stream(spark, sf_dir, tmp_path, n_epochs: int):
+    """A fresh ``semantic_gate_sink`` over a frozen cluster model (one
+    label-seeded k-means step on the vectors with ``vec_id % 5 != 0``)
+    and ``n_epochs`` monotone-id slices of the sf embeddings."""
+    from z316_sales_data_pipeline_spark.operators import similarity as S
+    from z316_sales_data_pipeline_spark.sources.tables import load_table
+    from z316_sales_data_pipeline_spark.streaming import pipeline as P
+
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"), "label"
+    )
+    corpus_arm = emb.filter(F.col("vec_id") % 5 != 0)
+    assign = S.kmeans_assign(corpus_arm, "embedding", "vec_id", "label", n_iters=1)
+    cents = S.centroid_table(assign, corpus_arm, "embedding", "vec_id")
+    fold = P.semantic_gate_sink(
+        str(tmp_path / "st"), str(tmp_path / "acc"), str(tmp_path / "qua"),
+        "embedding", "vec_id", cents,
+    )
+    n = emb.agg(F.max("vec_id")).first()[0] + 1
+    step = -(-n // n_epochs)
+    return fold, [
+        emb.filter((F.col("vec_id") >= step * i) & (F.col("vec_id") < step * (i + 1)))
+        for i in range(n_epochs)
+    ]
+
+
+def test_semantic_gate_sink_releases_its_pins(spark, sf_dir, tmp_path):
+    """A ``semantic_gate_sink`` epoch releases every frame it pinned:
+    the batch's normed assignment rows (both prune arms and the
+    segment append read them) and the labeled split. Over four epochs
+    no persistent RDD created during an epoch survives it (one per
+    epoch did before)."""
+    fold, slices = _semantic_gate_stream(spark, sf_dir, tmp_path, 4)
+    jsc = spark.sparkContext._jsc
+    for epoch, sl in enumerate(slices):
+        before = set(jsc.getPersistentRDDs().keys())
+        fold(sl, epoch)
+        assert set(jsc.getPersistentRDDs().keys()) - before == set(), epoch
+
+
+def test_semantic_gate_epoch_job_budget(spark, sf_dir, tmp_path):
+    """A steady ``semantic_gate_sink`` epoch (prior assignment segments
+    at rest) runs at most 19 Spark jobs: the pair kernel
+    (``similarity._cos_pairs``) adds none."""
+    fold, (sl0, sl1) = _semantic_gate_stream(spark, sf_dir, tmp_path, 2)
+    fold(sl0, 0)
+    assert _jobs_run(spark, lambda: fold(sl1, 1)) <= 19
+
+
 def test_suffix_span_sink_releases_its_pins(spark, sf_dir, tmp_path):
     """A ``suffix_span_sink`` epoch releases every frame it pinned: the
     batch's localCheckpointed window rows and the kernel's candidate
@@ -1078,8 +1186,8 @@ def _state_sink_stream(spark, tmp_path, sink: str):
         ("scd2_history_sink", 8, 1),
         ("scd2_agg_mv_sink", 20, 1),
         ("growth_accounting_sink", 17, 1),
-        ("ab_readout_sink", 13, 7),
-        ("quantile_sketch_sink", 13, 8),
+        ("ab_readout_sink", 13, 1),
+        ("quantile_sketch_sink", 13, 1),
         ("token_budget_sink", 22, 1),
     ],
 )
@@ -1087,10 +1195,12 @@ def test_state_sink_epoch_job_budget(spark, tmp_path, sink, steady, replay):
     """Per-epoch job budget of each full-image state sink
     (``_state_fold``): a steady epoch (state at rest) and its replay
     run at most these many Spark jobs. A replay runs only the
-    empty-batch check, plus, for the two sinks whose MV is derived
-    from their state, the MV rewrite that heals a crash between the
-    two writes. ``scd2_agg_mv_sink`` no longer checks the batch for
-    emptiness a second time in its history fold (21 jobs before), and
+    empty-batch check: the two sinks whose MV is derived from their
+    state skip the MV rewrite when the MV's ``_STATE_VERSION`` meta
+    names the committed state version (7 and 8 jobs before, and a new
+    MV version with the same rows). ``scd2_agg_mv_sink`` no longer
+    checks the batch for emptiness a second time in its history fold
+    (21 jobs before), and
     a replayed ``growth_accounting_sink`` epoch no longer pins and
     collects its batch before it reads the marker (6 before). Budgets,
     not exact counts: the token-budget steady epoch has read both 21
@@ -1099,6 +1209,50 @@ def test_state_sink_epoch_job_budget(spark, tmp_path, sink, steady, replay):
     fold(b0, 0)
     got = (_jobs_run(spark, lambda: fold(b1, 1)), _jobs_run(spark, lambda: fold(b1, 1)))
     assert got[0] <= steady and got[1] <= replay, (got, (steady, replay))
+
+
+@pytest.mark.parametrize("sink", ["ab_readout_sink", "quantile_sketch_sink"])
+def test_state_sink_replay_heals_a_stale_mv(spark, tmp_path, monkeypatch, sink):
+    """A crash between the state commit and the MV write (the MV's
+    ``write_snapshot`` raises once) leaves the MV derived from the
+    previous state version. The epoch's replay merges nothing but
+    rewrites the MV from the committed state, recording that state
+    version as the MV's ``_STATE_VERSION`` meta; a second replay writes
+    nothing. The healed MV has the rows of a run that never crashed."""
+    from z316_sales_data_pipeline_spark import sinks
+
+    clean_dir = tmp_path / "clean"
+    clean_dir.mkdir()
+    clean, (c0, c1) = _state_sink_stream(spark, clean_dir, sink)
+    clean(c0, 0)
+    clean(c1, 1)
+    fold, (b0, b1) = _state_sink_stream(spark, tmp_path, sink)
+    st, mv = str(tmp_path / "state"), str(tmp_path / "mv")
+    fold(b0, 0)
+
+    write = sinks.write_snapshot
+
+    def crash_on_mv(df, table_dir, *args, **kwargs):
+        if table_dir == mv:
+            monkeypatch.setattr(sinks, "write_snapshot", write)
+            raise OSError("crash before the MV write")
+        return write(df, table_dir, *args, **kwargs)
+
+    monkeypatch.setattr(sinks, "write_snapshot", crash_on_mv)
+    with pytest.raises(OSError, match="crash before the MV write"):
+        fold(b1, 1)
+    v_state, v_mv = sinks._read_latest(st), sinks._read_latest(mv)
+    assert sinks.snapshot_meta(mv, "_STATE_VERSION") == str(v_state - 1)
+    fold(b1, 1)
+    assert (sinks._read_latest(st), sinks._read_latest(mv)) == (v_state, v_mv + 1)
+    assert sinks.snapshot_meta(mv, "_STATE_VERSION") == str(v_state)
+    fold(b1, 1)
+    assert sinks._read_latest(mv) == v_mv + 1
+
+    def rows(d):
+        return sorted(map(tuple, sinks.read_snapshot(spark, str(d)).collect()))
+
+    assert rows(mv) == rows(clean_dir / "mv")
 
 
 def _write_table(directory, name: str, columns: dict) -> None:

@@ -13,6 +13,20 @@ Four families, all shuffle-disciplined for the 100 TB target:
 - **n-gram Jaccard**: exact verified similarity on candidate pairs.
 - **embedding cosine**: near-dup by cosine ≥ τ on candidate pairs.
 
+Each batch operator and its incremental twin share one kernel: the
+MinHash-LSH signatures and band pairs (``_signatures``,
+``_band_pairs``, ``_intersections``) and the exact n-gram pairs
+(``_set_pairs``); the block-local rounded cosine
+(``similarity._cos_pairs``: ``embedding_near_dup_pairs``,
+``semantic_dedup``, ``semantic_dedup_incremental``, and the streaming
+``semantic_gate_sink``); min-label propagation with pointer jumping
+(``_min_labels``: ``connected_components``,
+``connected_components_incremental``); and the span-window rollup
+(``_span_report`` over ``span_hash_table``: ``span_dedup``,
+``span_dedup_incremental``). An incremental twin differs from its
+batch form only in what it seeds the kernel with: at-rest labels,
+representatives or window hashes.
+
 Everything below is column algebra (higher-order array functions +
 xxhash64) — no Python UDFs, so the hot path stays in codegen.
 """
@@ -23,7 +37,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint64, shingles
+from ..functions.vector import norm
 from ..persistence import persist_fact, pin_fact, release
+from .similarity import _cos_pairs
 
 
 # ---------------------------------------------------------------------------
@@ -576,28 +592,15 @@ def embedding_near_dup_pairs(
     missed — the standard LSH recall trade, which the banded-MinHash
     family quantifies via ``minhash_scurve``).
     """
-    from ..functions.vector import dot, norm
-
     block_cols = (
         [block_col] if isinstance(block_col, str) else list(block_col) if block_col else []
     )
-    cols = [F.col(id_col), F.col(vec_col)] + [F.col(c) for c in block_cols]
-    # Precompute each row's L2 norm ONCE (n rows) instead of inside the
-    # pair expression (n² evals): higher-order aggregate() runs
-    # interpreted, so the per-pair work must be a single dot product.
     # (For large blocks, prefer embedding_near_dup_blocked — one numpy
     # matmul per block instead of n² interpreted dot products.)
-    base = df.select(*cols).withColumn("__nrm", norm(vec_col))
-    on = block_cols
-    blk = [F.col(c) for c in block_cols]
-    a = base.select(*blk, F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), F.col("__nrm").alias("na"))
-    b = base.select(*blk, F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), F.col("__nrm").alias("nb"))
-    joined = a.join(b, on) if on else a.crossJoin(b)
-    return (
-        joined.filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", F.round(dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6))
-        .filter(F.col("cos") >= threshold)
-        .select(*(on), "id_a", "id_b", "cos")
+    base = df.select(F.col(id_col), F.col(vec_col), *block_cols).withColumn("__nrm", norm(vec_col))
+    # the kernel keeps id_b < id_a; these pairs are ordered id_a < id_b
+    return _cos_pairs(base, base, vec_col, id_col, block_cols, "<", threshold).select(
+        *block_cols, F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"), "cos"
     )
 
 
@@ -682,6 +685,20 @@ def connected_components(
     ``pairs`` needs columns id_a/id_b; ``nodes`` one id column (also
     covers isolated docs, which become singleton clusters).
     """
+    labels = nodes.select(F.col(id_col).alias("nid"), F.col(id_col).alias("label"))
+    return _min_labels(labels, pairs, id_col, max_iters, "connected_components")
+
+
+def _min_labels(
+    labels: DataFrame, pairs: DataFrame, id_col: str, max_iters: int, op: str
+) -> DataFrame:
+    """The min-label propagation loop of both connected-components
+    forms: from the seed ``labels`` (nid, label), iterate over the
+    undirected ``pairs`` (id_a, id_b) until no label moves, each round
+    taking the min of a node's label, its neighbours' labels and its
+    label's label (pointer jumping). Returns (``id_col``, cluster_id);
+    raises ``RuntimeError`` naming ``op`` after ``max_iters`` rounds
+    with labels still moving."""
     # No distinct: duplicate edges cannot change a MIN aggregate, so
     # deduplicating here would spend a full shuffle of the edge list to
     # buy nothing (pair inputs are typically unique already).
@@ -689,7 +706,6 @@ def connected_components(
         pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
     )
     edges.persist()
-    labels = nodes.select(F.col(id_col).alias("nid"), F.col(id_col).alias("label"))
     converged = False
     for _ in range(max_iters):
         neighbor_min = (
@@ -724,7 +740,7 @@ def connected_components(
     edges.unpersist()
     if not converged:
         raise RuntimeError(
-            f"connected_components did not converge within max_iters={max_iters}; "
+            f"{op} did not converge within max_iters={max_iters}; "
             "labels were still changing — raise max_iters (rounds needed is "
             "~log2 of the largest component's diameter)"
         )
@@ -768,34 +784,14 @@ def semantic_dedup(
     scale this is the clustered-assignment relation you'd persist at
     rest anyway.
     """
-    from ..functions.vector import dot, norm
-
     base = (
         emb.select(F.col(id_col), F.col(cluster_col), F.col(vec_col))
         .withColumn("__nrm", norm(vec_col))
     )
     base = pin_fact(base)  # corpus-grain: keep lineage
-    a = base.select(
-        F.col(cluster_col),
-        F.col(id_col).alias("__ida"),
-        F.col(vec_col).alias("__va"),
-        F.col("__nrm").alias("__na"),
-    )
-    b = base.select(
-        F.col(cluster_col),
-        F.col(id_col).alias("__idb"),
-        F.col(vec_col).alias("__vb"),
-        F.col("__nrm").alias("__nb"),
-    )
     dropped = (
-        a.join(b, cluster_col)
-        .filter(F.col("__idb") < F.col("__ida"))
-        .withColumn(
-            "__cos",
-            F.round(dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")), 6),
-        )
-        .filter(F.col("__cos") >= threshold)
-        .select(F.col("__ida").alias(id_col))
+        _cos_pairs(base, base, vec_col, id_col, [cluster_col], "<", threshold)
+        .select(F.col("id_a").alias(id_col))
         .distinct()
     )
     return base.join(
@@ -894,44 +890,20 @@ def semantic_dedup_incremental(
     and the final keep-flag join — same re-scan trap as
     ``semantic_dedup``).
     """
-    from ..functions.vector import dot, norm
-
     nb = (
         new_assigned.select(F.col(id_col), F.col(cluster_col), F.col(vec_col))
         .withColumn("__nrm", norm(vec_col))
     )
     nb = pin_fact(nb)  # batch-doc grain (history-sized on backfill): keep lineage
-    a = nb.select(
-        F.col(cluster_col),
-        F.col(id_col).alias("__ida"),
-        F.col(vec_col).alias("__va"),
-        F.col("__nrm").alias("__na"),
-    )
-    reps = corpus_kept.select(F.col(cluster_col), F.col(vec_col).alias("__vr")).withColumn(
-        "__nr", norm("__vr")
-    )
-    drop_rep = (
-        a.join(reps, cluster_col)
-        .withColumn("__cos", F.round(dot("__va", "__vr") / (F.col("__na") * F.col("__nr")), 6))
-        .filter(F.col("__cos") >= threshold)
-        .select(F.col("__ida").alias(id_col))
+    reps = corpus_kept.select(F.col(cluster_col), F.col(vec_col)).withColumn("__nrm", norm(vec_col))
+    drop_rep = _cos_pairs(nb, reps, vec_col, id_col, [cluster_col], threshold=threshold)
+    drop_new = _cos_pairs(nb, nb, vec_col, id_col, [cluster_col], "<", threshold)
+    dropped = (
+        drop_rep.select(F.col("id_a").alias(id_col))
+        .distinct()
+        .unionByName(drop_new.select(F.col("id_a").alias(id_col)).distinct())
         .distinct()
     )
-    b = nb.select(
-        F.col(cluster_col),
-        F.col(id_col).alias("__idb"),
-        F.col(vec_col).alias("__vb"),
-        F.col("__nrm").alias("__nb"),
-    )
-    drop_new = (
-        a.join(b, cluster_col)
-        .filter(F.col("__idb") < F.col("__ida"))
-        .withColumn("__cos", F.round(dot("__va", "__vb") / (F.col("__na") * F.col("__nb")), 6))
-        .filter(F.col("__cos") >= threshold)
-        .select(F.col("__ida").alias(id_col))
-        .distinct()
-    )
-    dropped = drop_rep.unionByName(drop_new).distinct()
     return nb.join(dropped.withColumn("__drop", F.lit(True)), id_col, "left").select(
         id_col, cluster_col, F.col("__drop").isNull().alias("keep")
     )
@@ -957,20 +929,23 @@ def span_dedup(df: DataFrame, text_col: str, id_col: str, k: int = 8) -> DataFra
     Output per doc (docs with ≥ k tokens): (id, n_windows,
     n_dup_windows, dup_span_frac).
     """
-    rel = (
-        df.select(F.col(id_col), F.explode(shingles(text_col, k)).alias("__w"))
-        .select(F.col(id_col), _rolling_hash(F.col("__w")).alias("__h"))
-    )
-    rel = persist_fact(rel)  # window-grain, 2 independent consumers: eager pin, keep lineage
+    # window-grain, 2 independent consumers: eager pin, keep lineage
+    rel = persist_fact(span_hash_table(df, text_col, id_col, k))
     flagged = (
         rel.groupBy("__h")
         .agg(F.count_distinct(id_col).alias("__nd"))
         .filter(F.col("__nd") >= 2)
         .select("__h")
-        .withColumn("__dup", F.lit(1))
     )
+    return _span_report(rel, flagged, id_col)
+
+
+def _span_report(rel: DataFrame, dup_h: DataFrame, id_col: str) -> DataFrame:
+    """Per-doc rollup of the (id, __h) window relation ``rel`` against
+    ``dup_h``, the duplicated window hashes (one ``__h`` column, no
+    repeats): (id, n_windows, n_dup_windows, dup_span_frac)."""
     return (
-        rel.join(flagged, "__h", "left")
+        rel.join(dup_h.withColumn("__dup", F.lit(1)), "__h", "left")
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_windows"),
@@ -1532,43 +1507,7 @@ def connected_components_incremental(
         F.col(id_col).alias("id_a"), F.col("cluster_id").alias("id_b")
     )
     all_pairs = new_edges.select("id_a", "id_b").unionByName(star)
-    edges = all_pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).unionByName(
-        all_pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-    )
-    edges.persist()
-    converged = False
-    for _ in range(max_iters):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.nid)
-            .groupBy("src")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        jump = labels.select(F.col("nid").alias("jnid"), F.col("label").alias("jlabel"))
-        stepped = (
-            labels.join(neighbor_min, labels.nid == neighbor_min.src, "left")
-            .join(jump, labels.label == jump.jnid, "left")
-            .select(
-                "nid",
-                F.col("label").alias("__prev"),
-                F.least(
-                    F.col("label"),
-                    F.coalesce("nlabel", "label"),
-                    F.coalesce("jlabel", "label"),
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = stepped.filter(F.col("label") != F.col("__prev")).count()
-        labels = stepped.select("nid", "label")
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_incremental did not converge within max_iters={max_iters}"
-        )
-    return labels.select(F.col("nid").alias(id_col), F.col("label").alias("cluster_id"))
+    return _min_labels(labels, all_pairs, id_col, max_iters, "connected_components_incremental")
 
 
 def simhash_near_dup_incremental(
@@ -1694,18 +1633,7 @@ def span_dedup_incremental(
     so downstream curation thresholds apply unchanged.
     """
     new_rel = pin_fact(span_hash_table(new_df, text_col, id_col, k))  # batch-doc grain
-    corpus_h = corpus_spans.select("__h").distinct().withColumn("__dup", F.lit(1))
-    return (
-        new_rel.join(corpus_h, "__h", "left")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_windows"),
-            F.sum(F.coalesce("__dup", F.lit(0))).alias("n_dup_windows"),
-            F.round(
-                F.sum(F.coalesce("__dup", F.lit(0))) / F.count(F.lit(1)).cast("double"), 6
-            ).alias("dup_span_frac"),
-        )
-    )
+    return _span_report(new_rel, corpus_spans.select("__h").distinct(), id_col)
 
 
 def span_scrub(df: DataFrame, text_col: str, id_col: str, k: int = 8) -> DataFrame:

@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 
 from ..persistence import persist_fact, pin_fact
 
-from ..functions.vector import cosine, dot, literal_vector
+from ..functions.vector import cosine, dot, literal_vector, norm
 
 
 def brute_force_top_k(
@@ -256,6 +256,52 @@ def kmeans_assign(
 
 
 # ---------------------------------------------------------------------------
+# Rounded-cosine pair kernel (kNN graph, embedding near-dup, SemDeDup)
+# ---------------------------------------------------------------------------
+def _cos_pairs(
+    left: DataFrame,
+    right: DataFrame,
+    vec_col: str,
+    id_col: str,
+    on: list[str],
+    pair: str | None = None,
+    threshold: float | None = None,
+) -> DataFrame:
+    """Every ``left`` x ``right`` row pair sharing the ``on`` key(s) (a
+    cross join when ``on`` is empty) with ``cos``, their cosine rounded
+    to 6 decimals so every verdict on it is engine-portable. Each side
+    carries ``on``, ``vec_col`` and its precomputed L2 norm ``__nrm``
+    (n norm evaluations, not n²: higher-order functions run
+    interpreted, so the per-pair work must be a single dot product).
+    ``left`` also carries ``id_col``, out as ``id_a``; with ``pair`` so
+    does ``right``, out as ``id_b``, and the pairs are cut before any
+    cosine is computed: ``"<"`` keeps ``id_b < id_a``, ``"!="`` drops
+    self pairs. With ``threshold`` only pairs at ``cos >= threshold``
+    remain. Output: ``on``, ``id_a``, [``id_b``,] ``cos``. The kernel
+    pins nothing; callers pin their sides at their own grain."""
+    a = left.select(
+        *on, F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"), F.col("__nrm").alias("__na")
+    )
+    b = right.select(
+        *on,
+        *([F.col(id_col).alias("id_b")] if pair else []),
+        F.col(vec_col).alias("__vb"),
+        F.col("__nrm").alias("__nb"),
+    )
+    joined = a.join(b, on) if on else a.crossJoin(b)
+    if pair == "<":
+        joined = joined.filter(F.col("id_b") < F.col("id_a"))
+    elif pair == "!=":
+        joined = joined.filter(F.col("id_a") != F.col("id_b"))
+    out = joined.withColumn(
+        "cos", F.round(dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")), 6)
+    )
+    if threshold is not None:
+        out = out.filter(F.col("cos") >= threshold)
+    return out.drop("__va", "__na", "__vb", "__nb")
+
+
+# ---------------------------------------------------------------------------
 # kNN graph — top-k neighbors for EVERY vector
 # ---------------------------------------------------------------------------
 def knn_graph(
@@ -271,31 +317,19 @@ def knn_graph(
     With ``block_col`` the candidate set is the vector's block (label,
     LSH bucket, IVF cell) and the self-join shuffles on the block key —
     the 100 TB path, cost Σ|block|² instead of n². Without it, the
-    exact O(n²) baseline. Norms are precomputed per row (n, not n²,
-    interpreted-HOF evaluations); ranking is one window per query
-    vector with cosine rounded to 6 before comparison so the result is
-    engine-portable (ties break toward the lower neighbor id).
+    exact O(n²) baseline. Pairs come from :func:`_cos_pairs`; ranking
+    is one window per query vector over the rounded cosine, so the
+    result is engine-portable (ties break toward the lower neighbor
+    id).
     """
-    from ..functions.vector import norm
-
-    cols = [F.col(id_col), F.col(vec_col)] + ([F.col(block_col)] if block_col else [])
-    base = df.select(*cols).withColumn("__nrm", norm(vec_col))
     on = [block_col] if block_col else []
-    blk = [F.col(block_col)] if block_col else []
-    a = base.select(
-        *blk, F.col(id_col).alias("vec_id_q"), F.col(vec_col).alias("va"), F.col("__nrm").alias("na")
-    )
-    b = base.select(
-        *blk, F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("vb"), F.col("__nrm").alias("nb")
-    )
-    joined = a.join(b, on) if on else a.crossJoin(b)
-    w = Window.partitionBy("vec_id_q").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
+    base = df.select(F.col(id_col), F.col(vec_col), *on).withColumn("__nrm", norm(vec_col))
+    w = Window.partitionBy("id_a").orderBy(F.col("cos").desc(), F.col("id_b").asc())
     return (
-        joined.filter(F.col("vec_id_q") != F.col("neighbor_id"))
-        .withColumn("cos", F.round(dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6))
+        _cos_pairs(base, base, vec_col, id_col, on, "!=")
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
-        .select(F.col("vec_id_q").alias("vec_id"), "neighbor_id", "cos", "rnk")
+        .select(F.col("id_a").alias("vec_id"), F.col("id_b").alias("neighbor_id"), "cos", "rnk")
     )
 
 
@@ -355,21 +389,29 @@ def knn_graph_blocked(
     )
 
 
+def _cluster_means(clustered: DataFrame, vec_col: str) -> DataFrame:
+    """(cluster, __pos, __c): the round-6 per-cluster mean of
+    ``vec_col`` over a (cluster, vec) relation, one row per cluster and
+    vector position. Round-6 matches ``kmeans_assign``'s internal
+    centroids, so an assignment against these means is bit-portable to
+    the SQL oracle."""
+    return (
+        clustered.select(
+            "cluster", F.posexplode(F.col(vec_col).cast("array<double>")).alias("__pos", "__x")
+        )
+        .groupBy("cluster", "__pos")
+        .agg(F.round(F.avg("__x"), 6).alias("__c"))
+    )
+
+
 def centroid_table(assign: DataFrame, df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
     """(cluster, __pos, __c) centroid relation from an assignment — the
     model-parameter half of a Lloyd step, materialized as a tiny k·dim
     relation you persist at rest and broadcast to probes (the cluster
-    model new batches are assigned against). Round-6 matches
-    ``kmeans_assign``'s internal centroids, so an assignment built here
-    is bit-portable to the SQL oracle."""
-    ex = df.select(
-        F.col(id_col).alias("__vid"),
-        F.posexplode(F.col(vec_col).cast("array<double>")).alias("__pos", "__x"),
-    )
-    a = assign.select(F.col(id_col).alias("__vid"), "cluster")
-    return a.join(ex, "__vid").groupBy("cluster", "__pos").agg(
-        F.round(F.avg("__x"), 6).alias("__c")
-    )
+    model new batches are assigned against): :func:`_cluster_means` of
+    ``df`` joined to ``assign``."""
+    clustered = assign.select(id_col, "cluster").join(df.select(id_col, vec_col), id_col)
+    return _cluster_means(clustered, vec_col)
 
 
 def nearest_centroid_assign(df: DataFrame, vec_col: str, id_col: str, centroids: DataFrame) -> DataFrame:

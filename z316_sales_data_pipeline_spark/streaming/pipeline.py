@@ -52,9 +52,11 @@ no-op with one of three mechanisms:
    ``write_snapshot`` lands the marker as a ``meta`` file inside the
    new version dir before the pointer flip, so the marker and the data
    cannot disagree. The MV of ``ab_readout_sink`` and
-   ``quantile_sketch_sink`` is a pure function of the state and is
-   rewritten from the committed state every epoch, replays included,
-   which heals a crash between the two writes.
+   ``quantile_sketch_sink`` is a pure function of the state: each MV
+   version dir carries ``_STATE_VERSION``, the state version it was
+   derived from, and the MV is rewritten whenever that meta does not
+   name the committed state version. A replay thus writes nothing,
+   and a replay after a crash between the two writes heals the MV.
 3. ``sinks.append_snapshot(txn_key=...)`` — pure appends: a replayed
    key finds its committed segment and no-ops (``ivm_join_mv_sink``,
    ``ivf_append_sink``, ``contamination_gate_sink``, the
@@ -152,6 +154,10 @@ def _monotone_gate(
     return fold
 
 
+# MV meta: the version of the state snapshot an MV version was derived from
+_MV_STATE_VERSION = "_STATE_VERSION"
+
+
 def _state_fold(
     spark: SparkSession,
     state_dir: str,
@@ -169,9 +175,12 @@ def _state_fold(
     absent), and returns the new state, already pinned, with any extra
     meta, or None to write nothing; the state and its marker commit in
     one ``write_snapshot``. With ``mv=(mv_dir, derive)`` the MV is then
-    rewritten as ``derive`` of the committed state, on a replay too:
-    it is a pure function of the state, so the rewrite is what heals a
-    crash between the state write and the MV write."""
+    rewritten as ``derive`` of the committed state, its version dir
+    carrying the ``_MV_STATE_VERSION`` meta, the state version it was
+    derived from. The rewrite is skipped only when that meta names the
+    committed state version, so a replay writes nothing, while a
+    missing or stale MV (a crash between the state write and the MV
+    write) is healed by the replay."""
     last = sinks.snapshot_meta(state_dir, meta_key)
     replay = last is not None and int(epoch_id) <= int(last)
     if not replay:
@@ -185,7 +194,13 @@ def _state_fold(
             sinks.write_snapshot(state, state_dir, meta={meta_key: str(int(epoch_id)), **extra})
     if mv is not None:
         mv_dir, derive = mv
-        sinks.write_snapshot(derive(sinks.read_snapshot(spark, state_dir)), mv_dir)
+        version = str(sinks._committed_version(state_dir))
+        if sinks.snapshot_meta(mv_dir, _MV_STATE_VERSION) != version:
+            sinks.write_snapshot(
+                derive(sinks.read_snapshot(spark, state_dir, int(version))),
+                mv_dir,
+                meta={_MV_STATE_VERSION: version},
+            )
 
 
 def _prior_segments(
@@ -1727,7 +1742,7 @@ def semantic_gate_sink(
     (cluster-key join, partition-prunable when the segments are laid
     out by cluster).
     """
-    from ..functions.vector import dot, norm
+    from ..functions.vector import norm
     from ..operators import similarity as sim_ops
 
     asg_dir = f"{state_dir}/asg"
@@ -1741,48 +1756,24 @@ def semantic_gate_sink(
             .withColumn("__nrm", norm(vec_col))
             .localCheckpoint(eager=True)  # batch grain: both prune arms + append
         )
-        prior = _prior_segments(spark, asg_dir, id_col, lo)
-        a = base.select(
-            F.col("cluster"),
-            F.col(id_col).alias("__ida"),
-            F.col(vec_col).alias("__va"),
-            F.col("__nrm").alias("__na"),
-        )
-        b = base.select(
-            F.col("cluster"),
-            F.col(id_col).alias("__idb"),
-            F.col(vec_col).alias("__vb"),
-            F.col("__nrm").alias("__nb"),
-        )
-        drop_new = (
-            a.join(b, "cluster")
-            .filter(F.col("__idb") < F.col("__ida"))
-            .withColumn(
-                "__cos",
-                F.round(dot("__va", "__vb") / (F.col("__na") * F.col("__nb")), 6),
-            )
-            .filter(F.col("__cos") >= threshold)
-            .select(F.col("__ida").alias(id_col))
-        )
-        dropped = drop_new
-        if prior is not None:
-            p = prior.select(
-                F.col("cluster"),
-                F.col(vec_col).alias("__vb"),
-                F.col("__nrm").alias("__nb"),
-            )
-            drop_prior = (
-                a.join(p, "cluster")
-                .withColumn(
-                    "__cos",
-                    F.round(dot("__va", "__vb") / (F.col("__na") * F.col("__nb")), 6),
+        try:
+            prior = _prior_segments(spark, asg_dir, id_col, lo)
+            dropped = sim_ops._cos_pairs(
+                base, base, vec_col, id_col, ["cluster"], "<", threshold
+            ).select("id_a")
+            if prior is not None:
+                dropped = dropped.unionByName(
+                    sim_ops._cos_pairs(
+                        base, prior, vec_col, id_col, ["cluster"], threshold=threshold
+                    ).select("id_a")
                 )
-                .filter(F.col("__cos") >= threshold)
-                .select(F.col("__ida").alias(id_col))
+            sinks.append_snapshot(base, asg_dir, txn_key=txn)
+            _split_by_drop(
+                batch, dropped.withColumnRenamed("id_a", id_col), id_col,
+                accepted_dir, quarantined_dir, txn,
             )
-            dropped = dropped.unionByName(drop_prior)
-        sinks.append_snapshot(base, asg_dir, txn_key=txn)
-        _split_by_drop(batch, dropped, id_col, accepted_dir, quarantined_dir, txn)
+        finally:
+            release(base)
 
     return _monotone_gate(
         "semantic_gate_sink", state_dir, "_SMG_COMMIT", id_col, step,
